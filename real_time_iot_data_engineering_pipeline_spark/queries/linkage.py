@@ -700,6 +700,12 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 LP_MAX_ROUNDS = 6  # synchronous-update cap; fixpoint exits earlier
+# Edge count at or below which the converged LPA runs in one task.  Its
+# own knob, not the CC fast path's: the task holds every edge twice (both
+# adjacency directions) plus a label per node, about twice the CC
+# union-find's memory per edge, so the default is half of
+# functions/components.py's 2^20.
+LPA_LOCAL_MAX_EDGES = 1 << 19
 
 
 def _lpa_converged_oracle() -> str:
@@ -795,9 +801,7 @@ def q_label_propagation_converged(spark: SparkSession, sf_dir: str) -> DataFrame
     # per-(label, source) report aggregation stays distributed.  The
     # gating count is charged against the persisted edge frame the round
     # loop would have materialized anyway.
-    from ..functions.components import _CC_LOCAL_MAX_EDGES
-
-    if edges.count() <= _CC_LOCAL_MAX_EDGES:
+    if edges.count() <= LPA_LOCAL_MAX_EDGES:
 
         def local_lpa(batches):
             import pandas as pd

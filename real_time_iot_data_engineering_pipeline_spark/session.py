@@ -7,9 +7,17 @@ timestamp semantics, and disable ANSI mode so string->number coercion is
 tolerant (null-on-failure), matching the reference validator's semantics
 (data_quality/validation_consumer.py:182-191).
 
-Scale posture: shuffle partitions default to 2-3x local cores for local runs;
-on a real cluster this is overridden (AQE coalescing makes over-partitioning
-cheap, under-partitioning is what hurts at 100 TB).
+Scale posture: shuffle partitions default to one per local core.  Stateful
+streaming operators get no AQE coalescing and fix their partition count
+(one state store each) when a checkpoint is created, so more partitions
+than cores would run every stateful stage in several waves of state
+stores; batch shuffles are coalesced by AQE either way.  On a real cluster
+this is overridden (under-partitioning is what hurts at 100 TB).
+
+RocksDB state stores write changelog checkpoints: each micro-batch uploads
+only the rows it changed, and a full snapshot is taken in the background
+maintenance task.  A checkpoint written with snapshot-only checkpointing
+resumes under this setting unchanged.
 """
 
 from __future__ import annotations
@@ -27,7 +35,7 @@ def build_session(
 ) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or max(cpus, 8)
+    shuffle_partitions = shuffle_partitions or cpus
 
     # In local mode executors share the driver JVM, whose default 1 GiB heap
     # is 32-way-divided across task slots — measured to OOM at the 10x-of-
@@ -58,6 +66,10 @@ def build_session(
         .config(
             "spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        )
+        .config(
+            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+            "true",
         )
         .config("spark.sql.streaming.minBatchesToRetain", "100")
         .config("spark.sql.streaming.stopGracefullyOnShutdown", "true")

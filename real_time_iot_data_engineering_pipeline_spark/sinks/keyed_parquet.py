@@ -26,6 +26,13 @@ The merge itself is one hash shuffle on the key columns; the only
 driver-side data is the batch's distinct partition-value list (bounded by
 #touched partitions — the same class of scalar as the incremental-refresh
 watermark).
+
+Per micro-batch cost: the foreach_batch adapter runs the epoch's plan once
+(sinks/micro_batch.py) and its empty-batch fast path skips an empty epoch
+on the materialized frame, so the merge never re-executes the stream's
+stateful operators.  Every version, partitioned or not, ships its
+write-time schema in _sinkschema.json, so reading the live table back for
+the next merge (or for read()) launches no schema-inference job.
 """
 
 from __future__ import annotations
@@ -38,6 +45,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .micro_batch import micro_batch
 
 _EPOCH_COL = "_epoch"
 _SCHEMA_FILE = "_sinkschema.json"
@@ -107,17 +116,25 @@ class KeyedParquetSink:
         return self._current() is not None
 
     def _read_version(self, path: str) -> DataFrame:
-        """Read one version dir.  Partitioned versions ship their exact
-        write-time schema (_sinkschema.json): without it, partition-value
-        type inference would silently retype the partition column on
-        read-back (e.g. a string '2024-01-01' comes back as DATE), breaking
-        both the read() contract and the merge union."""
+        """Read one version dir with the exact write-time schema every
+        version ships (_sinkschema.json).  The file spares each read a
+        schema-inference job over the parquet footers and, for partitioned
+        versions, stops partition-value type inference from retyping the
+        partition column (a string '2024-01-01' would come back as DATE,
+        breaking both the read() contract and the merge union).  Only a
+        table last written before unpartitioned versions carried the file
+        still infers."""
         schema_file = os.path.join(path, _SCHEMA_FILE)
         if os.path.exists(schema_file):
             with open(schema_file) as f:
                 schema = T.StructType.fromJson(json.load(f))
             return self.spark.read.schema(schema).parquet(path)
         return self.spark.read.parquet(path)
+
+    @staticmethod
+    def _write_schema(out: str, schema: T.StructType) -> None:
+        with open(os.path.join(out, _SCHEMA_FILE), "w") as f:
+            json.dump(schema.jsonValue(), f)
 
     def read(self) -> DataFrame:
         """The live table (without the internal epoch column)."""
@@ -127,18 +144,17 @@ class KeyedParquetSink:
         return self._read_version(current).drop(_EPOCH_COL)
 
     def upsert(self, batch_df: DataFrame, epoch_id: int) -> None:
-        """foreachBatch body: merge `batch_df` into the table, keyed
-        last-write-wins (higher epoch wins; replay of the same epoch is a
-        no-op by value).  Mirrors streaming_job.py:586-603 including the
-        empty-batch fast path (modern df.isEmpty() instead of the
-        reference's df.rdd.isEmpty()).
+        """Merge `batch_df` into the table, keyed last-write-wins (higher
+        epoch wins; replay of the same epoch is a no-op by value).  Mirrors
+        streaming_job.py:586-603; its empty-batch fast path lives in the
+        foreach_batch adapter, which skips an empty epoch without running
+        its plan twice (sinks/micro_batch.py).  Called directly, upsert
+        merges whatever it is given, an empty frame included.
 
         Commit protocol: write the merged table to a fresh version dir,
         fsync a temp pointer, os.replace it over CURRENT (atomic on POSIX),
         then garbage-collect older versions.  Readers and crashed writers
         can never observe a partial table."""
-        if batch_df.isEmpty():
-            return
         incoming = batch_df.withColumn(_EPOCH_COL, F.lit(int(epoch_id)))
         current = self._current()
         prev_version = os.path.basename(current) if current is not None else None
@@ -171,10 +187,9 @@ class KeyedParquetSink:
             deduped.write.mode("overwrite").partitionBy(pcol).parquet(out)
             if current is not None:
                 self._carry_untouched_partitions(current, out)
-            with open(os.path.join(out, _SCHEMA_FILE), "w") as f:
-                json.dump(deduped.schema.jsonValue(), f)
         else:
             deduped.write.mode("overwrite").parquet(out)
+        self._write_schema(out, deduped.schema)
         self._commit(version, prev_version)
 
     def _commit(self, version: str, prev_version: str | None) -> None:
@@ -256,6 +271,7 @@ class KeyedParquetSink:
                 return {"compacted": 0, "skipped": 1}
             df = self._read_version(current)
             df.coalesce(max_files_per_partition).write.mode("overwrite").parquet(out)
+            self._write_schema(out, df.schema)
             self._commit(version, prev_version)
             return {"compacted": 1, "skipped": 0}
 
@@ -305,6 +321,7 @@ class KeyedParquetSink:
         the batch replays, and compact() is a no-op when already tight."""
         from .retry import with_retry
 
+        @micro_batch
         def _fn(batch_df: DataFrame, epoch_id: int) -> None:
             if retry_attempts <= 1:
                 self.upsert(batch_df, epoch_id)

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.tokenize import WS as _WS
+from ..sinks import micro_batch
 from pyspark.sql import types as T
 
 DOC_WIRE_SCHEMA = T.StructType(
@@ -343,9 +344,8 @@ class DocIngestSink:
         self.spark = spark
         self.root = root
 
+    @micro_batch
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         epoch = int(epoch_id)
         accepted = batch_df.filter("accepted").drop("accepted")
         rejected = batch_df.filter(~F.col("accepted")).drop("accepted")

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import fround
 from ..queries.validation import alert_flags
+from ..sinks import micro_batch
 
 
 class QualityMonitorSink:
@@ -41,9 +42,8 @@ class QualityMonitorSink:
         self.out_dir = out_dir
         self.now = now
 
+    @micro_batch
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         now = self.now if self.now is not None else dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
         now_str = now.strftime("%Y-%m-%d %H:%M:%S")
         agg = batch_df.agg(
@@ -120,11 +120,10 @@ class DriftMonitorSink:
             ).alias("bin")
         )
 
+    @micro_batch
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
         import math
 
-        if batch_df.isEmpty():
-            return
         counts = dict.fromkeys(range(self.N_BINS), 0)
         for r in self._binned(batch_df).groupBy("bin").count().collect():
             counts[r["bin"]] = r["count"]

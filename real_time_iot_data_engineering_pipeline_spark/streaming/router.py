@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..functions.validation import failure_reasons
 from ..queries.validation import _rules
+from ..sinks import micro_batch
 
 
 def validated_stream(events: DataFrame) -> DataFrame:
@@ -47,11 +48,10 @@ class RouterSink:
         self.valid_dir = os.path.join(root, "valid")
         self.dlq_dir = os.path.join(root, "dlq")
 
+    @micro_batch
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
         from .pipeline import CORRUPT_COL
 
-        if batch_df.isEmpty():
-            return
         has_corrupt = CORRUPT_COL in batch_df.columns
         validated = validated_stream(batch_df)
         valid = validated.filter("is_valid").withColumn(

@@ -23,6 +23,12 @@ Optional branches fan out from the same validated stream: a per-batch
 quality monitor (with_monitor) and the stream-stream attribution join
 (with_attribution — views joined to clicks within the window,
 streaming/stream_join.py), each with its own checkpoint.
+
+Every branch's foreachBatch body is wrapped by sinks.micro_batch: the
+epoch's plan runs once, into a local checkpoint whose job also counts the
+rows, and an empty epoch is skipped.  So the main path's emptiness check
+and its merge write share one run of the dedup and window aggregation,
+whose state stores commit once per epoch.
 """
 
 from __future__ import annotations
@@ -32,7 +38,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sinks import KeyedParquetSink
+from ..sinks import KeyedParquetSink, micro_batch
 from .monitor import DriftMonitorSink, QualityMonitorSink
 from .pipeline import (
     AGG_KEY_COLS,
@@ -150,11 +156,11 @@ def run_topology(
         own epoch directory (idempotent on replay) — shared by every
         file-append branch of the topology."""
 
+        @micro_batch
         def _write(batch_df: DataFrame, epoch_id: int) -> None:
-            if not batch_df.isEmpty():
-                batch_df.write.mode("overwrite").parquet(
-                    os.path.join(target_dir, f"epoch={int(epoch_id)}")
-                )
+            batch_df.write.mode("overwrite").parquet(
+                os.path.join(target_dir, f"epoch={int(epoch_id)}")
+            )
 
         return _write
 

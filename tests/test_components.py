@@ -72,11 +72,13 @@ CASES = {
 }
 
 
-# Every equality test runs BOTH execution paths (r13): local_max_edges=0
+# Every equality test runs every execution path (r13): local_max_edges=0
 # forces the distributed star rounds (the 100 TB path), the default takes
-# the single-task union-find fast path every fixture-scale graph now takes
-# — each pinned against the pure-Python union-find independently.
-BOTH_PATHS = {"local": None, "distributed": 0}
+# the single-task union-find fast path every fixture-scale graph now takes,
+# and 5 runs distributed rounds until contraction leaves at most 5 edges,
+# then the local finish — each pinned against the pure-Python union-find
+# independently.
+BOTH_PATHS = {"local": None, "distributed": 0, "hybrid": 5}
 
 
 @pytest.mark.parametrize("path", sorted(BOTH_PATHS))
@@ -98,6 +100,32 @@ def test_matches_union_find_on_random_graphs(spark, seed, path):
     ]
     got = run_cc(spark, nodes, edges, local_max_edges=BOTH_PATHS[path])
     assert got == union_find(nodes, edges)
+
+
+def test_hybrid_hands_off_mid_iteration(spark, monkeypatch):
+    """K6 has 15 canonical edges and contracts to its 5-edge star in one
+    round, so threshold 5 runs exactly one distributed round and then the
+    local finish, on the round's checkpointed output — the size switch
+    mid-iteration, not at entry."""
+    from real_time_iot_data_engineering_pipeline_spark.functions import components
+
+    calls = []
+
+    def spy(name):
+        original = getattr(components, name)
+
+        def wrapped(df):
+            calls.append((name, df.count()))
+            return original(df)
+
+        monkeypatch.setattr(components, name, wrapped)
+
+    spy("_large_star")
+    spy("_local_star_finish")
+    nodes, edges = CASES["complete_k6"]
+    got = run_cc(spark, nodes, edges, local_max_edges=5)
+    assert got == union_find(nodes, edges)
+    assert calls == [("_large_star", 15), ("_local_star_finish", 5)]
 
 
 @pytest.mark.parametrize("case", sorted(CASES))

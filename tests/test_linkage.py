@@ -300,16 +300,14 @@ class TestLabelPropagationFastPath:
         to 0 re-runs the query through the round loop, pinning the two
         implementations (same vote rule, tie-break, seed clamping, round
         cap) against each other on the real fixture graph."""
-        from real_time_iot_data_engineering_pipeline_spark.functions import (
-            components,
-        )
+        from real_time_iot_data_engineering_pipeline_spark.queries import linkage
 
         q = registry.QUERIES["q_label_propagation_converged"]
         local = [tuple(r) for r in q(spark, sf_dir).collect()]
-        saved = components._CC_LOCAL_MAX_EDGES
-        components._CC_LOCAL_MAX_EDGES = 0
+        saved = linkage.LPA_LOCAL_MAX_EDGES
+        linkage.LPA_LOCAL_MAX_EDGES = 0
         try:
             dist = [tuple(r) for r in q(spark, sf_dir).collect()]
         finally:
-            components._CC_LOCAL_MAX_EDGES = saved
+            linkage.LPA_LOCAL_MAX_EDGES = saved
         assert local == dist

@@ -339,3 +339,50 @@ def test_foreach_batch_periodic_compaction(spark, tmp_path, fragmented_writes):
     assert _nfiles(sink, "2024-01-01") == 1
     rows = {r["k"]: r["v"] for r in sink.read().collect()}
     assert rows == {k: 2.0 for k in range(20)}
+
+
+def _jobs_launched(spark, fn) -> tuple[object, int]:
+    """(fn(), number of Spark jobs fn launched), counted from the status
+    tracker's job ids for a job group set around the call."""
+    sc = spark.sparkContext
+    group = "sink-read-jobs"
+    sc.setJobGroup(group, "count the jobs of one call")
+    try:
+        before = set(sc.statusTracker().getJobIdsForGroup(group))
+        out = fn()
+        after = set(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(after - before)
+
+
+def test_unpartitioned_versions_carry_their_schema(spark, tmp_path, fragmented_writes):
+    """Every version ships _sinkschema.json, so read() (and the next
+    merge's read of the live table) never runs a schema-inference job —
+    after an upsert and after a whole-table compaction alike."""
+    sink = KeyedParquetSink(spark, str(tmp_path / "t"), ["day", "k"])
+    data = _rows(spark, [("2024-01-01", k, float(k)) for k in range(40)])
+    sink.upsert(data.repartition(8), epoch_id=1)
+    for step in ("upsert", "compact"):
+        assert os.path.exists(os.path.join(sink._current(), "_sinkschema.json")), step
+        df, jobs = _jobs_launched(spark, sink.read)
+        assert jobs == 0, f"read() after {step} launched {jobs} job(s)"
+        assert df.schema == data.schema, step
+        assert sorted(tuple(r) for r in df.collect()) == sorted(
+            tuple(r) for r in data.collect()
+        ), step
+        if step == "upsert":
+            assert sink.compact() == {"compacted": 1, "skipped": 0}
+
+
+def test_foreach_batch_skips_empty_epochs(spark, tmp_path):
+    """The adapter's empty-batch fast path: an empty epoch writes no
+    version, so an empty first epoch leaves no table behind."""
+    sink = KeyedParquetSink(spark, str(tmp_path / "t"), ["day", "k"])
+    fn = sink.foreach_batch()
+    fn(_rows(spark, []), 0)
+    assert not sink.exists()
+    fn(_rows(spark, [("2024-01-01", 1, 1.0)]), 1)
+    version = sink._current()
+    fn(_rows(spark, []), 2)
+    assert sink._current() == version
