@@ -20,7 +20,7 @@ MINIMUM is reported: repeated whole-suite runs on this host vary by up to
 85 s back-to-back), and min-of-k is the standard way to estimate the
 noise-free cost of a deterministic computation.  The policy is applied
 uniformly, stated here, and overridable (REPS=1 reproduces the
-single-shot protocol of BENCH_r01/r02).
+single-shot protocol of rounds 1-2).
 
 Round-12 de-noising (VERDICT r11 #2): the r≤11 protocol ran the suite in
 ONE alphabetical pass with back-to-back reps, so a roving host-load band
@@ -52,7 +52,6 @@ import json
 import os
 import random
 import sys
-import re
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -207,11 +206,11 @@ def main() -> None:
         "over_bar": over_bar,
     }
     # The driver records only the last ~2000 bytes of stdout; the full
-    # 117-query dict (~3.5 KB) overflowed that window in round 3
-    # (BENCH_r03.json shipped with parsed:null).  Full per-query detail goes
-    # to BENCH_DETAIL.json (committed, judge-readable); stdout gets ONE
-    # compact line with the totals plus the headline-per-family timings,
-    # sized to survive the capture.
+    # 117-query dict (~3.5 KB) overflowed that window in round 3 (that
+    # round's bench artifact shipped with parsed:null).  Full per-query
+    # detail goes to BENCH_DETAIL.json (committed, judge-readable); stdout
+    # gets ONE compact line with the totals plus the headline-per-family
+    # timings, sized to survive the capture.
     # BENCH_DETAIL.json is the committed, round-over-round-comparable
     # artifact and must stay at the driver's sf (0.1); an iteration run at
     # another sf writes a sibling file instead of silently replacing it
@@ -228,25 +227,6 @@ def main() -> None:
     with open(detail_path, "w") as f:
         json.dump(summary, f, separators=(",", ":"))
         f.write("\n")
-    # Per-ROUND snapshot (round-9 verdict ask #1): BENCH_DETAIL.json is
-    # overwritten every run, which destroyed the r08 per-query numbers when
-    # r09 ran.  Snapshot each driver-sf run under bench_snapshots/ keyed by
-    # the round being built (latest committed BENCH_r*.json + 1), so
-    # round-over-round per-query diffs stay reproducible from git alone.
-    if sf == 0.1 and not only:
-        repo = os.path.dirname(os.path.abspath(__file__))
-        rounds = [
-            int(m.group(1))
-            for p in os.listdir(repo)
-            if (m := re.match(r"BENCH_r(\d+)\.json$", p))
-        ]
-        building = (max(rounds) if rounds else 0) + 1
-        snap = os.path.join(
-            repo, "bench_snapshots", f"BENCH_DETAIL_r{building:02d}.json"
-        )
-        with open(snap, "w") as f:
-            json.dump(summary, f, separators=(",", ":"))
-            f.write("\n")
     compact = dict(summary)
     compact["queries"] = {n: timings[n] for n in names[: len(HEADLINE)]}
     compact.pop("baseline_ratios", None)  # 300 entries — detail-file only

@@ -192,10 +192,10 @@ def q_rank_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape Catalyst cannot save (no rank-limit filter, so WindowGroupLimit
     can't prune).  Below ~1 GiB of input the plain window wins — the bucketed
     rewrite's extra broadcast joins cost more than the single sort (measured
-    2.9x at sf0.1, BENCH_r02 vs r01).  At cluster scale the plain window
-    shuffles ALL rows into #groups straggler partitions, so the bucketed
-    two-phase plan takes over (is_large_input; tests pin the scale path via
-    SPARK_GRAFT_SCALE_SWITCH_BYTES=0)."""
+    2.9x at sf0.1, round-2 vs round-1 bench).  At cluster scale the plain
+    window shuffles ALL rows into #groups straggler partitions, so the
+    bucketed two-phase plan takes over (is_large_input; tests pin the scale
+    path via SPARK_GRAFT_SCALE_SWITCH_BYTES=0)."""
     if is_large_input(sf_dir, "events"):
         return _rank_bucketed(spark, sf_dir)
     return _rank_plain_window(spark, sf_dir)

@@ -8,6 +8,9 @@ Column-name contract: every computed column is aliased identically in the
 Spark query and the oracle SQL (the driver sorts columns by name before
 hashing).  Float aggregates are rounded (typically 4 dp) on BOTH sides so
 summation-order differences between engines can't flip the hash.
+
+`QUERIES` and `ORACLES` keep registration order; nothing reorders them.
+`load_all` imports the query modules in `_QUERY_MODULES` order.
 """
 
 from __future__ import annotations
@@ -58,147 +61,6 @@ _QUERY_MODULES = (
     "queries.setjoin",
 )
 
-# The driver's correctness harness checks the FIRST 50 entries of queries()
-# in insertion order.  Names listed here are re-ordered to the front after
-# all modules load, so queries that still need a hard-signal CORRECTNESS row
-# (new this round, or past the 50-cut in a previous round) are guaranteed to
-# land inside the window.  Everything not listed follows in registration
-# order; every query that falls outside the window as a result already
-# holds a green driver row (CORRECTNESS_r01 and/or _r02).
-_DRIVER_PRIORITY = (
-    # round-13 rotation (optimization round 2): CORRECTNESS_r12 converted
-    # all 50 round-12 slots to green rows.  This round's optimizations
-    # touched 35 queries whose executed code changed (results proven
-    # identical against the DuckDB oracle at sf0.001+sf0.01 in-session,
-    # but the driver's hard-signal row must re-certify the new code —
-    # all 35 are in tests' _RECERTIFY, exempt from the oldest-first
-    # invariant).  The remaining 15 slots take the alphabetically-first
-    # of the staleness tail: 34 queries last certified round 6 (age 7 —
-    # past the 6-round cadence bar, so window or overflow is mandatory);
-    # the other 19 r6 plus the 30 round-7-certified (age 6 — mandatory
-    # NEXT round) queue in _NEXT_ROUND_PRIORITY.
-    # -- code changed in round 13 (see OPTIMIZATION_r13.md):
-    # minhash est_jaccard unrolled to codegen (text.py) + CC small-graph
-    # fast path (functions/components.py):
-    "q_doc_dedup_minhash",
-    "q_doc_dup_groups",
-    "q_doc_dup_groups_cc",
-    "q_dup_group_stats",
-    "q_cc_incremental",
-    "q_minhash_eval",
-    "q_dedup_incremental",
-    # q_ngram_novelty reverted to the anti-join form; q_jaccard_setjoin
-    # dropped the r12 pref checkpoint; LP gained the small-graph path:
-    "q_ngram_novelty",
-    "q_jaccard_setjoin",
-    "q_label_propagation_converged",
-    # embedding family: dot/norm/distance lambdas unrolled to codegen
-    # (similarity.py, curation.py, embedding_ops.py):
-    "q_semdedup",
-    "q_embed_binary_eval",
-    "q_embed_truncation_eval",
-    "q_pq_codes",
-    "q_cluster_purity",
-    "q_embed_anisotropy",
-    "q_embed_outliers",
-    "q_embed_knn",
-    "q_embed_knn_lsh",
-    "q_embed_near_dup",
-    "q_embed_ivf",
-    "q_embed_centroids",
-    "q_semantic_decontaminate",
-    "q_hard_negatives",
-    "q_embed_dedup_incremental",
-    "q_pq_adc_knn",
-    "q_ivf_adc_knn",
-    "q_ivfadc_residual_knn",
-    "q_knn_classify",
-    "q_ann_recall",
-    "q_semantic_dedup",
-    "q_embed_centroid_drift",
-    "q_kmeans_step",
-    "q_silhouette",
-    "q_power_iteration",
-    # -- last driver-certified round 6 (alphabetically-first 15 of the 34
-    # not already re-fronted above):
-    "q_doc_containment",
-    "q_doc_length_bands",
-    "q_eval_grams",
-    "q_hill_tail",
-    "q_hll_distinct",
-    "q_integrity_audit",
-    "q_join_cardinality",
-    "q_label_balance",
-    "q_lang_confusion",
-    "q_link_prediction",
-    "q_market_concentration",
-    "q_minhash_band_tuning",
-    "q_misra_gries",
-    "q_mix_shift",
-    "q_order_reorder_rate",
-)
-
-# Rotation OVERFLOW queue: stale-certified queries that did not fit in this
-# round's 50-slot window.  They order immediately after the window
-# (positions 51+) and are the mandatory front of next round's rotation —
-# the cadence guard (tests/test_oracle_parity.py) treats window+overflow as
-# "scheduled for re-cert" when enforcing the <=6-round freshness bar.
-_NEXT_ROUND_PRIORITY: tuple[str, ...] = (
-    # -- last driver-certified round 6 (remaining 19 of the 34 after the
-    # window's 15): the mandatory front of the round-14 rotation.
-    "q_pack_efficiency",
-    "q_partition_plan",
-    "q_price_elasticity",
-    "q_price_index",
-    "q_quantile_bins",
-    "q_readability",
-    "q_repeat_interval",
-    "q_revenue_motifs",
-    "q_shingle_profile",
-    "q_simhash_pairs",
-    "q_skew_report",
-    "q_source_fingerprint",
-    "q_stopword_profile",
-    "q_supplier_herfindahl",
-    "q_token_budget_plan",
-    "q_tokenizer_fertility",
-    "q_vocab_coverage",
-    "q_weekday_anova",
-    "q_welford_stats",
-    # -- last driver-certified round 7 (age 6 at the r13 build — hits the
-    # cadence bar at r14, so they queue here already):
-    "q_abc_classes",
-    "q_boilerplate",
-    "q_c4_filters",
-    "q_ccnet_buckets",
-    "q_cdc_apply",
-    "q_cms_heavy_hitters",
-    "q_code_detect",
-    "q_cosupply_triangles",
-    "q_cross_corr",
-    "q_decayed_counts",
-    "q_editdist_refine",
-    "q_gopher_rules",
-    "q_holt_linear",
-    "q_ivm_merge",
-    "q_k_anonymity",
-    "q_kmv_setops",
-    "q_label_propagation",
-    "q_lag_features",
-    "q_local_clustering",
-    "q_order_priority_exists",
-    "q_pruning_audit",
-    "q_rate_limit",
-    "q_serve_analytics_hourly",
-    "q_serve_request_audit",
-    "q_serve_sensor_detail",
-    "q_serve_sensors_page",
-    "q_snapshot_diff",
-    "q_url_dedup",
-    "q_value_deciles",
-    "q_volume_anomaly",
-)
-
 
 def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Register a query; oracle=None means rows-only check (non-SQL-expressible)."""
@@ -215,21 +77,7 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
 
 
 def load_all() -> None:
-    """Import all query modules (idempotent) and apply the driver-priority
-    ordering so the registry's insertion order puts unverified queries inside
-    the driver's 50-query correctness window."""
+    """Import every query module (idempotent)."""
     pkg = __name__.rsplit(".", 1)[0]
     for mod in _QUERY_MODULES:
         import_module(f"{pkg}.{mod}")
-    front = [
-        n
-        for group in (_DRIVER_PRIORITY, _NEXT_ROUND_PRIORITY)
-        for n in group
-        if n in QUERIES
-    ]
-    rest = [n for n in QUERIES if n not in set(front)]
-    ordered = front + rest
-    for reg in (QUERIES, ORACLES):
-        reordered = {n: reg[n] for n in ordered if n in reg}
-        reg.clear()
-        reg.update(reordered)

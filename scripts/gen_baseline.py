@@ -7,7 +7,7 @@ measurement and never moves once recorded):
 
 1. bench_snapshots/BASELINES.json — the cumulative ledger this script
    maintains; existing entries are never overwritten.
-2. The BENCH_r01 markdown table in BASELINE.md (the 42 SURVEY-core
+2. The round-1 markdown table in BASELINE.md (the 42 SURVEY-core
    queries, exact r01 numbers).
 3. bench_snapshots/BENCH_SF0.1_DETAIL.json — the r04-vintage full-suite
    snapshot (BASELINE.md's round-3/4 prose notes give only approximate
@@ -47,7 +47,7 @@ MARK_END = "<!-- AUTOGEN:PER_QUERY_BASELINE:END -->"
 def parse_r01_table(md: str) -> dict[str, float]:
     """The two-column '| name | secs | | name | secs |' r01 table."""
     out: dict[str, float] = {}
-    section = md.split("### Per-query baseline (BENCH_r01", 1)[-1]
+    section = md.split("### Per-query baseline (", 1)[-1]
     section = section.split("###", 1)[0]
     for name, secs in re.findall(r"\|\s*(q_\w+)[^|]*\|\s*([0-9.]+)\s*\|", section):
         out[name] = float(secs)

@@ -1,6 +1,6 @@
-"""Committed bench artifacts must stay round-over-round comparable
-(round-5 ADVICE: BENCH_DETAIL.json once shipped as an sf0.01 run while
-every BENCH_rNN.json was sf0.1, making the wall-clock comparison a
+"""Committed bench artifacts must stay run-over-run comparable (round-5
+ADVICE: BENCH_DETAIL.json once shipped as an sf0.01 run while every
+earlier run was sf0.1, making the wall-clock comparison a
 10x-smaller-dataset artifact)."""
 
 from __future__ import annotations
@@ -13,12 +13,9 @@ REPO = Path(__file__).resolve().parents[1]
 
 def test_bench_detail_sf_matches_round_artifacts():
     detail = json.loads((REPO / "BENCH_DETAIL.json").read_text())
-    rounds = sorted(REPO.glob("BENCH_r*.json"))
-    assert rounds, "driver round artifacts missing"
-    latest = json.loads(rounds[-1].read_text())
-    assert detail["sf"] == latest["sf"], (
-        f"committed BENCH_DETAIL.json is an sf={detail['sf']} run; round "
-        f"artifacts are sf={latest['sf']} — regenerate with "
+    assert detail["sf"] == 0.1, (
+        f"committed BENCH_DETAIL.json is an sf={detail['sf']} run, not "
+        "sf=0.1 — regenerate with "
         "SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python bench.py"
     )
 
@@ -113,31 +110,3 @@ def test_dedup_similarity_families_have_sf1_baselines():
         "scripts/gen_baseline.py"
     )
 
-
-def test_coverage_totals_block_is_current():
-    """COVERAGE.md's Totals block is generated (scripts/coverage_totals.py)
-    and must match a fresh computation — the round-9 verdict found the old
-    hand-written block still carrying round-4 numbers (145 queries) while
-    the registry held 290.  Staleness is now a red test, not a judge
-    finding."""
-    import sys
-
-    sys.path.insert(0, str(REPO / "scripts"))
-    from coverage_totals import compute, render
-
-    text = (REPO / "COVERAGE.md").read_text()
-    begin, end = "<!-- totals:begin -->", "<!-- totals:end -->"
-    assert begin in text and end in text, "totals markers missing"
-    committed = text.split(begin)[1].split(end)[0].strip()
-    # Pin the recomputation to the round the committed block states, so the
-    # driver landing THIS round's artifacts after our last commit does not
-    # flip the test red at the judge's snapshot.
-    import re
-
-    m = re.search(r"Totals \(round (\d+)\)", committed)
-    assert m, "committed block lacks a round number"
-    expected = render(compute(building=int(m.group(1)))).strip()
-    assert committed == expected, (
-        "COVERAGE.md totals block is stale — regenerate with "
-        "`python scripts/coverage_totals.py` and paste between the markers"
-    )

@@ -33,166 +33,17 @@ def test_oracle_parity(spark, sf_dir, duck, name):
     assert not problems, f"{name}: " + " | ".join(problems)
 
 
-def test_rank_bucketed_scale_path_parity(spark, sf_dir, duck, monkeypatch):
-    """q_rank_per_group's cluster-scale bucketed plan is bypassed at fixture
-    sizes (adaptive switch); force it here so BOTH paths stay oracle-exact."""
+# Both queries switch to a cluster-scale bucketed plan above a size
+# threshold, so fixture sizes bypass it; force it here so BOTH paths stay
+# oracle-exact.  q_token_budget_pack's bucketed running sum is two-phase;
+# integer token sums make it bit-identical, not merely ULP-close.
+@pytest.mark.parametrize("name", ["q_rank_per_group", "q_token_budget_pack"])
+def test_bucketed_scale_path_parity(spark, sf_dir, duck, monkeypatch, name):
     monkeypatch.setenv("SPARK_GRAFT_SCALE_SWITCH_BYTES", "0")
-    sdf = registry.QUERIES["q_rank_per_group"](spark, sf_dir).toPandas()
-    ddf = duck.execute(registry.ORACLES["q_rank_per_group"]).fetchdf()
+    sdf = registry.QUERIES[name](spark, sf_dir).toPandas()
+    ddf = duck.execute(registry.ORACLES[name]).fetchdf()
     problems = compare(sdf, ddf)
-    assert not problems, "q_rank_per_group[bucketed]: " + " | ".join(problems)
-
-
-def test_token_budget_bucketed_scale_path_parity(spark, sf_dir, duck, monkeypatch):
-    """q_token_budget_pack's cluster-scale bucketed running-sum plan is
-    bypassed at fixture sizes (adaptive switch); force it here so BOTH
-    paths stay oracle-exact (integer token sums make the two-phase plan
-    bit-identical, not merely ULP-close)."""
-    monkeypatch.setenv("SPARK_GRAFT_SCALE_SWITCH_BYTES", "0")
-    sdf = registry.QUERIES["q_token_budget_pack"](spark, sf_dir).toPandas()
-    ddf = duck.execute(registry.ORACLES["q_token_budget_pack"]).fetchdf()
-    problems = compare(sdf, ddf)
-    assert not problems, "q_token_budget_pack[bucketed]: " + " | ".join(problems)
-
-
-def test_driver_priority_queries_inside_50_window():
-    """The driver's correctness harness verifies only the first 50 entries of
-    queries(); every query that still needs a hard-signal row (new or
-    modified this round) must land inside that window, and everything pushed
-    past it must already hold a green row from a prior round's CORRECTNESS."""
-    order = list(registry.QUERIES)
-    window = set(order[:50])
-    missing = [n for n in registry._DRIVER_PRIORITY if n in registry.QUERIES and n not in window]
-    assert not missing, f"priority queries past the driver's 50-query cut: {missing}"
-
-
-# Re-fronted because their code or oracle changed after the certifying
-# round (the old green row no longer certifies the current behaviour).
-# These are exempt from the oldest-first invariant.  Round 13
-# (optimization round 2, see OPTIMIZATION_r13.md): the minhash
-# est_jaccard and every embedding dot/norm/distance lambda were unrolled
-# to codegen'd sums (value-identical, oracle-verified in-session at
-# sf0.001 + sf0.01); the CC star fixpoint and converged label
-# propagation gained a single-task small-graph fast path;
-# q_ngram_novelty reverted to the anti-join form; q_jaccard_setjoin
-# dropped the r12 pref checkpoint.
-_RECERTIFY: set[str] = {
-    "q_doc_dedup_minhash",
-    "q_doc_dup_groups",
-    "q_doc_dup_groups_cc",
-    "q_dup_group_stats",
-    "q_cc_incremental",
-    "q_minhash_eval",
-    "q_dedup_incremental",
-    "q_ngram_novelty",
-    "q_jaccard_setjoin",
-    "q_label_propagation_converged",
-    "q_semdedup",
-    "q_embed_binary_eval",
-    "q_embed_truncation_eval",
-    "q_pq_codes",
-    "q_cluster_purity",
-    "q_embed_anisotropy",
-    "q_embed_outliers",
-    "q_embed_knn",
-    "q_embed_knn_lsh",
-    "q_embed_near_dup",
-    "q_embed_ivf",
-    "q_embed_centroids",
-    "q_semantic_decontaminate",
-    "q_hard_negatives",
-    "q_embed_dedup_incremental",
-    "q_pq_adc_knn",
-    "q_ivf_adc_knn",
-    "q_ivfadc_residual_knn",
-    "q_knn_classify",
-    "q_ann_recall",
-    "q_semantic_dedup",
-    "q_embed_centroid_drift",
-    "q_kmeans_step",
-    "q_silhouette",
-    "q_power_iteration",
-}
-
-# Certification-freshness horizon (rounds).  A query whose latest green
-# driver row is older than this must be scheduled for re-certification
-# (inside _DRIVER_PRIORITY or _NEXT_ROUND_PRIORITY).  6 == the worst case
-# observed at round 9 (r2-certified queries, age 7, all rotated in).
-_CADENCE_MAX_AGE_ROUNDS = 6
-
-
-def _cert_rounds() -> tuple[dict[str, int], int]:
-    """(latest fully-green driver-cert round per query — 0 if never), plus
-    the round currently being built (latest artifact round + 1).  A row
-    counts as green only with rows/schema/hash all matching and err null."""
-    import json
-    import re
-    from pathlib import Path
-
-    repo = Path(__file__).resolve().parents[1]
-    cert: dict[str, int] = {n: 0 for n in registry.QUERIES}
-    latest = 0
-    for p in sorted(repo.glob("CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"r(\d+)", p.stem).group(1))
-        latest = max(latest, rnd)
-        for name, row in json.loads(p.read_text()).items():
-            if (
-                isinstance(row, dict)
-                and row.get("rows_match") is True
-                and row.get("schema_match") is True
-                and row.get("hash_match") is True
-                and row.get("err") is None
-                and name in cert
-            ):
-                cert[name] = max(cert[name], rnd)
-    return cert, latest + 1
-
-
-def test_driver_priority_rotated_oldest_cert_first():
-    """Forcing function for the per-round window rotation: the driver's
-    50-query window must be spent on the queries that need it most — never-
-    certified queries first (cert round 0), then stalest certifications.
-    Enforced as an invariant: the freshest cert INSIDE the window must not
-    be fresher than the stalest cert OUTSIDE window+overflow (modulo
-    _RECERTIFY, for queries legitimately re-fronted after a code change).
-
-    ATOMIC-COMMIT REQUIREMENT: by design this goes red the moment a round's
-    CORRECTNESS_rNN.json certifying the current window lands (the window's
-    certs jump to round N while stale queries wait outside) — commit the
-    round-N artifact and the round-N+1 rotation TOGETHER."""
-    cert, _ = _cert_rounds()
-    scheduled = set(registry._DRIVER_PRIORITY) | set(registry._NEXT_ROUND_PRIORITY)
-    window = [
-        n for n in registry._DRIVER_PRIORITY if n in cert and n not in _RECERTIFY
-    ]
-    outside = [n for n in cert if n not in scheduled]
-    if not window or not outside:
-        return
-    freshest_in = max(window, key=lambda n: cert[n])
-    stalest_out = min(outside, key=lambda n: cert[n])
-    assert cert[freshest_in] <= cert[stalest_out], (
-        f"window slot burned on {freshest_in} (cert r{cert[freshest_in]}) while "
-        f"{stalest_out} (cert r{cert[stalest_out]}) waits outside — rotate "
-        "registry._DRIVER_PRIORITY oldest-cert-first"
-    )
-
-
-def test_certification_cadence():
-    """No registered query's latest green driver cert may be older than
-    _CADENCE_MAX_AGE_ROUNDS rounds unless it is already scheduled for
-    re-certification (window or overflow).  Keeps the whole registry's
-    correctness evidence fresh, not just the current round's additions."""
-    cert, building = _cert_rounds()
-    scheduled = set(registry._DRIVER_PRIORITY) | set(registry._NEXT_ROUND_PRIORITY)
-    overdue = sorted(
-        f"{n} (cert r{cert[n]}, age {building - cert[n]})"
-        for n in cert
-        if cert[n] and building - cert[n] > _CADENCE_MAX_AGE_ROUNDS and n not in scheduled
-    )
-    assert not overdue, (
-        f"certs older than {_CADENCE_MAX_AGE_ROUNDS} rounds and not scheduled "
-        f"for re-cert: {overdue}"
-    )
+    assert not problems, f"{name}[bucketed]: " + " | ".join(problems)
 
 
 def test_rows_only_queries_run(spark, sf_dir):
@@ -210,7 +61,7 @@ def test_rows_only_queries_run(spark, sf_dir):
 def test_registered_query_schemas_are_atomic(spark, sf_dir):
     """The driver's canonicalizer pandas-sorts and hashes the result frame;
     a top-level array/map/struct column is unhashable there and errors the
-    row (q_quality_ensemble, CORRECTNESS_r07).  Guard the whole class:
+    row (q_quality_ensemble, round-7 correctness run).  Guard the whole class:
     every registered query must return only atomic top-level columns.
     Schema resolution is lazy (plan analysis only) for ordinary queries;
     fixpoint queries run real Spark jobs at DataFrame-construction time
