@@ -24,7 +24,6 @@ and floats quantized with fround on both sides.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -376,17 +375,19 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     {SEMDEDUP_THRESH} — keep-first-id semantic dedup whose pair search never
     leaves a cluster.  The kept corpus is `WHERE NOT is_dup`.
 
-    Scale: this is the whole point of SemDeDup — pairing is cluster-local,
-    so the pair space is sum(cluster_size^2), not N^2 — WHICH ONLY HOLDS
-    IF k GROWS WITH N: the effective seed count is max({N_CENTROIDS},
-    ceil(N/{PER_CLUSTER})), computed as a broadcast 1-row aggregate in both
-    engines (identical results at every driver fixture, where it floors to
-    {N_CENTROIDS}; at the 10x scale fixture it caps cluster sizes at ~250
-    and cut the measured 76 s back to near-linear).  Seeds broadcast for
-    assignment (the corpus never shuffles to be scored); the self-join
-    shuffles each side once on cluster_id; cosine is a zip_with/aggregate
-    dot product inside codegen, accumulated in identical element order in
-    both engines so the threshold compare is bit-deterministic."""
+    Scale: pairing is cluster-local, so the pair space is
+    sum(cluster_size^2), not N^2, as long as k grows with N: the effective
+    seed count is max({N_CENTROIDS}, ceil(N/{PER_CLUSTER})), computed as a
+    broadcast 1-row aggregate in both engines (identical results at every
+    shipped fixture, where it floors to {N_CENTROIDS}).  The price is the
+    seed assignment: every vector is scored against all k seeds, so once
+    k passes its floor that operator emits N x k = N^2/{PER_CLUSTER} rows
+    and is quadratic (25x on the 10x replica; SUPERLINEAR in
+    tests/test_registry_pass.py).  Seeds broadcast for assignment (the
+    corpus never shuffles to be scored); the self-join shuffles each side
+    once on cluster_id; cosine is a zip_with/aggregate dot product inside
+    codegen, accumulated in identical element order in both engines so
+    the threshold compare is bit-deterministic."""
     emb = load_table(spark, sf_dir, "embeddings")
     c = emb.select(
         "vec_id",
@@ -433,11 +434,11 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("vec_id", F.col("m.c").alias("cid"), "emb", "nrm")
         # The assignment feeds the self-join TWICE plus the final
-        # join-back; persisting materializes the K-candidate scoring once
-        # instead of three times (the same iterative-reuse pattern as
-        # q_doc_dup_groups' edge list; footprint = corpus embeddings,
-        # disk-spillable).
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        # join-back; an eager localCheckpoint materializes the K-candidate
+        # scoring once instead of three times.  Not .persist(): cached
+        # blocks outlive the query, and a later call in the session would
+        # read them instead of scoring.
+        .localCheckpoint(eager=True)
     )
     x = a.select(
         F.col("vec_id").alias("x_id"),

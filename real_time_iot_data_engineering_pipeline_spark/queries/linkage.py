@@ -135,8 +135,9 @@ _EDGES_DUCK = f"""pairs AS (
 
 
 def _edges_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The thresholded co-supply edge set (u < v), persisted — it always
-    feeds several consumers (triangle legs, degrees, rank iterations)."""
+    """The thresholded co-supply edge set (u < v), materialized by an eager
+    localCheckpoint — it always feeds several consumers (triangle legs,
+    degrees, rank iterations)."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     a = li.select("l_orderkey", F.col("l_suppkey").alias("u"))
     b = li.select("l_orderkey", F.col("l_suppkey").alias("v"))
@@ -155,7 +156,7 @@ def _edges_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         ranked.filter(F.col("pr") <= EDGE_TOP_FRAC)
         .select("u", "v")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=True)
     )
 
 

@@ -32,7 +32,6 @@ plans for training-data/warehouse users.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -813,12 +812,12 @@ def q_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     all_entries = parts[0]
     for p in parts[1:]:
         all_entries = all_entries.unionByName(p)
-    # persisted: three consumers (per-check stats, orphan child side,
-    # orphan parent side) must not re-trigger the table scans
+    # eager localCheckpoint: three consumers (per-check stats, orphan
+    # child side, orphan parent side) must not re-trigger the table scans
     grouped = (
         all_entries.groupBy("check", "k")
         .agg(F.count("*").alias("cnt"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=True)
     )
     stats = grouped.groupBy("check").agg(
         F.sum("cnt").cast("long").alias("n_checked"),

@@ -453,10 +453,12 @@ def q_embed_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: a corpus self-join needs finer buckets than the query-batch LSH —
     48 planes in 4 bands x 12 bits put random pairs in the same bucket with
-    probability ~2^-12 per band, so candidate volume stays near-linear in
-    the corpus while near-twins (per-bit agreement ~0.98) still collide in
-    >=1 band with ~99.9% probability.  The 64-float embedding rides the
-    join once; norms are precomputed per row."""
+    probability ~2^-12 per band, while near-twins (per-bit agreement ~0.98)
+    still collide in >=1 band with ~99.9% probability.  The band keys are
+    fixed-width, so random collisions grow as N^2 / 2^12: candidate volume
+    is quadratic in the corpus (the candidate shuffle grows 86x on the 10x
+    replica; SUPERLINEAR in tests/test_registry_pass.py).  The 64-float
+    embedding rides the join once; norms are precomputed per row."""
     c = _near_dup_corpus(spark, sf_dir).select(
         F.col("vec_id").alias("neighbor_id"),
         F.expr(_EMB_D_SPARK).alias("c_emb"),
@@ -2205,11 +2207,12 @@ def q_embed_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the store side is (band_key, vec_id, quantizable vector) —
     bucketed by band_key at write so the daily probe is a co-partitioned
-    equi-join; only the delta explodes into band rows, so probe cost is
-    |delta| x {N_BANDS} rows against bounded buckets (12-bit keys keep
-    random collisions at ~4/4096 per the q_embed_near_dup sizing), never
-    a store self-join.  Exact cosine runs on candidates only; verdicts
-    are per-delta partial aggregates."""
+    equi-join; only the delta explodes into band rows, never a store
+    self-join.  The 12-bit band keys are fixed-width, so buckets grow with
+    the store and random delta x store collisions grow as N^2 / 2^12 (41x
+    on the 10x replica; SUPERLINEAR in tests/test_registry_pass.py).
+    Exact cosine runs on candidates only; verdicts are per-delta partial
+    aggregates."""
     c = _inc_corpus(spark, sf_dir).select(
         "vec_id",
         F.expr(_EMB_D_SPARK).alias("emb_d"),

@@ -26,7 +26,6 @@ Design rules:
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -960,19 +959,20 @@ def q_doc_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same join shape per step); the fixed-round form keeps the operator
     deterministic and SQL-oracle-checkable."""
     pairs = _minhash_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    # Persist the edge list: every propagation round joins the SAME edges,
-    # and without materialization each round re-runs the whole
+    # Materialize the edge list: every propagation round joins the SAME
+    # edges, and without materialization each round re-runs the whole
     # shingle->minhash->LSH pipeline (measured 2.5x slower at sf0.1).
-    # Persisting intermediate graph state per iteration is the standard
-    # Spark iterative-algorithm pattern (GraphX/Pregel do exactly this);
-    # |E| is near-linear from the LSH bucketing so the cached footprint is
-    # two bigints per candidate pair, spillable to disk.
+    # Materializing graph state per iteration is the standard Spark
+    # iterative-algorithm pattern (GraphX/Pregel do exactly this); |E| is
+    # near-linear from the LSH bucketing, so the checkpoint holds two
+    # bigints per candidate pair.  Eager localCheckpoint, not .persist():
+    # checkpoint blocks go with the plan instead of outliving the query.
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionByName(
             pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=True)
     )
     labels = _near_corpus(spark, sf_dir).select(
         "doc_id", F.col("doc_id").alias("lbl")
@@ -981,9 +981,9 @@ def q_doc_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Each round reads the previous labels TWICE (as node and as
         # neighbor), so an unpersisted chain re-executes round i-1's plan
         # 2x per round — 2^rounds copies of the base by the end.
-        # Persisting per round keeps the work O(rounds x |E|), the Pregel
+        # Materializing per round keeps the work O(rounds x |E|), the Pregel
         # contract; footprint is one (doc_id, lbl) pair per node.
-        labels = _lp_round(labels, edges).persist(StorageLevel.MEMORY_AND_DISK)
+        labels = _lp_round(labels, edges).localCheckpoint(eager=True)
     return labels.select(
         "doc_id",
         F.col("lbl").alias("dup_group"),

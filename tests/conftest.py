@@ -22,3 +22,12 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def registry_pass(spark, sf_dir, tmp_path_factory):
+    """Every registered query built and run once per session, at sf_dir and
+    on a x10 replica (tests/test_registry_pass.py)."""
+    from .test_registry_pass import run_registry_pass
+
+    return run_registry_pass(spark, sf_dir, str(tmp_path_factory.mktemp("registry_pass")))

@@ -26,10 +26,11 @@ def duck(sf_dir):
 
 
 @pytest.mark.parametrize("name", _WITH_ORACLE)
-def test_oracle_parity(spark, sf_dir, duck, name):
-    sdf = registry.QUERIES[name](spark, sf_dir).toPandas()
+def test_oracle_parity(registry_pass, duck, name):
+    run = registry_pass.runs[name]
+    assert run.error is None, f"{name} raised:\n{run.error}"
     ddf = duck.execute(registry.ORACLES[name]).fetchdf()
-    problems = compare(sdf, ddf)
+    problems = compare(run.frame, ddf)
     assert not problems, f"{name}: " + " | ".join(problems)
 
 
@@ -46,52 +47,42 @@ def test_bucketed_scale_path_parity(spark, sf_dir, duck, monkeypatch, name):
     assert not problems, f"{name}[bucketed]: " + " | ".join(problems)
 
 
-def test_rows_only_queries_run(spark, sf_dir):
+def test_rows_only_queries_run(registry_pass):
     """Queries without an oracle must still produce a non-trivial result,
     not merely avoid throwing.  Currently EVERY registered query is
     oracle-checked, so the loop is vacuously green — written this way
     (not parametrized) so an empty set reads as a pass on the stronger
     invariant instead of a perpetual pytest skip."""
     for name in _ROWS_ONLY:
-        df = registry.QUERIES[name](spark, sf_dir)
-        assert len(df.columns) > 0, name
-        assert df.count() > 0, name
+        run = registry_pass.runs[name]
+        assert run.error is None, f"{name} raised:\n{run.error}"
+        assert len(run.schema.fields) > 0, name
+        assert run.base["rows"] > 0, name
 
 
-def test_registered_query_schemas_are_atomic(spark, sf_dir):
+def test_registered_query_schemas_are_atomic(registry_pass):
     """The driver's canonicalizer pandas-sorts and hashes the result frame;
     a top-level array/map/struct column is unhashable there and errors the
     row (q_quality_ensemble, round-7 correctness run).  Guard the whole class:
-    every registered query must return only atomic top-level columns.
-    Schema resolution is lazy (plan analysis only) for ordinary queries;
-    fixpoint queries run real Spark jobs at DataFrame-construction time
-    (localCheckpoint(eager=True) + exit-test counts), so they declare a
-    `static_schema` attribute the sweep reads instead — the declaration is
-    itself checked against the executed schema by
-    test_static_schemas_match_executed."""
-    from pyspark.sql.types import ArrayType, MapType, StructType, _parse_datatype_string
+    every registered query must return only atomic top-level columns."""
+    from pyspark.sql.types import ArrayType, MapType, StructType
 
-    offenders = []
-    for name, fn in registry.QUERIES.items():
-        declared = getattr(fn, "static_schema", None)
-        schema = (
-            _parse_datatype_string(declared)
-            if declared
-            else fn(spark, sf_dir).schema
-        )
-        for f in schema.fields:
-            if isinstance(f.dataType, (ArrayType, MapType, StructType)):
-                offenders.append(f"{name}.{f.name}:{f.dataType.simpleString()}")
+    offenders = [
+        f"{name}.{f.name}:{f.dataType.simpleString()}"
+        for name, run in registry_pass.runs.items()
+        if run.schema is not None
+        for f in run.schema.fields
+        if isinstance(f.dataType, (ArrayType, MapType, StructType))
+    ]
     assert not offenders, (
         "non-atomic top-level result columns (serialize with array_join or "
         f"to_json before returning): {offenders}"
     )
 
 
-def test_static_schemas_match_executed(spark, sf_dir):
-    """Every declared static_schema (the eager-fixpoint escape hatch above)
-    must equal the schema the query actually produces — names, types, and
-    order — so the lazy lint never drifts from reality."""
+def test_static_schemas_match_executed(registry_pass):
+    """Eager fixpoint queries declare a `static_schema`; it must equal the
+    schema the query actually produces — names, types, and order."""
     from pyspark.sql.types import _parse_datatype_string
 
     declared = {
@@ -101,11 +92,11 @@ def test_static_schemas_match_executed(spark, sf_dir):
     }
     assert declared, "expected at least the fixpoint queries to declare schemas"
     for name, ddl in declared.items():
+        run = registry_pass.runs[name]
+        if run.error:  # fails its own parity test
+            continue
         want = [
             (f.name, f.dataType) for f in _parse_datatype_string(ddl).fields
         ]
-        got = [
-            (f.name, f.dataType)
-            for f in registry.QUERIES[name](spark, sf_dir).schema.fields
-        ]
+        got = [(f.name, f.dataType) for f in run.schema.fields]
         assert got == want, f"{name}: declared {want} != executed {got}"

@@ -498,20 +498,22 @@ class TestIntegrityAuditRestructure:
 
     def test_single_scan_per_table(self, spark, sf_dir):
         """The restructure's whole point: the exploded entry union is built
-        from each table exactly once and persisted, so all three consumers
-        (per-check stats, orphan child side, orphan parent side) read the
-        cache — the plan must show InMemoryTableScan for every consumer
-        and reference exactly the 10 table files inside the cached
-        subtree (the old shape re-scanned lineitem up to 7 times)."""
+        from each table exactly once and materialized by one eager
+        localCheckpoint, so all three consumers (per-check stats, orphan
+        child side, orphan parent side) read the checkpoint — the plan
+        must show no table scan outside it, and the checkpoint job must
+        scan each of the 10 table files once (the old shape re-scanned
+        lineitem up to 7 times)."""
         import re
 
+        store = spark._jsparkSession.sharedState().statusStore()
         df = registry.QUERIES["q_integrity_audit"](spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
-        # all three consumers read the cache, never re-deriving the scans
-        # (toString prints the cached subtree per occurrence, so raw
-        # "Scan parquet" counts overstate physical scans and aren't
-        # asserted; physical correctness = every scan sits INSIDE an
-        # InMemoryRelation, materialized once)
-        assert plan.count("InMemoryTableScan") >= 3
-        files = set(re.findall(r"(\w+)\.parquet", plan))
-        assert len(files) == 10, files
+        assert "Scan parquet" not in plan
+        assert len(re.findall(r"Scan ExistingRDD\[check#\d+,k#\d+,cnt#", plan)) >= 3
+        # the checkpoint job is the last SQL execution; its formatted plan
+        # lists one Location line per scan node
+        n = store.executionsCount()
+        built = store.executionsList(n - 1, 1).head().physicalPlanDescription()
+        files = re.findall(r"Location: \w+ \[\S*?(\w+)\.parquet\]", built)
+        assert len(files) == len(set(files)) == 10, files
