@@ -270,13 +270,13 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r13: the r12 single-pass rewrite (tag every gram row, ONE gram-keyed
     # collect_set aggregation, no anti-join) was REVERTED on interleaved
-    # same-session measurements at both scales (scripts/
-    # probe_ngram_novelty.py): sf0.1 mins 1.44 old vs 1.72 new; 10x 8.5-9.5
-    # old vs 15.0-16.3 new.  The collect_set ObjectHashAggregate over the
-    # corpus-scale gram stream costs far more than the two extra explode
-    # replays it saves — three partial-aggregated hash shuffles on the
-    # gram key beat one object-hash shuffle carrying set state.  The
-    # distinct+anti-join form below is the keeper at both measured scales.
+    # same-session measurements at both scales: sf0.1 mins 1.44 old vs
+    # 1.72 new; 10x 8.5-9.5 old vs 15.0-16.3 new.  The collect_set
+    # ObjectHashAggregate over the corpus-scale gram stream costs far more
+    # than the two extra explode replays it saves — three
+    # partial-aggregated hash shuffles on the gram key beat one
+    # object-hash shuffle carrying set state.  The distinct+anti-join form
+    # below is the keeper at both measured scales.
     grams = grams.withColumn("_b", bucket)
     train = (
         grams.filter(F.col("_b") < SPLIT_TRAIN_PCT).select("gram").distinct()

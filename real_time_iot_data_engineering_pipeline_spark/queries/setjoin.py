@@ -168,8 +168,8 @@ def q_jaccard_setjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     # composed, the collect_list aggregation ran 3x.  One eager checkpoint
     # bounds it at one pass (r12, guide §5).  The r12 `pref` checkpoint was
     # DROPPED in r13 after the driver's artifacts showed the query +51%
-    # round-over-round: a per-call-site A/B (scripts/probe_setjoin_ckpts.py,
-    # interleaved in one session) read mins at sf0.1 / 10x of
+    # round-over-round: a per-call-site A/B (each localCheckpoint turned
+    # off in turn, interleaved in one session) read mins at sf0.1 / 10x of
     # toks+sets+pref 2.32/5.80, toks+sets 2.25/5.73, toks+pref 2.32/6.18,
     # toks-only 2.32/5.91 — the pref checkpoint is neutral-to-negative at
     # both scales, and without it the candidate self-join's two legs are

@@ -1065,6 +1065,30 @@ q_doc_dup_groups_cc.static_schema = (
 # ---------------------------------------------------------------------------
 
 
+def fixture_store_path(sf_dir: str, kind: str) -> str:
+    """Where _fixture_store keeps the `kind` store of the fixture at
+    sf_dir: <tmp>/spark_graft_<kind>/<digest of the documents.parquet
+    fingerprint>."""
+    import hashlib
+    import os
+    import tempfile
+
+    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
+    digest = hashlib.sha1(
+        f"{os.path.abspath(sf_dir)}:{st.st_mtime_ns}:{st.st_size}".encode()
+    ).hexdigest()[:16]
+    return os.path.join(tempfile.gettempdir(), f"spark_graft_{kind}", digest)
+
+
+def fixture_stores(sf_dir: str) -> list[str]:
+    """Every store of the fixture at sf_dir, of any kind, finished or not.
+    A throwaway fixture's stores are never read again once it is gone, so
+    its owner removes these."""
+    import glob
+
+    return glob.glob(fixture_store_path(sf_dir, "*") + "*")
+
+
 def _fixture_store(spark: SparkSession, sf_dir: str, kind: str, build):
     """Materialize-once-per-fixture parquet store: `build()` returns the
     DataFrame to persist; the cache key is the documents.parquet
@@ -1079,26 +1103,19 @@ def _fixture_store(spark: SparkSession, sf_dir: str, kind: str, build):
     full recompute).  tests/test_incremental_family.py pins the consumer
     set; a first build logs its cost to stderr so the moved work is
     visible in bench/driver artifacts."""
-    import hashlib
     import os
     import shutil
     import sys
-    import tempfile
     import time
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    digest = hashlib.sha1(
-        f"{os.path.abspath(sf_dir)}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:16]
-    base = os.path.join(tempfile.gettempdir(), f"spark_graft_{kind}")
-    path = os.path.join(base, digest)
+    path = fixture_store_path(sf_dir, kind)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        os.makedirs(base, exist_ok=True)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
         tmp = f"{path}.tmp.{os.getpid()}"
         t0 = time.perf_counter()
         build().write.mode("overwrite").parquet(tmp)
         print(
-            f"[fixture_store] built {kind}/{digest} in "
+            f"[fixture_store] built {kind}/{os.path.basename(path)} in "
             f"{time.perf_counter() - t0:.2f}s (one-time, outside the "
             "incremental operator's timed region by declared semantics)",
             file=sys.stderr,

@@ -18,6 +18,18 @@ RocksDB state stores write changelog checkpoints: each micro-batch uploads
 only the rows it changed, and a full snapshot is taken in the background
 maintenance task.  A checkpoint written with snapshot-only checkpointing
 resumes under this setting unchanged.
+
+Generated-code cache: Spark keeps the classes Janino compiled for
+whole-stage codegen in one LRU cache per JVM, 100 entries by default.  The
+engine's working set is larger: the 13-query batch_queries set uses 183
+distinct generated classes and one run_topology drain compiles about 107,
+so at the default a rotation through either evicts classes before their
+next use and every warm run compiles them again (q_embed_outliers: 21-37
+classes, 0.5-1.3 s of Janino time per run).  CODEGEN_CACHE_ENTRIES holds
+both working sets together with headroom.  The setting is a static conf,
+read once when the JVM first generates code, so it must be set here at
+session build; a session built later in the same JVM, or a foreign
+session, keeps the size the first session set.
 """
 
 from __future__ import annotations
@@ -25,6 +37,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def build_session(
@@ -62,6 +76,7 @@ def build_session(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Arrow for any pandas-UDF path (similarity/text/multimodal ops)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # RocksDB state store for streaming state (streaming_job.py:175-176)
         .config(
             "spark.sql.streaming.stateStore.providerClass",

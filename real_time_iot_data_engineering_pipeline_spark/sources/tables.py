@@ -15,6 +15,17 @@ Scale note: loaders return the raw scan (no repartition, no cache) so
 Catalyst can push filters/column pruning into the parquet reader; callers
 express projections declaratively and the scan only reads what the plan
 needs.
+
+Schema catalog: reading parquet without a schema launches a Spark job that
+infers it from the file footers (100-200 ms a call, against 17-60 ms with
+the schema given), and queries load the same tables over and over.  So
+load_table infers a table's schema once and reads later calls with
+`.schema(...)`.  The catalog key is the table path, the st_mtime_ns and
+size of its file (of every file under it, if the table is a directory),
+and the session settings that change what parquet inference returns
+(_INFERENCE_CONFS): a rewritten file, or a session that infers
+differently, infers again.  A path that cannot be stat'ed locally (an
+object-store URI) is inferred on every call.
 """
 
 from __future__ import annotations
@@ -23,6 +34,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -54,21 +66,30 @@ _NS_TO_NTZ = "timestampadd(MICROSECOND, ts div 1000, TIMESTAMP_NTZ '1970-01-01 0
 _SCALE_SWITCH_BYTES_DEFAULT = 256 << 20
 
 
+def _file_stamps(path: str) -> tuple | None:
+    """(relative path, st_mtime_ns, size) of the file at `path`, or of
+    every file under it; None when the path cannot be stat'ed."""
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return ((".", st.st_mtime_ns, st.st_size),)
+        stamps = []
+        for root, _dirs, files in os.walk(path):
+            for f in files:
+                full = os.path.join(root, f)
+                st = os.stat(full)
+                stamps.append((os.path.relpath(full, path), st.st_mtime_ns, st.st_size))
+        return tuple(sorted(stamps))
+    except OSError:
+        return None
+
+
 def input_bytes(sf_dir: str, name: str) -> int | None:
     """On-disk size of one fixture table, or None when the path isn't local
     (e.g. an object-store URI on a real cluster) — callers must then assume
     cluster scale."""
-    path = f"{sf_dir}/{name}.parquet"
-    try:
-        if os.path.isdir(path):
-            total = 0
-            for root, _dirs, files in os.walk(path):
-                for f in files:
-                    total += os.path.getsize(os.path.join(root, f))
-            return total
-        return os.path.getsize(path)
-    except OSError:
-        return None
+    stamps = _file_stamps(f"{sf_dir}/{name}.parquet")
+    return None if stamps is None else sum(size for _, _, size in stamps)
 
 
 def is_large_input(sf_dir: str, name: str = "events") -> bool:
@@ -93,6 +114,42 @@ def is_large_input(sf_dir: str, name: str = "events") -> bool:
     return size is None or size >= threshold
 
 
+# Session settings that change the schema Spark infers for a parquet table:
+# the four footer-type mappings, schema merging across a directory's files,
+# and the typing of its partition columns.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+# One catalog per process, shared by every session: the key holds all that
+# decides the inferred schema, and two callers racing on a miss both infer
+# the same schema.
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """spark.read.parquet(path), with the schema from the catalog when
+    this path, its files and the inference settings are unchanged."""
+    stamps = _file_stamps(path)
+    if stamps is None:
+        return spark.read.parquet(path)
+    key = (
+        os.path.abspath(path),
+        stamps,
+        tuple(spark.conf.get(c) for c in _INFERENCE_CONFS),
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table; normalizes events.ts to TIMESTAMP_NTZ.
 
@@ -100,8 +157,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     TIMESTAMP(NANOS) (which Spark can only read as a raw long, via
     spark.sql.legacy.parquet.nanosAsLong) or TIMESTAMP(MICROS,
     isAdjustedToUTC=false) (which Spark reads natively as TIMESTAMP_NTZ).
-    Branch on the type Spark actually inferred so both vintages normalize
-    to the same TIMESTAMP_NTZ column.
+    Branch on the type Spark actually inferred (the catalog keeps it for
+    later calls) so both vintages normalize to the same TIMESTAMP_NTZ
+    column.
 
     SIDE EFFECT: loading `events` sets spark.sql.legacy.parquet.nanosAsLong
     on the CALLER's session (the verify driver's session doesn't set it, and
@@ -113,7 +171,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # Runtime-settable; required to read TIMESTAMP(NANOS) columns even
         # when the caller's session (e.g. the verify driver's) didn't set it.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
         ts_type = df.schema["ts"].dataType.typeName()
         if ts_type in ("long", "bigint"):
             return df.withColumn("ts", F.expr(_NS_TO_NTZ))
@@ -123,4 +181,4 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # naive, matching DuckDB's naive TIMESTAMP view of the file.
             return df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
         return df  # already TIMESTAMP_NTZ
-    return spark.read.parquet(path)
+    return _read_parquet(spark, path)

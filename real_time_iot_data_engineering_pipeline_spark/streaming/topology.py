@@ -14,10 +14,11 @@ Structured Streaming queries over ONE file/Kafka source:
     dlq path:   parse -> validate -> keep invalid -> append DLQ files
 
 Two queries because the branches need independent sinks/checkpoints —
-exactly how Spark expresses topic fan-out; both share the source listing,
-and each is exactly-once through its own checkpoint.  The Mongo->Postgres
-hop disappears: the keyed sink IS the queryable table (sinks/catalog.py
-registers it for SQL access).
+exactly how Spark expresses topic fan-out; each is exactly-once through its
+own checkpoint.  They do not share a scan: each query has its own
+FileStreamSource, which lists, reads, parses and validates every file
+again.  The Mongo->Postgres hop disappears: the keyed sink IS the
+queryable table (sinks/catalog.py registers it for SQL access).
 
 Optional branches fan out from the same validated stream: a per-batch
 quality monitor (with_monitor) and the stream-stream attribution join

@@ -24,6 +24,7 @@ exactly as written, plus planted singletons/pairs for verdict coverage.
 from __future__ import annotations
 
 import itertools
+import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -33,6 +34,7 @@ from real_time_iot_data_engineering_pipeline_spark import registry
 from real_time_iot_data_engineering_pipeline_spark.queries.setjoin import TAU_NUM
 from real_time_iot_data_engineering_pipeline_spark.queries.text import (
     INCR_DELTA_MOD,
+    fixture_stores,
 )
 
 registry.load_all()
@@ -134,7 +136,16 @@ def test_setjoin_prefix_ceil_edges(spark, tmp_path):
     assert want, "ladder produced no expected pairs — test is vacuous"
 
 
-def test_cc_incremental_deep_chain_across_parities(spark, tmp_path):
+@pytest.fixture
+def store_owner(tmp_path):
+    """tmp_path, whose incremental stores (text._fixture_store, keyed on
+    the path) are removed after the test."""
+    yield tmp_path
+    for store in fixture_stores(str(tmp_path)):
+        shutil.rmtree(store, ignore_errors=True)
+
+
+def test_cc_incremental_deep_chain_across_parities(spark, store_owner):
     """A truncation chain t0..t4 (each dropping two trailing words) whose
     ids alternate store/delta parity: the standing store fragments into
     old-only components and the contracted merge must stitch them through
@@ -152,7 +163,7 @@ def test_cc_incremental_deep_chain_across_parities(spark, tmp_path):
     rows[2008] = " ".join(pair_words[:-1] + ["tail"])
     # isolated delta singleton
     rows[3004] = " ".join(_words("solo", 12))
-    sf = _write_docs(tmp_path, rows)
+    sf = _write_docs(store_owner, rows)
 
     inc = {
         r.doc_id: r

@@ -8,12 +8,16 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from real_time_iot_data_engineering_pipeline_spark.sinks.keyed_parquet import (
     KeyedParquetSink,
 )
+from real_time_iot_data_engineering_pipeline_spark.sources import tables
 
 
 def _rows(spark, data):
@@ -373,6 +377,47 @@ def test_unpartitioned_versions_carry_their_schema(spark, tmp_path, fragmented_w
         ), step
         if step == "upsert":
             assert sink.compact() == {"compacted": 1, "skipped": 0}
+
+
+# sources.load_table's schema catalog: like a sink version's
+# _sinkschema.json, it spares repeat reads of a fixture table the
+# schema-inference job.
+
+
+@pytest.fixture
+def empty_catalog(monkeypatch):
+    monkeypatch.setattr(tables, "_SCHEMAS", {})
+
+
+def test_repeat_load_table_launches_no_job(spark, sf_dir, tmp_path, empty_catalog):
+    shutil.copy(os.path.join(sf_dir, "orders.parquet"), tmp_path)
+    first, jobs = _jobs_launched(spark, lambda: tables.load_table(spark, str(tmp_path), "orders"))
+    assert jobs >= 1, "the first load infers the schema"
+    again, jobs = _jobs_launched(spark, lambda: tables.load_table(spark, str(tmp_path), "orders"))
+    assert jobs == 0, f"a repeat load of an unchanged file launched {jobs} job(s)"
+    assert again.schema == first.schema
+    assert again.count() == first.count()
+
+
+def test_rewritten_table_is_inferred_again(spark, tmp_path, empty_catalog):
+    path = str(tmp_path / "part.parquet")
+    pq.write_table(pa.table({"k": [1, 2, 3]}), path)
+    assert tables.load_table(spark, str(tmp_path), "part").columns == ["k"]
+    pq.write_table(pa.table({"k": [1, 2, 3], "name": ["a", "b", "c"]}), path)
+    df = tables.load_table(spark, str(tmp_path), "part")
+    assert df.columns == ["k", "name"]
+    assert sorted(tuple(r) for r in df.collect()) == [(1, "a"), (2, "b"), (3, "c")]
+
+
+def test_catalog_schema_equals_the_inferred_one(spark, sf_dir, empty_catalog):
+    """For every fixture table, a load through the catalog has exactly the
+    schema of the load that inferred it (events.ts normalization
+    included), and launches no job."""
+    for name in tables.TABLES:
+        inferred = tables.load_table(spark, sf_dir, name)
+        cached, jobs = _jobs_launched(spark, lambda name=name: tables.load_table(spark, sf_dir, name))
+        assert jobs == 0, name
+        assert cached.schema == inferred.schema, name
 
 
 def test_foreach_batch_skips_empty_epochs(spark, tmp_path):

@@ -23,6 +23,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import shutil
 import sys
 import tempfile
 import traceback
@@ -160,6 +161,8 @@ class Run:
 class RegistryPass:
     runs: dict[str, Run]
     cache_empty: bool
+    removed_stores: list[str]
+    leftover_stores: list[str]
 
 
 def run_registry_pass(spark, sf_dir: str, scratch: str) -> RegistryPass:
@@ -168,31 +171,38 @@ def run_registry_pass(spark, sf_dir: str, scratch: str) -> RegistryPass:
     # Path-keyed caches fill on a fixture's first call: the incremental
     # stores (text._fixture_store) and q_knn_classify's eval broadcast.
     # Fill them on both legs first so that neither leg counts the fill.
-    for d in (sf_dir, replica):
-        text.cc_standing_store(spark, d)
-        text.cc_band_store(spark, d)
-        registry.QUERIES["q_knn_classify"](spark, d)
+    # The replica's stores are keyed on its path, which no later session
+    # reuses, so they are removed when the pass ends.
     runs = {}
-    for name, fn in registry.QUERIES.items():
-        run = runs[name] = Run()
+    try:
+        for d in (sf_dir, replica):
+            text.cc_standing_store(spark, d)
+            text.cc_band_store(spark, d)
+            registry.QUERIES["q_knn_classify"](spark, d)
+        for name, fn in registry.QUERIES.items():
+            run = runs[name] = Run()
 
-        def build(fn=fn, run=run):
-            df = fn(spark, sf_dir)
-            run.plan = df._jdf.queryExecution().executedPlan().toString()
-            run.schema = df.schema
-            return df
+            def build(fn=fn, run=run):
+                df = fn(spark, sf_dir)
+                run.plan = df._jdf.queryExecution().executedPlan().toString()
+                run.schema = df.schema
+                return df
 
-        try:
-            run.frame, run.base = measure(spark, build)
-        except Exception:
-            run.error = traceback.format_exc()
-            continue
-        try:
-            _, run.scaled = measure(spark, lambda fn=fn: fn(spark, replica))
-        except Exception:
-            run.scaled_error = traceback.format_exc()
+            try:
+                run.frame, run.base = measure(spark, build)
+            except Exception:
+                run.error = traceback.format_exc()
+                continue
+            try:
+                _, run.scaled = measure(spark, lambda fn=fn: fn(spark, replica))
+            except Exception:
+                run.scaled_error = traceback.format_exc()
+    finally:
+        removed = text.fixture_stores(replica)
+        for store in removed:
+            shutil.rmtree(store, ignore_errors=True)
     cache_empty = spark._jsparkSession.sharedState().cacheManager().isEmpty()
-    return RegistryPass(runs, cache_empty)
+    return RegistryPass(runs, cache_empty, removed, text.fixture_stores(replica))
 
 
 def test_no_query_grows_superlinearly(registry_pass):
@@ -249,6 +259,17 @@ def test_pass_leaves_no_cached_data(registry_pass):
     with the plan; a bare persist() outlives the query and lets later
     calls in the session read its blocks instead of doing the work."""
     assert registry_pass.cache_empty
+
+
+def test_pass_removes_the_replica_stores(registry_pass):
+    """The incremental stores built for the xK replica do not outlive the
+    pass: each session's replica has a new path, so a kept store would
+    never be read again."""
+    assert {os.path.basename(os.path.dirname(p)) for p in registry_pass.removed_stores} == {
+        "spark_graft_cc_store",
+        "spark_graft_cc_bands",
+    }
+    assert registry_pass.leftover_stores == []
 
 
 def test_repeat_call_does_the_same_work(spark, sf_dir):
