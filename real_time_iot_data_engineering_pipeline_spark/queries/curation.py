@@ -34,6 +34,16 @@ from ..functions.rounding import (
     fround_sql,
 )
 from ..functions.tokenize import WS as _WS
+from ..functions.vectors import (
+    as_double_duck,
+    as_double_spark,
+    dot_duck,
+    dot_spark,
+    norm_duck,
+    norm_spark,
+    sqdist_duck,
+    sqdist_spark,
+)
 from ..registry import register
 from ..sources import load_table
 from .text import (
@@ -297,7 +307,6 @@ def q_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Semantic dedup (SemDeDup: cluster-scoped embedding near-dup removal)
 # ---------------------------------------------------------------------------
 
-DIM = 64
 N_CENTROIDS = 8  # seed floor; the effective k is max(8, ceil(N/250)), below
 # PER_CLUSTER target so pair work stays ~N*250 instead of N^2/k (the 10x
 # scale fixture measured 76 s with k pinned at 8 — sum(cluster_size^2) is
@@ -310,39 +319,17 @@ PER_CLUSTER = 250
 # p99.9 so the keep/drop branch is non-trivially exercised AND oracle-checked.
 SEMDEDUP_THRESH = 0.4
 
-_EMB_D_SPARK = "transform(embedding, x -> cast(x AS double))"
-# Unrolled codegen'd sums (r13): value-identical to the previous
-# aggregate(zip_with(...)) left folds (same add order; the fold seeded at
-# 0.0 and 0.0 + p0 == p0) but with no interpreted per-element lambda in
-# the hot path — see similarity.py's module-top note for the measurement.
-_NORM_SPARK = (
-    "sqrt(("
-    + " + ".join(
-        f"cast(embedding[{i}] AS double) * cast(embedding[{i}] AS double)"
-        for i in range(DIM)
-    )
-    + "))"
-)
-_NORM_DUCK = (
-    f"sqrt(list_sum(list_transform(generate_series(1, {DIM}), "
-    "i -> embedding[i]::DOUBLE * embedding[i]::DOUBLE)))"
-)
-_SEED_DIST_DUCK = f"""
-    list_sum(list_transform(generate_series(1, {DIM}),
-             i -> (c.emb[i] - s.semb[i]) * (c.emb[i] - s.semb[i])))
-"""
-
 
 @register(
     "q_semantic_dedup",
     oracle=f"""
     WITH c AS (
-        SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS emb,
-               {_NORM_DUCK} AS nrm
+        SELECT vec_id, {as_double_duck("embedding")} AS emb,
+               {norm_duck("embedding", cast=True)} AS nrm
         FROM embeddings
     ),
     s AS (
-        SELECT vec_id AS cid, list_transform(embedding, x -> x::DOUBLE) AS semb
+        SELECT vec_id AS cid, {as_double_duck("embedding")} AS semb
         FROM embeddings
         WHERE vec_id < (SELECT greatest({N_CENTROIDS},
                                         CAST(ceil(count(*) / {PER_CLUSTER}.0) AS BIGINT))
@@ -350,16 +337,14 @@ _SEED_DIST_DUCK = f"""
     ),
     a AS (
         SELECT c.vec_id, c.emb, c.nrm,
-               min(struct_pack(d := {_SEED_DIST_DUCK}, c := s.cid)).c AS cid
+               min(struct_pack(d := {sqdist_duck("c.emb", "s.semb")}, c := s.cid)).c AS cid
         FROM c, s
         GROUP BY c.vec_id, c.emb, c.nrm
     ),
     p AS (
         SELECT y.vec_id, count(*) AS c
         FROM a x JOIN a y ON x.cid = y.cid AND x.vec_id < y.vec_id
-        WHERE list_sum(list_transform(generate_series(1, {DIM}),
-                       i -> x.emb[i] * y.emb[i])) / (x.nrm * y.nrm)
-              >= {SEMDEDUP_THRESH}
+        WHERE {dot_duck("x.emb", "y.emb")} / (x.nrm * y.nrm) >= {SEMDEDUP_THRESH}
         GROUP BY y.vec_id
     )
     SELECT a.vec_id, CAST(a.cid AS INT) AS cluster_id,
@@ -385,14 +370,14 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     and is quadratic (25x on the 10x replica; SUPERLINEAR in
     tests/test_registry_pass.py).  Seeds broadcast for assignment (the
     corpus never shuffles to be scored); the self-join shuffles each side
-    once on cluster_id; cosine is a zip_with/aggregate dot product inside
-    codegen, accumulated in identical element order in both engines so
-    the threshold compare is bit-deterministic."""
+    once on cluster_id; cosine is an unrolled dot product inside codegen
+    (functions/vectors.py), accumulated in identical element order in
+    both engines so the threshold compare is bit-deterministic."""
     emb = load_table(spark, sf_dir, "embeddings")
     c = emb.select(
         "vec_id",
-        F.expr(_EMB_D_SPARK).alias("emb"),
-        F.expr(_NORM_SPARK).alias("nrm"),
+        F.expr(as_double_spark("embedding")).alias("emb"),
+        F.expr(norm_spark("embedding", cast=True)).alias("nrm"),
     )
     # Effective k = max(floor, ceil(N / PER_CLUSTER)), derived declaratively
     # (1-row broadcast, no driver collect) so cluster sizes stay bounded as
@@ -406,16 +391,12 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = (
         emb.join(F.broadcast(kdf))
         .filter(F.col("vec_id") < F.col("_k"))
-        .select(F.col("vec_id").alias("cid"), F.expr(_EMB_D_SPARK).alias("semb"))
-    )
-    dist = F.expr(
-        "("
-        + " + ".join(
-            f"(emb[{i}] - semb[{i}]) * (emb[{i}] - semb[{i}])"
-            for i in range(DIM)
+        .select(
+            F.col("vec_id").alias("cid"),
+            F.expr(as_double_spark("embedding")).alias("semb"),
         )
-        + ")"
     )
+    dist = F.expr(sqdist_spark("emb", "semb"))
     a = (
         c.crossJoin(F.broadcast(s))
         .select(
@@ -452,9 +433,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("emb").alias("y_emb"),
         F.col("nrm").alias("y_nrm"),
     )
-    cos = F.expr(
-        "(" + " + ".join(f"x_emb[{i}] * y_emb[{i}]" for i in range(DIM)) + ")"
-    ) / (F.col("x_nrm") * F.col("y_nrm"))
+    cos = F.expr(dot_spark("x_emb", "y_emb")) / (F.col("x_nrm") * F.col("y_nrm"))
     near = (
         x.join(y, (F.col("x_cid") == F.col("y_cid")) & (F.col("x_id") < F.col("y_id")))
         .filter(cos >= SEMDEDUP_THRESH)

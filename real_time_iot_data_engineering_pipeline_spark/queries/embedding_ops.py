@@ -16,10 +16,17 @@ from ..functions.rounding import (
     fround_guarded_sql,
     fround_sql,
 )
+from ..functions.vectors import (
+    DIM,
+    as_double_duck,
+    as_double_spark,
+    sqdist_duck,
+    sqdist_spark,
+    sum_duck,
+    sum_spark,
+)
 from ..registry import register
 from ..sources import load_table
-
-DIM = 64  # embeddings fixture dimension (similarity.py uses the same)
 
 
 @register(
@@ -27,7 +34,7 @@ DIM = 64  # embeddings fixture dimension (similarity.py uses the same)
     oracle=f"""
     WITH halves AS (
         SELECT label, vec_id % 2 AS half,
-               list_transform(embedding, x -> x::DOUBLE) AS emb
+               {as_double_duck("embedding")} AS emb
         FROM embeddings
     ),
     cents AS (
@@ -197,7 +204,7 @@ KMEANS_K = 8  # seeds = the vectors with vec_id < KMEANS_K
     "q_kmeans_step",
     oracle=f"""
     WITH vecs AS (
-        SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS emb
+        SELECT vec_id, {as_double_duck("embedding")} AS emb
         FROM embeddings
     ),
     cents AS (
@@ -206,11 +213,7 @@ KMEANS_K = 8  # seeds = the vectors with vec_id < KMEANS_K
     ),
     dists AS (
         SELECT v.vec_id, c.cid,
-               {fround_guarded_sql(
-                   "list_sum(list_transform(generate_series(1, " + str(DIM)
-                   + "), i -> (v.emb[i] - c.cent[i]) * (v.emb[i] - c.cent[i])))",
-                   9,
-               )} AS sqd
+               {fround_guarded_sql(sqdist_duck("v.emb", "c.cent"), 9)} AS sqd
         FROM vecs v, cents c
     ),
     assigned AS (
@@ -248,26 +251,13 @@ def q_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     through instead of hitting Spark's floor->LONG saturation
     (tests/test_hostile_embeddings.py runs this on float32-max rows)."""
     vecs = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.expr("transform(embedding, x -> cast(x AS double))").alias("emb")
+        "vec_id", F.expr(as_double_spark("embedding")).alias("emb")
     )
     cents = (
         vecs.filter(F.col("vec_id") < KMEANS_K)
         .select(F.col("vec_id").alias("cid"), F.col("emb").alias("cent"))
     )
-    # r13: unrolled codegen'd sum, value-identical to the previous
-    # aggregate(zip_with(...)) left fold (same add order; seed 0d + p0
-    # == p0) — no interpreted per-element lambda in the hot path.
-    sqd = fround_guarded(
-        F.expr(
-            "("
-            + " + ".join(
-                f"(emb[{i}] - cent[{i}]) * (emb[{i}] - cent[{i}])"
-                for i in range(DIM)
-            )
-            + ")"
-        ),
-        9,
-    )
+    sqd = fround_guarded(F.expr(sqdist_spark("emb", "cent")), 9)
     dists = vecs.crossJoin(F.broadcast(cents)).select(
         "vec_id", "cid", sqd.alias("sqd")
     )
@@ -296,7 +286,7 @@ def q_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH vecs AS (
         SELECT vec_id, label,
-               list_transform(embedding, x -> x::DOUBLE) AS emb
+               {as_double_duck("embedding")} AS emb
         FROM embeddings
     ),
     dims AS (
@@ -310,9 +300,7 @@ def q_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     dists AS (
         SELECT v.vec_id, v.label, c.c_label,
-               sqrt(list_sum(list_transform(generate_series(1, {DIM}),
-                   i -> (v.emb[i] - c.cent[i]) * (v.emb[i] - c.cent[i]))))
-                   AS d
+               sqrt({sqdist_duck("v.emb", "c.cent")}) AS d
         FROM vecs v, cents c
     ),
     ab AS (
@@ -352,7 +340,7 @@ def q_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
-        F.expr("transform(embedding, x -> cast(x AS double))").alias("emb"),
+        F.expr(as_double_spark("embedding")).alias("emb"),
     )
     dims = vecs.select(
         "label", F.posexplode("emb").alias("dim", "v")
@@ -365,16 +353,7 @@ def q_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cent")
         )
     )
-    d = F.sqrt(
-        F.expr(
-            "("
-            + " + ".join(
-                f"(emb[{i}] - cent[{i}]) * (emb[{i}] - cent[{i}])"
-                for i in range(DIM)
-            )
-            + ")"
-        )
-    )
+    d = F.sqrt(F.expr(sqdist_spark("emb", "cent")))
     dists = vecs.crossJoin(F.broadcast(cents)).select(
         "vec_id", "label", "c_label", d.alias("d")
     )
@@ -412,11 +391,11 @@ _V0 = 0.125  # 1 / sqrt(64)
     "q_power_iteration",
     oracle=f"""
     WITH emb AS (
-        SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS e
+        SELECT vec_id, {as_double_duck("embedding")} AS e
         FROM embeddings
     ),
     scored AS (
-        SELECT vec_id, e, list_sum(e) * {_V0} AS s FROM emb
+        SELECT vec_id, e, {sum_duck("e")} * {_V0} AS s FROM emb
     ),
     w AS (
         SELECT u.i AS dim,
@@ -447,24 +426,12 @@ def q_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     DIM x n_partitions rows, never a d x d matrix.  w is quantized
     (fround 6) BEFORE the norm on both engines so normalization cannot
     amplify summation-order ULPs."""
-    # r13: unrolled array build + sum (identical values, same add order as
-    # the 0D-seeded left fold) — no interpreted per-element lambdas.
+    # The array is built from literal-index casts and summed unrolled: no
+    # per-element lambda in the hot path.
     emb = load_table(spark, sf_dir, "embeddings").select(
-        F.expr(
-            "array("
-            + ", ".join(
-                f"cast(embedding[{i}] AS double)" for i in range(DIM)
-            )
-            + ")"
-        ).alias("e")
+        F.expr(as_double_spark("embedding", DIM)).alias("e")
     )
-    scored = emb.select(
-        "e",
-        (
-            F.expr("(" + " + ".join(f"e[{i}]" for i in range(DIM)) + ")")
-            * _V0
-        ).alias("s"),
-    )
+    scored = emb.select("e", (F.expr(sum_spark("e")) * _V0).alias("s"))
     w = (
         scored.select(F.posexplode("e").alias("dim", "x"), "s")
         .groupBy("dim")

@@ -4,11 +4,12 @@ IVF-style cell-pruned search (SURVEY.md §7.2 step 6; VERDICT r01 item 4).
 
 Design rules:
 
-- **JVM-side vector math wherever a float reaches the output.** Dot
-  products / norms are higher-order array expressions (zip_with +
-  aggregate) inside codegen; floats are cast to double BEFORE multiplying
-  so Spark and DuckDB accumulate identical doubles in identical element
-  order — hash-exactness demands order-identical summation.  The ONE
+- **JVM-side vector math wherever a float reaches the output.** Every
+  dot product, distance and norm comes from functions/vectors.py, in
+  Spark as an unrolled sum of literal-index array reads inside codegen
+  and in DuckDB as its list_reduce twin; floats are cast to double BEFORE
+  multiplying so both engines accumulate identical doubles in identical
+  element order — hash-exactness demands order-identical summation.  The ONE
   exception is q_knn_classify's scorer: its output carries labels and
   vote counts only (no floats), so the dense |test| x |corpus| matmul —
   the workload where interpreted codegen loses ~60x to vectorized C —
@@ -28,53 +29,26 @@ Design rules:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import fround, fround_sql
+from ..functions.vectors import (
+    DIM,
+    as_double_duck,
+    as_double_spark,
+    dot_duck,
+    dot_spark,
+    norm_duck,
+    norm_spark,
+    sqdist_duck,
+    sqdist_spark,
+)
 from ..registry import register
 from ..sources import load_table
 
-DIM = 64
 N_QUERIES = 10  # query batch: vec_id < 10
 K = 5
-
-# -- portable vector expressions (Spark) ------------------------------------
-# r13: every per-row dot / squared-distance / norm is an UNROLLED
-# left-associative sum of codegen'd array reads, not an
-# aggregate(zip_with(...)) higher-order fold — HOF lambdas evaluate per
-# element OUTSIDE whole-stage codegen, and r12 measured that interpreted
-# 64-double fold as the dominant per-candidate compute across the
-# embedding family (it forced the score-first reverts).  Value-identical:
-# the fold seeds at 0.0 and adds left-to-right, and 0.0 + p0 == p0, so the
-# unrolled p0 + p1 + ... performs the same additions in the same order.
-
-
-def _dot_sql(a: str, b: str, n: int = DIM, off: int = 0) -> str:
-    return (
-        "("
-        + " + ".join(f"{a}[{i}] * {b}[{i}]" for i in range(off, off + n))
-        + ")"
-    )
-
-
-def _sqdist_sql(a: str, b: str, n: int = DIM, off: int = 0) -> str:
-    return (
-        "("
-        + " + ".join(
-            f"({a}[{i}] - {b}[{i}]) * ({a}[{i}] - {b}[{i}])"
-            for i in range(off, off + n)
-        )
-        + ")"
-    )
-
-
-def _sqnorm_sql(v: str, n: int = DIM, off: int = 0) -> str:
-    return (
-        "("
-        + " + ".join(f"{v}[{i}] * {v}[{i}]" for i in range(off, off + n))
-        + ")"
-    )
 
 
 def _perturb_sql(dim: int) -> str:
@@ -93,37 +67,16 @@ def _perturb_sql(dim: int) -> str:
     )
 
 
-_EMB_D_SPARK = "transform(embedding, x -> cast(x AS double))"
-_NORM_SPARK = (
-    "sqrt(("
-    + " + ".join(
-        f"cast(embedding[{i}] AS double) * cast(embedding[{i}] AS double)"
-        for i in range(DIM)
-    )
-    + "))"
-)
-_DOT_SPARK = _dot_sql("q_emb", "c_emb")
-
-# -- portable vector expressions (DuckDB) -----------------------------------
-_NORM_DUCK = (
-    f"sqrt(list_sum(list_transform(generate_series(1, {DIM}), "
-    "i -> embedding[i]::DOUBLE * embedding[i]::DOUBLE)))"
-)
-_DOT_DUCK = (
-    f"list_sum(list_transform(generate_series(1, {DIM}), "
-    "i -> q.q_emb[i] * c.c_emb[i]))"
-)
-
 _QUERIES_DUCK = f"""
     SELECT vec_id AS query_id,
-           list_transform(embedding, x -> x::DOUBLE) AS q_emb,
-           {_NORM_DUCK} AS q_norm, label
+           {as_double_duck("embedding")} AS q_emb,
+           {norm_duck("embedding", cast=True)} AS q_norm, label
     FROM embeddings WHERE vec_id < {N_QUERIES}
 """
 _CORPUS_DUCK = f"""
     SELECT vec_id AS neighbor_id,
-           list_transform(embedding, x -> x::DOUBLE) AS c_emb,
-           {_NORM_DUCK} AS c_norm, label
+           {as_double_duck("embedding")} AS c_emb,
+           {norm_duck("embedding", cast=True)} AS c_norm, label
     FROM embeddings
 """
 
@@ -132,8 +85,8 @@ def _query_side(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
-        F.expr(_EMB_D_SPARK).alias("q_emb"),
-        F.expr(_NORM_SPARK).alias("q_norm"),
+        F.expr(as_double_spark("embedding")).alias("q_emb"),
+        F.expr(norm_spark("embedding", cast=True)).alias("q_norm"),
         "label",
     )
 
@@ -142,10 +95,15 @@ def _corpus_side(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return emb.select(
         F.col("vec_id").alias("neighbor_id"),
-        F.expr(_EMB_D_SPARK).alias("c_emb"),
-        F.expr(_NORM_SPARK).alias("c_norm"),
+        F.expr(as_double_spark("embedding")).alias("c_emb"),
+        F.expr(norm_spark("embedding", cast=True)).alias("c_norm"),
         "label",
     )
+
+
+def _qc_cos() -> Column:
+    """Cosine of a _query_side row against a _corpus_side row."""
+    return F.expr(dot_spark("q_emb", "c_emb")) / (F.col("q_norm") * F.col("c_norm"))
 
 
 def _topk_over_candidates(scored: DataFrame, k: int) -> DataFrame:
@@ -176,7 +134,7 @@ def _topk_over_candidates(scored: DataFrame, k: int) -> DataFrame:
     c AS ({_CORPUS_DUCK}),
     scored AS (
         SELECT q.query_id, c.neighbor_id,
-               {_DOT_DUCK} / (q.q_norm * c.c_norm) AS cos_sim
+               {dot_duck("q.q_emb", "c.c_emb")} / (q.q_norm * c.c_norm) AS cos_sim
         FROM q, c
         WHERE c.neighbor_id <> q.query_id
     ),
@@ -207,9 +165,7 @@ def q_embed_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "neighbor_id",
-            (F.expr(_DOT_SPARK) / (F.col("q_norm") * F.col("c_norm"))).alias(
-                "cos_sim"
-            ),
+            _qc_cos().alias("cos_sim"),
         )
     )
     return _topk_over_candidates(scored, K)
@@ -311,7 +267,7 @@ _SIG_DUCK_ND = _sig_duck(_SIGNS_ND)
     ),
     scored AS (
         SELECT query_id, neighbor_id,
-               {_DOT_DUCK.replace("q.q_emb", "q_emb").replace("c.c_emb", "c_emb")}
+               {dot_duck("q_emb", "c_emb")}
                    / (q_norm * c_norm) AS cos_sim
         FROM cand
     ),
@@ -358,14 +314,16 @@ def q_embed_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "band_key", F.expr(f"substr(sig, band * {_BAND_BITS} + 1, {_BAND_BITS})")
     )
     # Dedup-THEN-score, deliberately NOT the _minhash_pairs r12 move
-    # (score-before-dedup): the score here is an interpreted higher-order
-    # 64-double dot (zip_with + aggregate lambdas run OUTSIDE codegen),
-    # and a true neighbor collides in several bands, so scoring per
-    # band-copy multiplies the dominant per-candidate compute.  Measured
-    # interleaved old/new at the 10x fixture: 2.60/2.86 s dedup-first vs
-    # 4.11 s score-first (guide §1.2: an expensive per-row op feeds back
-    # into the algorithm choice).  SimHash/MinHash pair queries keep
-    # score-first because their scores are cheap codegen'd integer ops.
+    # (score-before-dedup): the score is a 64-double dot and a true
+    # neighbor collides in several bands, so scoring per band-copy
+    # multiplies the dominant per-candidate compute.  Measured in r12,
+    # when the dot was an interpreted zip_with/aggregate fold, interleaved
+    # old/new at the 10x fixture: 2.60/2.86 s dedup-first vs 4.11 s
+    # score-first (guide §1.2: an expensive per-row op feeds back into
+    # the algorithm choice).  The dot has been an unrolled codegen'd sum
+    # since r13; q_embed_near_dup re-measured the same order then and
+    # kept it.  SimHash/MinHash pair queries keep score-first because
+    # their scores are cheap codegen'd integer ops.
     cand = (
         cb.join(F.broadcast(qb.drop("sig")), ["band", "band_key"])
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -374,7 +332,7 @@ def q_embed_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = cand.select(
         "query_id",
         "neighbor_id",
-        (F.expr(_DOT_SPARK) / (F.col("q_norm") * F.col("c_norm"))).alias("cos_sim"),
+        _qc_cos().alias("cos_sim"),
     )
     return _topk_over_candidates(scored, K)
 
@@ -413,8 +371,8 @@ def _near_dup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH corpus AS ({_ND_CORPUS_DUCK}),
     c0 AS (
         SELECT vec_id AS neighbor_id,
-               list_transform(embedding, x -> x::DOUBLE) AS c_emb,
-               {_NORM_DUCK} AS c_norm
+               {as_double_duck("embedding")} AS c_emb,
+               {norm_duck("embedding", cast=True)} AS c_norm
         FROM corpus
     ),
     cs AS (
@@ -436,8 +394,7 @@ def _near_dup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     scored AS (
         SELECT id_a, id_b,
-               list_sum(list_transform(generate_series(1, {DIM}),
-                        i -> emb_a[i] * emb_b[i])) / (norm_a * norm_b) AS cos_sim
+               {dot_duck("emb_a", "emb_b")} / (norm_a * norm_b) AS cos_sim
         FROM cand
     )
     SELECT id_a, id_b, {fround_sql("cos_sim")} AS cos_sim
@@ -461,8 +418,8 @@ def q_embed_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding rides the join once; norms are precomputed per row."""
     c = _near_dup_corpus(spark, sf_dir).select(
         F.col("vec_id").alias("neighbor_id"),
-        F.expr(_EMB_D_SPARK).alias("c_emb"),
-        F.expr(_NORM_SPARK).alias("c_norm"),
+        F.expr(as_double_spark("embedding")).alias("c_emb"),
+        F.expr(norm_spark("embedding", cast=True)).alias("c_norm"),
     )
     sigged = (
         c.withColumnRenamed("c_emb", "emb_d")
@@ -503,7 +460,7 @@ def q_embed_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("id_a") < F.col("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    dot = F.expr(_dot_sql("emb_a", "emb_b"))
+    dot = F.expr(dot_spark("emb_a", "emb_b"))
     return (
         cand.select(
             "id_a",
@@ -522,7 +479,7 @@ def q_embed_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     c AS ({_CORPUS_DUCK}),
     scored AS (
         SELECT q.query_id, c.neighbor_id,
-               {_DOT_DUCK} / (q.q_norm * c.c_norm) AS cos_sim
+               {dot_duck("q.q_emb", "c.c_emb")} / (q.q_norm * c.c_norm) AS cos_sim
         FROM q JOIN c ON q.label = c.label
         WHERE c.neighbor_id <> q.query_id
     ),
@@ -556,9 +513,7 @@ def q_embed_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "neighbor_id",
-            (F.expr(_DOT_SPARK) / (F.col("q_norm") * F.col("c_norm"))).alias(
-                "cos_sim"
-            ),
+            _qc_cos().alias("cos_sim"),
         )
     )
     return _topk_over_candidates(scored, K)
@@ -570,27 +525,21 @@ def q_embed_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 N_CENTROIDS = 8  # seeds: vec_id < 8 (deterministic, like the query batch)
 
-_SEED_DIST_DUCK = f"""
-    list_sum(list_transform(generate_series(1, {DIM}),
-             i -> (c.emb[i] - s.semb[i]) * (c.emb[i] - s.semb[i])))
-"""
-
-
 @register(
     "q_embed_centroids",
     oracle=f"""
     WITH c AS (
-        SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS emb
+        SELECT vec_id, {as_double_duck("embedding")} AS emb
         FROM embeddings
     ),
     s AS (
         SELECT vec_id AS cluster_id,
-               list_transform(embedding, x -> x::DOUBLE) AS semb
+               {as_double_duck("embedding")} AS semb
         FROM embeddings WHERE vec_id < {N_CENTROIDS}
     ),
     assign AS (
         SELECT c.vec_id,
-               min(struct_pack(d := {_SEED_DIST_DUCK}, c := s.cluster_id)).c
+               min(struct_pack(d := {sqdist_duck("c.emb", "s.semb")}, c := s.cluster_id)).c
                    AS cluster_id
         FROM c, s
         GROUP BY c.vec_id
@@ -625,11 +574,12 @@ def q_embed_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid update is a (cluster, dim)-keyed partial agg — 64x#clusters
     output rows.  Further iterations chain the same two steps."""
     emb = load_table(spark, sf_dir, "embeddings")
-    c = emb.select("vec_id", F.expr(_EMB_D_SPARK).alias("emb"))
+    c = emb.select("vec_id", F.expr(as_double_spark("embedding")).alias("emb"))
     s = emb.filter(F.col("vec_id") < N_CENTROIDS).select(
-        F.col("vec_id").alias("cluster_id"), F.expr(_EMB_D_SPARK).alias("semb")
+        F.col("vec_id").alias("cluster_id"),
+        F.expr(as_double_spark("embedding")).alias("semb"),
     )
-    dist = F.expr(_sqdist_sql("emb", "semb"))
+    dist = F.expr(sqdist_spark("emb", "semb"))
     assign = (
         c.crossJoin(F.broadcast(s))
         .select("vec_id", "emb", F.struct(dist.alias("d"), F.col("cluster_id").alias("c")).alias("dc"))
@@ -705,14 +655,14 @@ def _decon_sides(spark: SparkSession, sf_dir: str):
     eval0 AS ({_DECON_EVAL_DUCK}),
     t0 AS (
         SELECT vec_id AS train_id,
-               list_transform(embedding, x -> x::DOUBLE) AS t_emb,
-               {_NORM_DUCK} AS t_norm
+               {as_double_duck("embedding")} AS t_emb,
+               {norm_duck("embedding", cast=True)} AS t_norm
         FROM train0
     ),
     e0 AS (
         SELECT vec_id AS eval_id,
-               list_transform(embedding, x -> x::DOUBLE) AS e_emb,
-               {_NORM_DUCK} AS e_norm
+               {as_double_duck("embedding")} AS e_emb,
+               {norm_duck("embedding", cast=True)} AS e_norm
         FROM eval0
     ),
     ts AS (
@@ -741,10 +691,8 @@ def _decon_sides(spark: SparkSession, sf_dir: str):
     ),
     scored AS (
         SELECT train_id, eval_id,
-               {fround_sql(
-                   f"list_sum(list_transform(generate_series(1, {DIM}), "
-                   "i -> t_emb[i] * e_emb[i])) / (t_norm * e_norm)"
-               )} AS cos_sim
+               {fround_sql(f"{dot_duck('t_emb', 'e_emb')} / (t_norm * e_norm)")}
+                   AS cos_sim
         FROM cand
     ),
     flagged AS (
@@ -777,13 +725,13 @@ def q_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     train, eval_ = _decon_sides(spark, sf_dir)
     t = train.select(
         F.col("vec_id").alias("train_id"),
-        F.expr(_EMB_D_SPARK).alias("emb_d"),
-        F.expr(_NORM_SPARK).alias("t_norm"),
+        F.expr(as_double_spark("embedding")).alias("emb_d"),
+        F.expr(norm_spark("embedding", cast=True)).alias("t_norm"),
     ).withColumn("sig", F.expr(_SIG_SPARK_ND)).withColumnRenamed("emb_d", "t_emb")
     e = eval_.select(
         F.col("vec_id").alias("eval_id"),
-        F.expr(_EMB_D_SPARK).alias("emb_d"),
-        F.expr(_NORM_SPARK).alias("e_norm"),
+        F.expr(as_double_spark("embedding")).alias("emb_d"),
+        F.expr(norm_spark("embedding", cast=True)).alias("e_norm"),
     ).withColumn("sig", F.expr(_SIG_SPARK_ND)).withColumnRenamed("emb_d", "e_emb")
     band = F.explode(F.sequence(F.lit(0), F.lit(N_BANDS - 1))).alias("band")
     key = F.expr(f"substr(sig, band * {_BAND_BITS_ND} + 1, {_BAND_BITS_ND})")
@@ -794,16 +742,16 @@ def q_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "band_key", key
     )
     # Dedup-THEN-score, deliberately NOT the _minhash_pairs r12 move
-    # (score-before-dedup): the cosine is an interpreted higher-order
-    # 64-double dot, and a contaminated train doc collides with its eval
-    # twin in several bands, so scoring per band-copy multiplies the
-    # dominant compute — measured interleaved old/new at the 10x
+    # (score-before-dedup): the cosine is a 64-double dot (an interpreted
+    # fold when measured in r12), and a contaminated train doc collides
+    # with its eval twin in several bands, so scoring per band-copy
+    # multiplies the dominant compute — measured interleaved old/new at the 10x
     # fixture: 5.35/6.96 s dedup-first vs 7.79 s score-first.  The
     # integer-scored SimHash/MinHash pair queries keep score-first.
     cand = tb.join(F.broadcast(eb), ["band", "band_key"]).dropDuplicates(
         ["train_id", "eval_id"]
     )
-    dot = F.expr(_dot_sql("t_emb", "e_emb"))
+    dot = F.expr(dot_spark("t_emb", "e_emb"))
     scored = cand.select(
         "train_id",
         "eval_id",
@@ -911,7 +859,7 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle, so codes are bitwise-identical across engines and the
     hash check is exact (no tolerance)."""
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.expr(_EMB_D_SPARK).alias("emb")
+        "vec_id", F.expr(as_double_spark("embedding")).alias("emb")
     )
     stats = (
         emb.select(F.posexplode("emb").alias("pos", "val"))
@@ -958,7 +906,7 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored AS (
         SELECT q.query_id, q.label AS q_label,
                c.neighbor_id, c.label AS c_label,
-               {_DOT_DUCK} / (q.q_norm * c.c_norm) AS cos_sim
+               {dot_duck("q.q_emb", "c.c_emb")} / (q.q_norm * c.c_norm) AS cos_sim
         FROM q, c
         WHERE c.neighbor_id <> q.query_id
     ),
@@ -1019,9 +967,7 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_label",
             "neighbor_id",
             "c_label",
-            (F.expr(_DOT_SPARK) / (F.col("q_norm") * F.col("c_norm"))).alias(
-                "cos_sim"
-            ),
+            _qc_cos().alias("cos_sim"),
         )
     )
     pos = _topk_over_candidates(
@@ -1066,14 +1012,14 @@ _KNN_CLS_BC_CACHE: dict[tuple[str, str], object] = {}
 
 _CLS_TEST_DUCK = f"""
     SELECT vec_id AS query_id,
-           list_transform(embedding, x -> x::DOUBLE) AS q_emb,
-           {_NORM_DUCK} AS q_norm, label
+           {as_double_duck("embedding")} AS q_emb,
+           {norm_duck("embedding", cast=True)} AS q_norm, label
     FROM embeddings WHERE vec_id % 10 = 0 AND vec_id < {KNN_CLS_MAX_ID}
 """
 _CLS_TRAIN_DUCK = f"""
     SELECT vec_id AS neighbor_id,
-           list_transform(embedding, x -> x::DOUBLE) AS c_emb,
-           {_NORM_DUCK} AS c_norm, label
+           {as_double_duck("embedding")} AS c_emb,
+           {norm_duck("embedding", cast=True)} AS c_norm, label
     FROM embeddings WHERE NOT (vec_id % 10 = 0 AND vec_id < {KNN_CLS_MAX_ID})
 """
 
@@ -1086,7 +1032,9 @@ _CLS_TRAIN_DUCK = f"""
     scored AS (
         SELECT q.query_id, q.label AS true_label,
                c.label AS neighbor_label,
-               {fround_sql(f"{_DOT_DUCK} / (q.q_norm * c.c_norm)", 9)} AS cos_sim,
+               {fround_sql(
+                   f"{dot_duck('q.q_emb', 'c.c_emb')} / (q.q_norm * c.c_norm)", 9
+               )} AS cos_sim,
                c.neighbor_id
         FROM q, c
     ),
@@ -1348,27 +1296,23 @@ PQ_CODES = 16  # codebook entries per block (4-bit codes)
 
 
 def _pq_dist_duck(b: int) -> str:
-    return (
-        f"list_sum(list_transform(generate_series(1, {PQ_SUB}), "
-        f"i -> (v.emb[{b * PQ_SUB} + i] - s.emb[{b * PQ_SUB} + i]) "
-        f"* (v.emb[{b * PQ_SUB} + i] - s.emb[{b * PQ_SUB} + i])))"
-    )
+    return sqdist_duck("v.emb", "s.emb", PQ_SUB, b * PQ_SUB)
 
 
 def _pq_dist_spark(b: int) -> str:
-    return _sqdist_sql("emb", "s_emb", n=PQ_SUB, off=b * PQ_SUB)
+    return sqdist_spark("emb", "s_emb", PQ_SUB, b * PQ_SUB)
 
 
 @register(
     "q_pq_codes",
     oracle=f"""
     WITH v AS (
-        SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS emb
+        SELECT vec_id, {as_double_duck("embedding")} AS emb
         FROM embeddings
     ),
     s AS (
         SELECT vec_id AS seed_id,
-               list_transform(embedding, x -> x::DOUBLE) AS emb
+               {as_double_duck("embedding")} AS emb
         FROM embeddings WHERE vec_id < {PQ_CODES}
     ),
     scored AS (
@@ -1413,11 +1357,11 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines, so the argmin needs no rounding guard."""
     emb = load_table(spark, sf_dir, "embeddings")
     v = emb.select(
-        "vec_id", F.expr(_EMB_D_SPARK).alias("emb")
+        "vec_id", F.expr(as_double_spark("embedding")).alias("emb")
     )
     s = emb.filter(F.col("vec_id") < PQ_CODES).select(
         F.col("vec_id").alias("seed_id"),
-        F.expr(_EMB_D_SPARK).alias("s_emb"),
+        F.expr(as_double_spark("embedding")).alias("s_emb"),
     )
     scored = v.crossJoin(F.broadcast(s)).select(
         "vec_id",
@@ -1461,7 +1405,7 @@ OUTLIER_Z = 2.0
     oracle=f"""
     WITH c AS (
         SELECT vec_id, label,
-               list_transform(embedding, x -> x::DOUBLE) AS emb
+               {as_double_duck("embedding")} AS emb
         FROM embeddings
     ),
     cent_dim AS (
@@ -1475,11 +1419,8 @@ OUTLIER_Z = 2.0
     ),
     scored AS (
         SELECT vec_id, c.label,
-               list_sum(list_transform(generate_series(1, {DIM}),
-                        i -> emb[i] * cemb[i]))
-               / (sqrt(list_sum(list_transform(emb, x -> x * x)))
-                  * sqrt(list_sum(list_transform(cemb, x -> x * x))))
-                   AS cos_sim
+               {dot_duck("emb", "cemb")}
+               / ({norm_duck("emb")} * {norm_duck("cemb")}) AS cos_sim
         FROM c JOIN cent USING (label)
     ),
     st AS (
@@ -1510,11 +1451,18 @@ def q_embed_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregate onto the labels domain and broadcast back again.
     Two broadcast joins, zero data-proportional shuffles.  The outlier
     predicate compares the 6dp-QUANTIZED z, so dimension-sum ULP
-    differences between engines cannot flip membership."""
+    differences between engines cannot flip membership.
+
+    The scored corpus is one eager localCheckpoint: it feeds the z
+    statistics and the final join.  Composed lazily, each consumer
+    re-scored the corpus, and the final stage inlined the 64-term cosine
+    into its filter and both outputs — a 65,479-byte method that Janino
+    rejects with ANSI on ("Code grows beyond 64 KB"), so that stage fell
+    back to non-whole-stage execution (tests/test_composed.py)."""
     c = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
-        F.expr("transform(embedding, x -> cast(x AS double))").alias("emb"),
+        F.expr(as_double_spark("embedding")).alias("emb"),
     )
     cent = (
         c.select("label", F.posexplode("emb").alias("i", "v"))
@@ -1527,12 +1475,13 @@ def q_embed_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cemb")
         )
     )
-    dot = F.expr(_dot_sql("emb", "cemb"))
-    norm = lambda col: F.sqrt(F.expr(_sqnorm_sql(col)))
-    scored = c.join(F.broadcast(cent), "label").select(
-        "vec_id",
-        "label",
-        (dot / (norm("emb") * norm("cemb"))).alias("cos_sim"),
+    cos = F.expr(dot_spark("emb", "cemb")) / (
+        F.expr(norm_spark("emb")) * F.expr(norm_spark("cemb"))
+    )
+    scored = (
+        c.join(F.broadcast(cent), "label")
+        .select("vec_id", "label", cos.alias("cos_sim"))
+        .localCheckpoint(eager=True)
     )
     st = scored.groupBy("label").agg(
         F.avg("cos_sim").alias("mu"),
@@ -1557,24 +1506,6 @@ def q_embed_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 HALF_DIM = DIM // 2
-
-_NORM_H_DUCK = (
-    f"sqrt(list_sum(list_transform(generate_series(1, {HALF_DIM}), "
-    "i -> embedding[i]::DOUBLE * embedding[i]::DOUBLE)))"
-)
-_DOT_H_DUCK = (
-    f"list_sum(list_transform(generate_series(1, {HALF_DIM}), "
-    "i -> q.q_emb[i] * c.c_emb[i]))"
-)
-_NORM_H_SPARK = (
-    "sqrt(("
-    + " + ".join(
-        f"cast(embedding[{i}] AS double) * cast(embedding[{i}] AS double)"
-        for i in range(HALF_DIM)
-    )
-    + "))"
-)
-_DOT_H_SPARK = _dot_sql("q_emb", "c_emb", n=HALF_DIM)
 
 
 def _top1_agreement(
@@ -1624,20 +1555,22 @@ def _top1_agreement(
     oracle=f"""
     WITH q AS (
         SELECT vec_id AS query_id,
-               list_transform(embedding, x -> x::DOUBLE) AS q_emb,
-               {_NORM_DUCK} AS q_norm, {_NORM_H_DUCK} AS q_norm_h
+               {as_double_duck("embedding")} AS q_emb,
+               {norm_duck("embedding", cast=True)} AS q_norm,
+               {norm_duck("embedding", HALF_DIM, cast=True)} AS q_norm_h
         FROM embeddings WHERE vec_id < {N_QUERIES}
     ),
     c AS (
         SELECT vec_id AS neighbor_id,
-               list_transform(embedding, x -> x::DOUBLE) AS c_emb,
-               {_NORM_DUCK} AS c_norm, {_NORM_H_DUCK} AS c_norm_h
+               {as_double_duck("embedding")} AS c_emb,
+               {norm_duck("embedding", cast=True)} AS c_norm,
+               {norm_duck("embedding", HALF_DIM, cast=True)} AS c_norm_h
         FROM embeddings
     ),
     scored AS (
         SELECT q.query_id, c.neighbor_id,
-               {_DOT_DUCK} / (q.q_norm * c.c_norm) AS cos_full,
-               {_DOT_H_DUCK} / (q.q_norm_h * c.c_norm_h) AS cos_half
+               {dot_duck("q.q_emb", "c.c_emb")} / (q.q_norm * c.c_norm) AS cos_full,
+               {dot_duck("q.q_emb", "c.c_emb", HALF_DIM)} / (q.q_norm_h * c.c_norm_h) AS cos_half
         FROM q, c WHERE c.neighbor_id <> q.query_id
     ),
     ranked AS (
@@ -1681,16 +1614,16 @@ def q_embed_truncation_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") < N_QUERIES)
         .select(
             F.col("vec_id").alias("query_id"),
-            F.expr(_EMB_D_SPARK).alias("q_emb"),
-            F.expr(_NORM_SPARK).alias("q_norm"),
-            F.expr(_NORM_H_SPARK).alias("q_norm_h"),
+            F.expr(as_double_spark("embedding")).alias("q_emb"),
+            F.expr(norm_spark("embedding", cast=True)).alias("q_norm"),
+            F.expr(norm_spark("embedding", HALF_DIM, cast=True)).alias("q_norm_h"),
         )
     )
     c = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("neighbor_id"),
-        F.expr(_EMB_D_SPARK).alias("c_emb"),
-        F.expr(_NORM_SPARK).alias("c_norm"),
-        F.expr(_NORM_H_SPARK).alias("c_norm_h"),
+        F.expr(as_double_spark("embedding")).alias("c_emb"),
+        F.expr(norm_spark("embedding", cast=True)).alias("c_norm"),
+        F.expr(norm_spark("embedding", HALF_DIM, cast=True)).alias("c_norm_h"),
     )
     scored = (
         c.crossJoin(F.broadcast(q))
@@ -1698,11 +1631,9 @@ def q_embed_truncation_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "neighbor_id",
-            (F.expr(_DOT_SPARK) / (F.col("q_norm") * F.col("c_norm"))).alias(
-                "cos_full"
-            ),
+            _qc_cos().alias("cos_full"),
             (
-                F.expr(_DOT_H_SPARK)
+                F.expr(dot_spark("q_emb", "c_emb", HALF_DIM))
                 / (F.col("q_norm_h") * F.col("c_norm_h"))
             ).alias("cos_half"),
         )
@@ -1770,21 +1701,21 @@ _BQ_HAMMING_DUCK = " + ".join(
     oracle=f"""
     WITH q AS (
         SELECT vec_id AS query_id,
-               list_transform(embedding, x -> x::DOUBLE) AS q_emb,
-               {_NORM_DUCK} AS q_norm,
+               {as_double_duck("embedding")} AS q_emb,
+               {norm_duck("embedding", cast=True)} AS q_norm,
                {_bq_bands_duck("embedding").replace("sb", "qb")}
         FROM embeddings WHERE vec_id < {N_QUERIES}
     ),
     c AS (
         SELECT vec_id AS neighbor_id,
-               list_transform(embedding, x -> x::DOUBLE) AS c_emb,
-               {_NORM_DUCK} AS c_norm,
+               {as_double_duck("embedding")} AS c_emb,
+               {norm_duck("embedding", cast=True)} AS c_norm,
                {_bq_bands_duck("embedding").replace("sb", "cb")}
         FROM embeddings
     ),
     scored AS (
         SELECT q.query_id, c.neighbor_id,
-               {_DOT_DUCK} / (q.q_norm * c.c_norm) AS cos_full,
+               {dot_duck("q.q_emb", "c.c_emb")} / (q.q_norm * c.c_norm) AS cos_full,
                CAST({_BQ_HAMMING_DUCK} AS BIGINT) AS ham
         FROM q, c WHERE c.neighbor_id <> q.query_id
     ),
@@ -1845,8 +1776,8 @@ def q_embed_binary_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") < N_QUERIES)
         .select(
             F.col("vec_id").alias("query_id"),
-            F.expr(_EMB_D_SPARK).alias("q_emb"),
-            F.expr(_NORM_SPARK).alias("q_norm"),
+            F.expr(as_double_spark("embedding")).alias("q_emb"),
+            F.expr(norm_spark("embedding", cast=True)).alias("q_norm"),
         )
         .select("query_id", "q_emb", "q_norm", *sign_bands_q)
     )
@@ -1854,8 +1785,8 @@ def q_embed_binary_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "embeddings")
         .select(
             F.col("vec_id").alias("neighbor_id"),
-            F.expr(_EMB_D_SPARK).alias("c_emb"),
-            F.expr(_NORM_SPARK).alias("c_norm"),
+            F.expr(as_double_spark("embedding")).alias("c_emb"),
+            F.expr(norm_spark("embedding", cast=True)).alias("c_norm"),
         )
         .select("neighbor_id", "c_emb", "c_norm", *sign_bands_c)
     )
@@ -1868,9 +1799,7 @@ def q_embed_binary_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "neighbor_id",
-            (F.expr(_DOT_SPARK) / (F.col("q_norm") * F.col("c_norm"))).alias(
-                "cos_full"
-            ),
+            _qc_cos().alias("cos_full"),
             ham.cast("long").alias("ham"),
         )
     )
@@ -1904,17 +1833,17 @@ def q_embed_binary_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_cluster_purity",
     oracle=f"""
     WITH c AS (
-        SELECT vec_id, label, list_transform(embedding, x -> x::DOUBLE) AS emb
+        SELECT vec_id, label, {as_double_duck("embedding")} AS emb
         FROM embeddings
     ),
     s AS (
         SELECT vec_id AS cluster_id,
-               list_transform(embedding, x -> x::DOUBLE) AS semb
+               {as_double_duck("embedding")} AS semb
         FROM embeddings WHERE vec_id < {N_CENTROIDS}
     ),
     assign AS (
         SELECT c.vec_id, c.label,
-               min(struct_pack(d := {_SEED_DIST_DUCK}, c := s.cluster_id)).c
+               min(struct_pack(d := {sqdist_duck("c.emb", "s.semb")}, c := s.cluster_id)).c
                    AS cluster_id
         FROM c, s
         GROUP BY c.vec_id, c.label
@@ -1964,11 +1893,12 @@ def q_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the label histogram is a (cluster, label)-keyed partial agg and the
     ranking windows run over that bounded histogram, never vectors."""
     emb = load_table(spark, sf_dir, "embeddings")
-    c = emb.select("vec_id", "label", F.expr(_EMB_D_SPARK).alias("emb"))
+    c = emb.select("vec_id", "label", F.expr(as_double_spark("embedding")).alias("emb"))
     s = emb.filter(F.col("vec_id") < N_CENTROIDS).select(
-        F.col("vec_id").alias("cluster_id"), F.expr(_EMB_D_SPARK).alias("semb")
+        F.col("vec_id").alias("cluster_id"),
+        F.expr(as_double_spark("embedding")).alias("semb"),
     )
-    dist = F.expr(_sqdist_sql("emb", "semb"))
+    dist = F.expr(sqdist_spark("emb", "semb"))
     assign = (
         c.crossJoin(F.broadcast(s))
         .select(
@@ -2024,8 +1954,8 @@ def q_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH c AS (
         SELECT vec_id,
-               list_transform(embedding, x -> x::DOUBLE) AS emb,
-               {_NORM_DUCK} AS nrm
+               {as_double_duck("embedding")} AS emb,
+               {norm_duck("embedding", cast=True)} AS nrm
         FROM embeddings
     ),
     dims AS (
@@ -2063,8 +1993,8 @@ def q_embed_anisotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     the calibration oracle for any sampled anisotropy estimate."""
     c = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
-        F.expr(_EMB_D_SPARK).alias("emb"),
-        F.expr(_NORM_SPARK).alias("nrm"),
+        F.expr(as_double_spark("embedding")).alias("emb"),
+        F.expr(norm_spark("embedding", cast=True)).alias("nrm"),
     )
     dims = (
         c.select(F.posexplode(F.expr("transform(emb, x -> x / nrm)")).alias("dim", "u"))
@@ -2146,8 +2076,8 @@ def _inc_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH corpus AS ({_INC_CORPUS_DUCK}),
     c0 AS (
         SELECT vec_id,
-               list_transform(embedding, x -> x::DOUBLE) AS emb_d,
-               {_NORM_DUCK} AS nrm
+               {as_double_duck("embedding")} AS emb_d,
+               {norm_duck("embedding", cast=True)} AS nrm
         FROM corpus
     ),
     cs AS (
@@ -2169,8 +2099,7 @@ def _inc_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     scored AS (
         SELECT vec_id, other_id,
-               list_sum(list_transform(generate_series(1, {DIM}),
-                        i -> emb_a[i] * emb_b[i])) / (norm_a * norm_b) AS cos_sim
+               {dot_duck("emb_a", "emb_b")} / (norm_a * norm_b) AS cos_sim
         FROM cand
     ),
     matches AS (
@@ -2215,8 +2144,8 @@ def q_embed_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates."""
     c = _inc_corpus(spark, sf_dir).select(
         "vec_id",
-        F.expr(_EMB_D_SPARK).alias("emb_d"),
-        F.expr(_NORM_SPARK).alias("nrm"),
+        F.expr(as_double_spark("embedding")).alias("emb_d"),
+        F.expr(norm_spark("embedding", cast=True)).alias("nrm"),
     )
     # The signature table fans into the delta probe leg, the store leg,
     # and the all-delta verdict spine; lazily composed, each leg re-ran
@@ -2246,9 +2175,9 @@ def q_embed_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         "band_key",
     )
     # Dedup-THEN-score, deliberately NOT the _minhash_pairs r12 move
-    # (score-before-dedup): the cosine is an interpreted higher-order
-    # 64-double dot and a delta vector's true twin collides in several
-    # bands, so scoring per band-copy multiplies the dominant compute —
+    # (score-before-dedup): the cosine is a 64-double dot (an interpreted
+    # fold when measured in r12) and a delta vector's true twin collides
+    # in several bands, so scoring per band-copy multiplies the dominant compute —
     # measured interleaved old/new at the 10x fixture: 6.70/7.91 s
     # dedup-first vs 8.12 s score-first.  The integer-scored
     # SimHash/MinHash pair queries keep score-first.
@@ -2257,7 +2186,7 @@ def q_embed_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") != F.col("other_id"))
         .dropDuplicates(["vec_id", "other_id"])
     )
-    dot = F.expr(_dot_sql("emb_a", "emb_b"))
+    dot = F.expr(dot_spark("emb_a", "emb_b"))
     matches = cand.select(
         "vec_id",
         "other_id",
@@ -2299,12 +2228,12 @@ def q_embed_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_pq_adc_knn",
     oracle=f"""
     WITH v AS (
-        SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS emb
+        SELECT vec_id, {as_double_duck("embedding")} AS emb
         FROM embeddings
     ),
     s AS (
         SELECT vec_id AS seed_id,
-               list_transform(embedding, x -> x::DOUBLE) AS emb
+               {as_double_duck("embedding")} AS emb
         FROM embeddings WHERE vec_id < {PQ_CODES}
     ),
     scored AS (
@@ -2371,9 +2300,10 @@ def q_pq_adc_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines sum the four block terms in the same written order from
     identical doubles, so the ranking needs no rounding guard."""
     emb = load_table(spark, sf_dir, "embeddings")
-    v = emb.select("vec_id", F.expr(_EMB_D_SPARK).alias("emb"))
+    v = emb.select("vec_id", F.expr(as_double_spark("embedding")).alias("emb"))
     s = emb.filter(F.col("vec_id") < PQ_CODES).select(
-        F.col("vec_id").alias("seed_id"), F.expr(_EMB_D_SPARK).alias("s_emb")
+        F.col("vec_id").alias("seed_id"),
+        F.expr(as_double_spark("embedding")).alias("s_emb"),
     )
     scored = v.crossJoin(F.broadcast(s)).select(
         "vec_id",
@@ -2441,23 +2371,18 @@ NPROBE = 2  # coarse cells probed per query
 # arrays (the raw avg differs at summation-order ULPs; the quantum absorbs
 # it).  Cell-routing distances then fold the identical doubles in identical
 # element order, so the nprobe ranking is deterministic without a tolerance.
-_CENT_DIST_SPARK = _sqdist_sql("q_emb", "cvec")
-_CENT_DIST_DUCK = (
-    f"list_sum(list_transform(generate_series(1, {DIM}), "
-    "i -> (q.q_emb[i] - cl.cvec[i]) * (q.q_emb[i] - cl.cvec[i])))"
-)
 
 
 @register(
     "q_ivf_adc_knn",
     oracle=f"""
     WITH v AS (
-        SELECT vec_id, label, list_transform(embedding, x -> x::DOUBLE) AS emb
+        SELECT vec_id, label, {as_double_duck("embedding")} AS emb
         FROM embeddings
     ),
     s AS (
         SELECT vec_id AS seed_id,
-               list_transform(embedding, x -> x::DOUBLE) AS emb
+               {as_double_duck("embedding")} AS emb
         FROM embeddings WHERE vec_id < {PQ_CODES}
     ),
     scored AS (
@@ -2486,7 +2411,7 @@ _CENT_DIST_DUCK = (
         SELECT vec_id AS query_id, emb AS q_emb FROM v WHERE vec_id < {N_QUERIES}
     ),
     qcell AS (
-        SELECT q.query_id, cl.label, {_CENT_DIST_DUCK} AS cdist
+        SELECT q.query_id, cl.label, {sqdist_duck("q.q_emb", "cl.cvec")} AS cdist
         FROM q, centlist cl
     ),
     probed AS (
@@ -2535,8 +2460,8 @@ def q_ivf_adc_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost per query drops from |corpus| to nprobe/nlist of it.
 
     Engine shape: centroids are a (label, dim)-keyed partial agg
-    quantized to 6 dp (bit-identical across engines, see _CENT_DIST
-    note) and collapse to nlist broadcast rows; cell routing is a
+    quantized to 6 dp (bit-identical across engines, see the
+    coarse-quantizer note above) and collapse to nlist broadcast rows; cell routing is a
     broadcast nested-loop of the 10-row query batch x nlist centroids;
     the candidate generation is a BroadcastHashJoin of the codes scan
     against the tiny (query, cell) probe table — an EQUI-join, so at
@@ -2550,9 +2475,10 @@ def q_ivf_adc_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     golden (IVFADC == flat ADC re-ranked within probed cells) and the
     probe-membership invariant live in tests/test_similarity.py."""
     emb = load_table(spark, sf_dir, "embeddings")
-    v = emb.select("vec_id", "label", F.expr(_EMB_D_SPARK).alias("emb"))
+    v = emb.select("vec_id", "label", F.expr(as_double_spark("embedding")).alias("emb"))
     s = emb.filter(F.col("vec_id") < PQ_CODES).select(
-        F.col("vec_id").alias("seed_id"), F.expr(_EMB_D_SPARK).alias("s_emb")
+        F.col("vec_id").alias("seed_id"),
+        F.expr(as_double_spark("embedding")).alias("s_emb"),
     )
     scored = v.crossJoin(F.broadcast(s)).select(
         "vec_id",
@@ -2584,7 +2510,7 @@ def q_ivf_adc_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
     )
     qcell = q.crossJoin(F.broadcast(centlist)).select(
-        "query_id", "label", F.expr(_CENT_DIST_SPARK).alias("cdist")
+        "query_id", "label", F.expr(sqdist_spark("q_emb", "cvec")).alias("cdist")
     )
     wc = Window.partitionBy("query_id").orderBy("cdist", "label")
     probed = (
@@ -2646,7 +2572,7 @@ _RES_DUCK = (
     "q_ivfadc_residual_knn",
     oracle=f"""
     WITH v AS (
-        SELECT vec_id, label, list_transform(embedding, x -> x::DOUBLE) AS emb
+        SELECT vec_id, label, {as_double_duck("embedding")} AS emb
         FROM embeddings
     ),
     cent AS (
@@ -2683,7 +2609,7 @@ _RES_DUCK = (
         SELECT vec_id AS query_id, emb AS q_emb FROM v WHERE vec_id < {N_QUERIES}
     ),
     qcell AS (
-        SELECT q.query_id, cl.label, {_CENT_DIST_DUCK} AS cdist
+        SELECT q.query_id, cl.label, {sqdist_duck("q.q_emb", "cl.cvec")} AS cdist
         FROM q, centlist cl
     ),
     probed AS (
@@ -2763,7 +2689,7 @@ def q_ivfadc_residual_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 4-term LUT sum fold in fixed written order — no rounding guard
     needed before the display rounding."""
     emb = load_table(spark, sf_dir, "embeddings")
-    v = emb.select("vec_id", "label", F.expr(_EMB_D_SPARK).alias("emb"))
+    v = emb.select("vec_id", "label", F.expr(as_double_spark("embedding")).alias("emb"))
     cent = (
         v.select("label", F.posexplode("emb").alias("dim", "val"))
         .groupBy("label", "dim")
@@ -2802,7 +2728,7 @@ def q_ivfadc_residual_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
     )
     qcell = q.crossJoin(F.broadcast(centlist)).select(
-        "query_id", "label", F.expr(_CENT_DIST_SPARK).alias("cdist")
+        "query_id", "label", F.expr(sqdist_spark("q_emb", "cvec")).alias("cdist")
     )
     wc = Window.partitionBy("query_id").orderBy("cdist", "label")
     probed = (
@@ -2871,38 +2797,13 @@ def q_ivfadc_residual_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 SEMDEDUP_K = 32  # deterministic seed centroids: vec_id < K (corpus rows)
 SEMDEDUP_COS = "0.95"  # within-cluster duplicate threshold, shared literal
 
-_SEM_DIST_DUCK = f"""
-    list_sum(list_transform(generate_series(1, {DIM}),
-             i -> (c.emb[i] - s.semb[i]) * (c.emb[i] - s.semb[i])))
-"""
-_SEM_NORM_DUCK = (
-    f"sqrt(list_sum(list_transform(generate_series(1, {DIM}),"
-    " i -> {v}[i] * {v}[i])))"
-)
-_SEM_DOT_DUCK = (
-    f"list_sum(list_transform(generate_series(1, {DIM}),"
-    " i -> {a}[i] * {b}[i]))"
-)
-
-# .format(v=...) / .format(a=..., b=...) templates — unrolled like the
-# module-top helpers (the {} placeholders survive the join because the
-# terms are %-formatted).
-_AGG_NORM_SPARK = (
-    "sqrt(("
-    + " + ".join("{v}[%d] * {v}[%d]" % (i, i) for i in range(DIM))
-    + "))"
-)
-_AGG_DOT_SPARK = (
-    "(" + " + ".join("{a}[%d] * {b}[%d]" % (i, i) for i in range(DIM)) + ")"
-)
-
 
 @register(
     "q_semdedup",
     oracle=f"""
     WITH corpus AS ({_ND_CORPUS_DUCK}),
     c AS (
-        SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS emb
+        SELECT vec_id, {as_double_duck("embedding")} AS emb
         FROM corpus
     ),
     s AS (
@@ -2911,14 +2812,14 @@ _AGG_DOT_SPARK = (
     ),
     assign AS (
         SELECT c.vec_id,
-               min(struct_pack(d := {_SEM_DIST_DUCK}, c := s.cluster_id)).c
+               min(struct_pack(d := {sqdist_duck("c.emb", "s.semb")}, c := s.cluster_id)).c
                    AS cluster_id
         FROM c, s
         GROUP BY c.vec_id
     ),
     member AS (
         SELECT a.vec_id, a.cluster_id, c.emb,
-               {_SEM_NORM_DUCK.format(v="c.emb")} AS nrm
+               {norm_duck("c.emb")} AS nrm
         FROM assign a JOIN c USING (vec_id)
     ),
     centd AS (
@@ -2932,13 +2833,13 @@ _AGG_DOT_SPARK = (
     ),
     centn AS (
         SELECT cluster_id, cemb,
-               {_SEM_NORM_DUCK.format(v="cemb")} AS cnrm
+               {norm_duck("cemb")} AS cnrm
         FROM cent
     ),
     scored AS (
         SELECT m.vec_id, m.cluster_id, m.emb, m.nrm,
                {fround_sql(
-                   _SEM_DOT_DUCK.format(a="m.emb", b="cn.cemb")
+                   dot_duck("m.emb", "cn.cemb")
                    + " / (m.nrm * cn.cnrm)", 6)} AS cos_cent,
                {_SIG_DUCK_ND.replace("emb_d", "m.emb")} AS sig
         FROM member m JOIN centn cn USING (cluster_id)
@@ -2963,7 +2864,7 @@ _AGG_DOT_SPARK = (
         SELECT va, cc_a, vb, cc_b
         FROM cand
         WHERE {fround_sql(
-                  _SEM_DOT_DUCK.format(a="emb_a", b="emb_b")
+                  dot_duck("emb_a", "emb_b")
                   + " / (nrm_a * nrm_b)", 6)} > {SEMDEDUP_COS}
     ),
     nb AS (
@@ -3031,12 +2932,12 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus side — the q_sparse_cosine_topk candidate-then-verify shape
     in embedding space)."""
     c = _near_dup_corpus(spark, sf_dir).select(
-        "vec_id", F.expr(_EMB_D_SPARK).alias("emb")
+        "vec_id", F.expr(as_double_spark("embedding")).alias("emb")
     )
     s = c.filter(F.col("vec_id") < SEMDEDUP_K).select(
         F.col("vec_id").alias("cluster_id"), F.col("emb").alias("semb")
     )
-    dist = F.expr(_sqdist_sql("emb", "semb"))
+    dist = F.expr(sqdist_spark("emb", "semb"))
     assign = (
         c.crossJoin(F.broadcast(s))
         .select(
@@ -3053,7 +2954,7 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", F.col("m.c").alias("cluster_id"), "emb")
     )
     member = assign.withColumn(
-        "nrm", F.expr(_AGG_NORM_SPARK.format(v="emb"))
+        "nrm", F.expr(norm_spark("emb"))
     )
     centd = (
         assign.select("cluster_id", F.posexplode("emb").alias("pos", "val"))
@@ -3064,7 +2965,7 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "transform(array_sort(collect_list(struct(pos, cv))), x -> x.cv)"
         ).alias("cemb")
-    ).withColumn("cnrm", F.expr(_AGG_NORM_SPARK.format(v="cemb")))
+    ).withColumn("cnrm", F.expr(norm_spark("cemb")))
     # scored feeds both pair-join legs and the final left join; eager
     # localCheckpoint (ContextCleaner-released) — the q_simhash_eval
     # multi-leg lineage discipline.  The 48-plane SRP signature is
@@ -3081,7 +2982,7 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "nrm",
             "sig",
             fround(
-                F.expr(_AGG_DOT_SPARK.format(a="emb", b="cemb"))
+                F.expr(dot_spark("emb", "cemb"))
                 / (F.col("nrm") * F.col("cnrm")),
                 6,
             ).alias("cos_cent"),
@@ -3114,9 +3015,9 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cos_cent").alias("cc_b"),
     )
     # Dedup-THEN-score, deliberately NOT the _minhash_pairs r12 move
-    # (score-before-dedup): the cosine is an interpreted higher-order
-    # 64-double dot and cluster-mates' near-twins collide in several
-    # bands, so scoring per band-copy multiplies the dominant compute —
+    # (score-before-dedup): the cosine is a 64-double dot (an interpreted
+    # fold when measured in r12) and cluster-mates' near-twins collide in
+    # several bands, so scoring per band-copy multiplies the dominant compute —
     # measured interleaved old/new at the 10x fixture: 8.02/8.70 s
     # dedup-first vs 12.01 s score-first (an sf0.1 probe that favored
     # score-first was band noise).  The integer-scored SimHash/MinHash
@@ -3128,7 +3029,7 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "cos_ab",
             fround(
-                F.expr(_AGG_DOT_SPARK.format(a="emb_a", b="emb_b"))
+                F.expr(dot_spark("emb_a", "emb_b"))
                 / (F.col("nrm_a") * F.col("nrm_b")),
                 6,
             ),

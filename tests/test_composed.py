@@ -302,10 +302,48 @@ class TestComposedPlans:
 
     def test_embed_outliers_broadcasts_stats(self, spark, sf_dir):
         """Centroids and z-stats must broadcast back onto the corpus — a
-        shuffle join here would move the whole embedding table twice."""
+        shuffle join here would move the whole embedding table twice.  The
+        scored corpus is an eager checkpoint, so the centroid join sits in
+        the checkpoint job (the last SQL execution) and the z-stats join in
+        the returned plan, which reads the checkpoint instead of a scan."""
+        store = spark._jsparkSession.sharedState().statusStore()
         plan = self._plan(spark, sf_dir, "q_embed_outliers")
-        assert plan.count("BroadcastHashJoin") >= 2
-        assert "CartesianProduct" not in plan
+        built = store.executionsList(store.executionsCount() - 1, 1).head()
+        built = built.physicalPlanDescription()
+        assert "BroadcastHashJoin" in built
+        assert "Scan parquet" in built
+        assert "BroadcastHashJoin" in plan
+        assert "Scan parquet" not in plan
+        assert "Scan ExistingRDD" in plan
+        assert "CartesianProduct" not in built + plan
+
+    def test_embed_outliers_codegen_fits_with_ansi_on_and_off(self, spark, sf_dir):
+        """With ANSI on (Spark 4's default) the unscored form compiled its
+        final stage to a 65,479-byte method that Janino rejected, and the
+        stage fell back to non-whole-stage execution.  Both modes must
+        return the same rows, and every generated method of the returned
+        plan must compile (stats available) and stay under 8,000 bytes."""
+        jvm = spark._jvm
+        ansi = spark.conf.get("spark.sql.ansi.enabled")
+        got = {}
+        try:
+            for mode in ("true", "false"):
+                spark.conf.set("spark.sql.ansi.enabled", mode)
+                df = registry.QUERIES["q_embed_outliers"](spark, sf_dir)
+                got[mode] = sorted(tuple(r) for r in df.collect())
+                plan = df._jdf.queryExecution().executedPlan()
+                seq = jvm.org.apache.spark.sql.execution.debug.package.codegenStringSeq(
+                    plan
+                )
+                sizes = [
+                    seq.apply(i)._3().maxMethodCodeSize() for i in range(seq.size())
+                ]
+                assert sizes and min(sizes) >= 0, (mode, sizes)
+                assert max(sizes) < 8000, (mode, sizes)
+        finally:
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+        assert got["true"] == got["false"]
+        assert got["true"]
 
     def test_no_python_row_udfs(self, spark, sf_dir):
         for name in (

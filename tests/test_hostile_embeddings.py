@@ -21,7 +21,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from real_time_iot_data_engineering_pipeline_spark import registry
-from real_time_iot_data_engineering_pipeline_spark.queries.similarity import DIM
+from real_time_iot_data_engineering_pipeline_spark.functions.vectors import DIM
 from .oracle_utils import compare
 
 registry.load_all()

@@ -752,8 +752,10 @@ class TestSemDeDup:
         import pandas as pd
         import os
 
-        from real_time_iot_data_engineering_pipeline_spark.queries.similarity import (
+        from real_time_iot_data_engineering_pipeline_spark.functions.vectors import (
             DIM,
+        )
+        from real_time_iot_data_engineering_pipeline_spark.queries.similarity import (
             SEMDEDUP_K,
         )
 
