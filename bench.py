@@ -22,11 +22,11 @@ noise-free cost of a deterministic computation.  The policy is applied
 uniformly, stated here, and overridable (REPS=1 reproduces the
 single-shot protocol of rounds 1-2).
 
-Round-12 de-noising (VERDICT r11 #2): the r≤11 protocol ran the suite in
-ONE alphabetical pass with back-to-back reps, so a roving host-load band
-inflated a contiguous alphabetical stretch of queries (12 over-bar rows in
-the driver's r11 artifact vs 1 in the committed min-of-3 — nine of twelve
-in the q_se..q_sk stretch).  Now the reps are INTERLEAVED ACROSS THE
+De-noising: the earlier protocol ran the suite in ONE alphabetical pass
+with back-to-back reps, so a roving host-load band inflated a contiguous
+alphabetical stretch of queries (12 over-bar rows in one driver artifact
+vs 1 in the committed min-of-3 — nine of twelve in the q_se..q_sk
+stretch).  Now the reps are INTERLEAVED ACROSS THE
 SUITE: rep k is a full pass over every query in a seeded-random order
 (seed = $SPARK_GRAFT_BENCH_SEED(default 12) + k, deterministic per rep,
 different between reps), and each query's reported time is the min across
@@ -147,9 +147,10 @@ def main() -> None:
     seed = int(os.environ.get("SPARK_GRAFT_BENCH_SEED", "12"))
     timings: dict[str, float] = {n: float("inf") for n in names}
     calib_per_pass: list[float] = []
-    # TIMED-LOOP-START  (hashed into timed_loop_sha below: any edit to the
-    # timing methodology is detectable from the artifact alone — VERDICT
-    # r12 #8, after PERF r12 mis-reported bench_harness_changed=false)
+    # The timed loop between the markers is hashed into timed_loop_sha
+    # below: any edit to the timing methodology is detectable from the
+    # artifact alone.
+    # TIMED-LOOP-START
     for k in range(reps):
         order = list(names)
         random.Random(seed + k).shuffle(order)
@@ -214,7 +215,7 @@ def main() -> None:
     # BENCH_DETAIL.json is the committed, round-over-round-comparable
     # artifact and must stay at the driver's sf (0.1); an iteration run at
     # another sf writes a sibling file instead of silently replacing it
-    # (round-5 ADVICE: the committed detail once shipped as an sf0.01 run).
+    # (the committed detail once shipped as an sf0.01 run).
     default_name = (
         "BENCH_DETAIL.json" if sf == 0.1 else f"BENCH_DETAIL_sf{sf}.json"
     )

@@ -32,27 +32,25 @@ Invariants used:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Small-graph fast path (r13, VERDICT r12 #3/#5): below this many canonical
-# edges the star iteration's cost is pure control plane — with AQE every
-# multi-stage round materializes 4-5 exchanges as separate stage jobs plus
-# a checkpoint and a convergence count (the r12 fusion probe showed the
-# job count is the floor, not the data).  A graph this size fits ONE task,
+# Small-graph fast path: below this many canonical edges the star
+# iteration's cost is pure control plane — with AQE every multi-stage round
+# materializes 4-5 exchanges as separate stage jobs plus a checkpoint and a
+# convergence count.  Fusing each round's checkpoint and count jobs was
+# wall-clock neutral (q_doc_dup_groups_cc 4.00 s fused vs 3.96 s) and did
+# not lower the job count (32 = 32): the floor is AQE stage scheduling,
+# not the data.  A graph this size fits ONE task,
 # so the fixpoint is computed there by union-find over Arrow batches
 # (guide §4.2: let Spark do distribution, hand the whole small batch to
 # native code) — zero rounds, one narrow coalesce, no shuffle.  Above the
 # threshold the O(log^2 n) distributed star rounds run unchanged and
 # SWITCH to the local finish once contraction drops the edge count below
 # it, so unbounded graphs keep the MR-CC scaling while paying local-finish
-# instead of the last ~log rounds.  Parameterised for cluster tuning; the
-# default bounds the single task at ~16 MB of edge longs.
-_CC_LOCAL_MAX_EDGES = int(
-    os.environ.get("SPARK_GRAFT_CC_LOCAL_EDGES", str(1 << 20))
-)
+# instead of the last ~log rounds.  2^20 edges bound the single task at
+# ~16 MB of edge longs; callers override it per call with local_max_edges.
+CC_LOCAL_MAX_EDGES = 1 << 20
 
 
 def _canonical(edges: DataFrame) -> DataFrame:
@@ -175,10 +173,10 @@ def star_fixpoint(
     `max_rounds` is a runaway guard, not a semantic bound — hitting it
     raises instead of returning an unconverged edge set.  `local_max_edges`
     overrides the small-graph fast-path threshold (None = the
-    $SPARK_GRAFT_CC_LOCAL_EDGES module default; 0 forces the distributed
+    CC_LOCAL_MAX_EDGES module default; 0 forces the distributed
     star rounds, which tests use to pin both paths against each other)."""
     if local_max_edges is None:
-        local_max_edges = _CC_LOCAL_MAX_EDGES
+        local_max_edges = CC_LOCAL_MAX_EDGES
     cur = _canonical(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     ).localCheckpoint(eager=True)

@@ -1276,7 +1276,7 @@ def _dsir_bstats(spark: SparkSession, sf_dir: str, dfeat: DataFrame | None = Non
     to) measured CONSISTENTLY SLOWER — 37-38 s vs 25-34 s at sf1, 3
     interleaved A/B pairs — because the barriers serialize three jobs
     that the single lazy job overlaps; the redundancy is a pipelined
-    constant factor, not a scaling term (SCALE.md round-11 probes).
+    constant factor, not a scaling term.
     train_dsir is the exception: THREE separate driver actions share one
     checkpointed dfeat there, passed in via the `dfeat` override."""
     if dfeat is None:
@@ -1340,8 +1340,8 @@ def _dsir_perdoc(
     feature contributes one bounded log-ratio, but feature count is
     unbounded), so its quantization is GUARDED: past |logw| ~ 1e9 the
     6 dp grain is sub-ULP and Spark's floor->LONG would saturate where
-    DuckDB stays DOUBLE, diverging the engines (ADVICE r11; same class
-    as q_kmeans_step's distances)."""
+    DuckDB stays DOUBLE, diverging the engines (same class as
+    q_kmeans_step's distances)."""
     dfeat, _, _ = _dsir_bstats(spark, sf_dir, dfeat)
     lr = dsir_model_table(spark, sf_dir, dfeat)
     return (
@@ -1391,8 +1391,8 @@ def train_dsir(
     Arming the streaming DSIR gate needs all three artifacts, and calling
     dsir_model_table / dsir_unseen_lr / dsir_keep_threshold separately
     rebuilds the whole feature/bucket pipeline per call — three redundant
-    corpus passes on top of the documented intra-plan FileScan redundancy
-    (ADVICE r11).  Here the (doc_id, is_target, bucket, n) count table is
+    corpus passes on top of the documented intra-plan FileScan
+    redundancy.  Here the (doc_id, is_target, bucket, n) count table is
     built ONCE, eagerly localCheckpoint-ed (the three driver actions
     cannot share a lazy plan the way the single registered query's
     subtrees do — see the _dsir_bstats materialization note), and every

@@ -2,7 +2,7 @@
 
 The other validation queries adapt rule constants to the events fixture's
 value range (documented in queries/validation.py).  This module closes the
-loop (VERDICT r01 item 7): it derives a reference-shaped WIRE-FORMAT reading
+loop: it derives a reference-shaped WIRE-FORMAT reading
 table — all fields strings, like JSON off Kafka — deterministically from the
 events fixture, injects the reference generator's issue taxonomy
 (data_generator/generator.py:176-533) via event_id buckets, and validates it
@@ -75,7 +75,7 @@ def _wire_from_events(ev: DataFrame) -> DataFrame:
     # Gate on NULL explicitly: Spark's format_string renders a NULL arg as
     # the string 'null' (Java Formatter) while DuckDB's printf returns NULL —
     # without this the two engines would derive different wire rows the day
-    # a fixture carries a NULL user_id (ADVICE r02).
+    # a fixture carries a NULL user_id.
     sensor0 = F.when(F.col("user_id").isNull(), F.lit(None).cast("string")).otherwise(
         F.format_string("SENSOR_%s_%03d", city, (F.col("user_id") % 100).cast("int"))
     )

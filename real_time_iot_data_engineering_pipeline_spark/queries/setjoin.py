@@ -149,7 +149,7 @@ def q_jaccard_setjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialize the token table once with an EAGER localCheckpoint (it is
     # read three times: df counts, per-doc sets, prefix ranking).  Unlike a
     # bare .persist() — which outlives the query and accumulates cached
-    # blocks across a 290-query bench session (ADVICE r9) — checkpoint
+    # blocks across a 290-query bench session — checkpoint
     # blocks are released by the ContextCleaner as soon as the returned
     # plan is garbage-collected.  Same pattern as functions/components.py.
     toks = (

@@ -1,6 +1,6 @@
 """Beyond-reference similarity search over `embeddings` (array<float>, 64-d):
 exact top-k cosine KNN, sign-random-projection LSH candidate generation, and
-IVF-style cell-pruned search (SURVEY.md §7.2 step 6; VERDICT r01 item 4).
+IVF-style cell-pruned search (SURVEY.md §7.2 step 6).
 
 Design rules:
 
@@ -2456,7 +2456,7 @@ def q_ivf_adc_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-cell mean, the `label` column playing the offline coarse
     quantizer as in q_embed_ivf), and the ADC lookup-table scan then
     touches ONLY the probed cells' codes instead of the full corpus.
-    This closes the flat-ADC linearity gap VERDICT r10 named: search
+    This closes flat ADC's linearity in the corpus size: search
     cost per query drops from |corpus| to nprobe/nlist of it.
 
     Engine shape: centroids are a (label, dim)-keyed partial agg

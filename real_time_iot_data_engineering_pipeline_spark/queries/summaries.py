@@ -380,8 +380,7 @@ def q_partition_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     alternative — joining every key against the full cut table on c >= r —
     is a broadcast nested loop whose cost is |keys| x |cuts| =
     O(n^2 / target): measured 106 s at the 10x fixture vs 2.1 s for this
-    plan (SCALE.md, round-6 entry).  Nothing global-sorts the data
-    itself."""
+    plan.  Nothing global-sorts the data itself."""
     per_key = (
         load_table(spark, sf_dir, "lineitem")
         .groupBy(F.col("l_orderkey").alias("key"))

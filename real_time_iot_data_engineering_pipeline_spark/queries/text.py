@@ -1,7 +1,7 @@
 """Beyond-reference LLM-data-pipeline operators over `documents`:
 exact + MinHash/LSH + SimHash + n-gram-Jaccard deduplication, text
 statistics, token counting, language-ID heuristic, quality scoring and
-document fingerprinting (SURVEY.md §7.2 step 6; VERDICT r01 items 3/5).
+document fingerprinting (SURVEY.md §7.2 step 6).
 
 Design rules:
 
@@ -1052,57 +1052,61 @@ def q_doc_dup_groups_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Declared for plan-analysis-only lints (tests/test_oracle_parity.py):
-# calling the function runs the CC fixpoint eagerly, so schema sweeps read
-# this instead of invoking it.  Kept honest by the oracle parity run.
-q_doc_dup_groups_cc.static_schema = (
-    "doc_id bigint, dup_group bigint, is_keeper boolean"
-)
-
-
 # ---------------------------------------------------------------------------
 # Incremental connected components: delta docs vs the standing group store
 # ---------------------------------------------------------------------------
 
 
-def fixture_store_path(sf_dir: str, kind: str) -> str:
-    """Where _fixture_store keeps the `kind` store of the fixture at
-    sf_dir: <tmp>/spark_graft_<kind>/<digest of the documents.parquet
-    fingerprint>."""
+def _store_prefix(sf_dir: str, kind: str) -> str:
+    """<tmp>/spark_graft_<kind>/<digest of the fixture path>: every store
+    of that path, whatever its documents.parquet stamps, starts with it."""
     import hashlib
     import os
     import tempfile
 
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    digest = hashlib.sha1(
-        f"{os.path.abspath(sf_dir)}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:16]
+    digest = hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:16]
     return os.path.join(tempfile.gettempdir(), f"spark_graft_{kind}", digest)
 
 
+def fixture_store_path(sf_dir: str, kind: str) -> str:
+    """Where _fixture_store keeps the `kind` store of the fixture at
+    sf_dir: the path prefix, then a digest of the documents.parquet
+    mtime and size."""
+    import hashlib
+    import os
+
+    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
+    stamp = hashlib.sha1(f"{st.st_mtime_ns}:{st.st_size}".encode()).hexdigest()
+    return f"{_store_prefix(sf_dir, kind)}-{stamp[:8]}"
+
+
 def fixture_stores(sf_dir: str) -> list[str]:
-    """Every store of the fixture at sf_dir, of any kind, finished or not.
-    A throwaway fixture's stores are never read again once it is gone, so
-    its owner removes these."""
+    """Every store of the fixture path sf_dir, of any kind and any
+    documents.parquet stamp, finished or not.  A throwaway fixture's
+    stores are never read again once it is gone, so its owner removes
+    these."""
     import glob
 
-    return glob.glob(fixture_store_path(sf_dir, "*") + "*")
+    return glob.glob(_store_prefix(sf_dir, "*") + "-*")
 
 
 def _fixture_store(spark: SparkSession, sf_dir: str, kind: str, build):
     """Materialize-once-per-fixture parquet store: `build()` returns the
     DataFrame to persist; the cache key is the documents.parquet
-    fingerprint (path + mtime + size), so a regenerated fixture rebuilds.
+    fingerprint (path + mtime + size), so a regenerated fixture rebuilds,
+    and a rebuild removes the stores of the path's earlier fingerprints.
     The write is atomic (tmp dir + rename) so concurrent first callers
-    cannot observe a half-written store.
+    cannot observe a half-written store; a build that fails removes its
+    tmp dir.
 
-    BOUNDARY (VERDICT r12 #4/#6): this is cross-run precomputation keyed
-    on the fixture, sanctioned ONLY for operators whose registered
-    semantics is incremental-vs-standing-store (the store IS the
-    operator's input; the oracle still certifies the output against a
-    full recompute).  tests/test_incremental_family.py pins the consumer
+    BOUNDARY: this is cross-run precomputation keyed on the fixture,
+    sanctioned ONLY for operators whose registered semantics is
+    incremental-vs-standing-store (the store IS the operator's input; the
+    oracle still certifies the output against a full recompute), never a
+    result cache.  tests/test_incremental_family.py pins the consumer
     set; a first build logs its cost to stderr so the moved work is
     visible in bench/driver artifacts."""
+    import glob
     import os
     import shutil
     import sys
@@ -1113,7 +1117,11 @@ def _fixture_store(spark: SparkSession, sf_dir: str, kind: str, build):
         os.makedirs(os.path.dirname(path), exist_ok=True)
         tmp = f"{path}.tmp.{os.getpid()}"
         t0 = time.perf_counter()
-        build().write.mode("overwrite").parquet(tmp)
+        try:
+            build().write.mode("overwrite").parquet(tmp)
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
         print(
             f"[fixture_store] built {kind}/{os.path.basename(path)} in "
             f"{time.perf_counter() - t0:.2f}s (one-time, outside the "
@@ -1125,6 +1133,9 @@ def _fixture_store(spark: SparkSession, sf_dir: str, kind: str, build):
             os.rename(tmp, path)
         except OSError:  # lost the race; the winner's store is identical
             shutil.rmtree(tmp, ignore_errors=True)
+        for old in glob.glob(_store_prefix(sf_dir, kind) + "-*"):
+            if not old.startswith(path):
+                shutil.rmtree(old, ignore_errors=True)
     return spark.read.parquet(path)
 
 
@@ -1136,9 +1147,8 @@ def cc_standing_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixpoint; every later call is a plain parquet scan.  This keeps the
     benched/driven q_cc_incremental cost the actual incremental
     operation — delta probe + contracted fixpoint — instead of
-    store-build + merge (VERDICT r11 #5: the suite's slowest query was
-    trending up because the store rebuilt in-query from scratch every
-    run)."""
+    store-build + merge (with the store rebuilt in-query from scratch
+    every run, this was the suite's slowest query and trending up)."""
     from ..functions.components import connected_components
 
     def build():
@@ -1270,7 +1280,7 @@ def q_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # signatures at 1/|corpus-over-delta| of the hash cost.  The sig
     # table feeds the delta-vs-store probe AND the delta-delta self-join;
     # eager localCheckpoint, not .persist(): checkpoint blocks are
-    # ContextCleaner-released with the plan (ADVICE r9; same pattern as
+    # ContextCleaner-released with the plan (same pattern as
     # the fixpoint internals in functions/components.py).
     delta_sigs = _minhash_sigs(
         _shingle_rows(
@@ -1377,10 +1387,6 @@ def q_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("dup_kind"),
         )
     )
-
-
-# Eager fixpoint (two connected_components calls) — see q_doc_dup_groups_cc.
-q_cc_incremental.static_schema = "doc_id bigint, dup_group bigint, dup_kind string"
 
 
 # ---------------------------------------------------------------------------
@@ -1697,13 +1703,6 @@ def q_dup_group_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("group_size")
     )
-
-
-# Plan-analysis-only schema (composes the eager CC fixpoint above).
-q_dup_group_stats.static_schema = (
-    "group_size bigint, n_groups bigint, n_docs_in_size bigint, "
-    "doc_fraction double, corpus_dup_rate double"
-)
 
 
 # ---------------------------------------------------------------------------

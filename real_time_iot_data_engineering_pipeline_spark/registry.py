@@ -45,7 +45,6 @@ _QUERY_MODULES = (
     "queries.temporal",
     "queries.behavior",
     "queries.relational",
-    "queries.relational2",
     "queries.ranking",
     "queries.corpus",
     "queries.serve",
@@ -56,7 +55,6 @@ _QUERY_MODULES = (
     "queries.summaries",
     "queries.manifest",
     "queries.embedding_ops",
-    "queries.relational3",
     "queries.quality",
     "queries.setjoin",
 )

@@ -193,8 +193,8 @@ class KeyedParquetSink:
         self._commit(version, prev_version)
 
     def _commit(self, version: str, prev_version: str | None) -> None:
-        """Atomically swing CURRENT to `version`, then GC with a lag of 1
-        (ADVICE r02): keep the version the pointer referenced until this
+        """Atomically swing CURRENT to `version`, then GC with a lag of 1:
+        keep the version the pointer referenced until this
         commit, so a reader that resolved the OLD pointer just before the
         swap can finish its lazy parquet scan.  An out-of-band reader is
         safe as long as it consumes within one commit interval; the

@@ -165,7 +165,7 @@ def ingest_doc_stream(
     curation.dsir_keep_threshold) reject as 'off_target'.  The formula,
     hash recipe, and tokenization are the batch q_dsir_weights verbatim;
     cross-path agreement is golden-tested at the 4 dp grain.  As with
-    the KN gate, the keep VERDICT is threshold-adjacent-nondeterministic
+    the KN gate, the keep verdict is threshold-adjacent-nondeterministic
     across paths: the stream folds a document's features sequentially
     while the batch merges shuffled partial sums, so a document whose
     quantized logw sits within summation-order ULPs of `dsir_min_logw`

@@ -206,7 +206,7 @@ def run_pipeline(
     deterministic micro-batches and stops — the test/replay mode; False runs
     the reference's continuous 10-second trigger until externally stopped.
 
-    The StreamingQuery handle is attached as `sink.query` (ADVICE r02):
+    The StreamingQuery handle is attached as `sink.query`:
     continuous-mode callers stop/await/inspect it directly instead of
     scanning spark.streams.active, which misattributes when other queries
     share the session."""

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from ..functions.validation import failure_reasons
 from ..queries.validation import _rules
 from ..sinks import micro_batch
+from .pipeline import CORRUPT_COL, parse_event_stream, read_event_file_stream
 
 
 def validated_stream(events: DataFrame) -> DataFrame:
@@ -34,6 +35,31 @@ def validated_stream(events: DataFrame) -> DataFrame:
     reasons = failure_reasons(_rules(events))
     return events.withColumn("failure_reasons", F.array_join(reasons, ";")).withColumn(
         "is_valid", F.size(reasons) == 0
+    )
+
+
+def dlq_rows(invalid: DataFrame) -> DataFrame:
+    """The dead-letter row contract every DLQ writer shares (the topology's
+    DLQ branch, `RouterSink`, `replay_dlq`'s still-failing rows), applied
+    to the failing rows of `validated_stream`: reasons become
+    `validation_failures` and the flag is 'invalid'
+    (validation_consumer.py:557-563).  A malformed-JSON row (all-null
+    columns, raw line captured at the reader) gets a leading
+    malformed:json reason and keeps the raw line as `raw_payload`: the
+    quarantine holds what was received, not a row of nulls."""
+    if CORRUPT_COL in invalid.columns:
+        invalid = invalid.withColumn(
+            "failure_reasons",
+            F.when(
+                F.col(CORRUPT_COL).isNotNull(),
+                F.concat_ws(";", F.lit("malformed:json"), F.col("failure_reasons")),
+            ).otherwise(F.col("failure_reasons")),
+        )
+    return (
+        invalid.withColumnRenamed("failure_reasons", "validation_failures")
+        .withColumnRenamed(CORRUPT_COL, "raw_payload")
+        .withColumn("data_quality_flag", F.lit("invalid"))
+        .drop("is_valid")
     )
 
 
@@ -50,39 +76,18 @@ class RouterSink:
 
     @micro_batch
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        from .pipeline import CORRUPT_COL
-
-        has_corrupt = CORRUPT_COL in batch_df.columns
         validated = validated_stream(batch_df)
         valid = validated.filter("is_valid").withColumn(
             "data_quality_flag", F.lit("valid")
         )
-        if has_corrupt:
-            valid = valid.drop(CORRUPT_COL)
-        dlq = validated.filter(~F.col("is_valid"))
-        if has_corrupt:
-            # Same quarantine contract as the topology DLQ branch: the raw
-            # undecodable line is preserved, tagged malformed:json first.
-            dlq = dlq.withColumn(
-                "failure_reasons",
-                F.when(
-                    F.col(CORRUPT_COL).isNotNull(),
-                    F.concat_ws(
-                        ";", F.lit("malformed:json"), F.col("failure_reasons")
-                    ),
-                ).otherwise(F.col("failure_reasons")),
-            ).withColumnRenamed(CORRUPT_COL, "raw_payload")
-        dlq = dlq.withColumnRenamed(
-            "failure_reasons", "validation_failures"
-        ).withColumn("data_quality_flag", F.lit("invalid"))
         # per-epoch subdirs => replaying an epoch overwrites its own output
         # instead of appending duplicates (exactly-once with checkpointing)
-        valid.drop("is_valid").write.mode("overwrite").parquet(
+        valid.drop("is_valid", CORRUPT_COL).write.mode("overwrite").parquet(
             os.path.join(self.valid_dir, f"epoch={int(epoch_id)}")
         )
-        dlq.drop("is_valid").write.mode("overwrite").parquet(
-            os.path.join(self.dlq_dir, f"epoch={int(epoch_id)}")
-        )
+        dlq_rows(validated.filter(~F.col("is_valid"))).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(self.dlq_dir, f"epoch={int(epoch_id)}"))
 
     def read_valid(self, spark: SparkSession) -> DataFrame:
         return spark.read.option("basePath", self.valid_dir).parquet(
@@ -104,8 +109,6 @@ def run_router(
     timeout_seconds: float = 120.0,
 ) -> RouterSink:
     """events file stream -> parse -> foreachBatch valid/DLQ fan-out."""
-    from .pipeline import parse_event_stream, read_event_file_stream
-
     raw = parse_event_stream(
         read_event_file_stream(spark, source_dir, max_files_per_trigger)
     )
@@ -154,18 +157,18 @@ def replay_dlq(spark: SparkSession, dlq_dir: str) -> ReplayResult:
 
     Scale: validation is the same shuffle-free single-projection rule
     pass as ingest; the replay reads only the DLQ (quarantine-sized, not
-    corpus-sized) and epoch subdirectories prune by partition discovery."""
+    corpus-sized) and epoch subdirectories prune by partition discovery.
+
+    A quarantined raw line goes back under the reader's corrupt-record
+    column, so a row that stays quarantined keeps its malformed:json
+    reason and `raw_payload`, and recovered rows carry neither."""
     dlq = spark.read.parquet(os.path.join(dlq_dir, "epoch=*"))
     bare = dlq.drop("validation_failures", "data_quality_flag")
-    revalidated = validated_stream(bare)
-    recovered = (
-        revalidated.filter("is_valid")
-        .drop("failure_reasons", "is_valid")
+    revalidated = validated_stream(
+        bare.withColumnRenamed("raw_payload", CORRUPT_COL)
     )
-    still_failing = (
-        revalidated.filter(~F.col("is_valid"))
-        .withColumnRenamed("failure_reasons", "validation_failures")
-        .withColumn("data_quality_flag", F.lit("invalid"))
-        .drop("is_valid")
+    recovered = revalidated.filter("is_valid").drop(
+        "failure_reasons", "is_valid", CORRUPT_COL
     )
+    still_failing = dlq_rows(revalidated.filter(~F.col("is_valid")))
     return ReplayResult(recovered, still_failing)

@@ -49,7 +49,7 @@ from .pipeline import (
     read_event_file_stream,
     windowed_aggregate,
 )
-from .router import validated_stream
+from .router import dlq_rows, validated_stream
 from .stream_join import attribute_clicks, split_by_type
 
 
@@ -188,27 +188,8 @@ def run_topology(
         mode="append" if window_family == "session" else "update",
     )
 
-    # DLQ path: invalid -> append with reasons (validation_consumer.py:557-563).
-    # Malformed-JSON rows (all-null columns, raw line captured at the reader)
-    # are tagged with a leading malformed:json reason and keep the raw
-    # payload — the quarantine holds what was received, not a row of nulls.
-    dlq = (
-        validated.filter(~F.col("is_valid"))
-        .withColumn(
-            "failure_reasons",
-            F.when(
-                F.col(CORRUPT_COL).isNotNull(),
-                F.concat_ws(
-                    ";", F.lit("malformed:json"), F.col("failure_reasons")
-                ),
-            ).otherwise(F.col("failure_reasons")),
-        )
-        .withColumnRenamed("failure_reasons", "validation_failures")
-        .withColumnRenamed(CORRUPT_COL, "raw_payload")
-        .withColumn("data_quality_flag", F.lit("invalid"))
-        .drop("is_valid")
-    )
-
+    # DLQ path: invalid rows -> append with their reasons
+    dlq = dlq_rows(validated.filter(~F.col("is_valid")))
     q_dlq = start(dlq, "topology-dlq", epoch_writer(dlq_dir))
 
     # optional attribution branch: stream-stream interval join of the

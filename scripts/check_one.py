@@ -1,7 +1,11 @@
 """Iteration harness: run one (or more) registered queries against the
-DuckDB oracle at a given SF dir, print compare() problems."""
+DuckDB oracle at a given SF dir, print compare() problems.
+
+Usage: python scripts/check_one.py [SF_DIR] q_name [q_name ...]"""
+import os
 import sys
-sys.path.insert(0, "/root/repo")
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from real_time_iot_data_engineering_pipeline_spark import registry
 from real_time_iot_data_engineering_pipeline_spark.session import build_session
 from tests.oracle_utils import duck_connection, compare

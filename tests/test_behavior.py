@@ -21,6 +21,8 @@ from real_time_iot_data_engineering_pipeline_spark.queries.behavior import (
 )
 from real_time_iot_data_engineering_pipeline_spark.sources import load_table
 
+from .test_plans import plan_of
+
 registry.load_all()
 
 _EPS = 0.005
@@ -75,14 +77,10 @@ class TestCountMinTwin:
 
 
 class TestBehaviorPlans:
-    def _plan(self, spark, sf_dir, name):
-        df = registry.QUERIES[name](spark, sf_dir)
-        return df._jdf.queryExecution().executedPlan().toString()
-
     def test_pivot_is_single_pass(self, spark, sf_dir):
         """Explicit pivot vocabulary => one scan, conditional partial
         aggregates, no join and no separate distinct-values pass."""
-        plan = self._plan(spark, sf_dir, "q_pivot_daily")
+        plan = plan_of(spark, sf_dir, "q_pivot_daily")
         assert plan.count("FileScan parquet") == 1
         assert "Join" not in plan
         assert "partial_" in plan or "Partial" in plan
@@ -90,12 +88,12 @@ class TestBehaviorPlans:
     def test_funnel_joins_are_hash_not_nested_loop(self, spark, sf_dir):
         """Every funnel stage joins on the high-cardinality user key; the
         time ordering must be a residual predicate, never the join itself."""
-        plan = self._plan(spark, sf_dir, "q_funnel")
+        plan = plan_of(spark, sf_dir, "q_funnel")
         assert "BroadcastNestedLoopJoin" not in plan
         assert "CartesianProduct" not in plan
 
     def test_retention_two_phase_distinct(self, spark, sf_dir):
-        plan = self._plan(spark, sf_dir, "q_retention")
+        plan = plan_of(spark, sf_dir, "q_retention")
         assert "CartesianProduct" not in plan
         assert "partial_" in plan or "Partial" in plan
 

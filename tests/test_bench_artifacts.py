@@ -1,7 +1,7 @@
-"""Committed bench artifacts must stay run-over-run comparable (round-5
-ADVICE: BENCH_DETAIL.json once shipped as an sf0.01 run while every
-earlier run was sf0.1, making the wall-clock comparison a
-10x-smaller-dataset artifact)."""
+"""Committed bench artifacts must stay run-over-run comparable
+(BENCH_DETAIL.json once shipped as an sf0.01 run while every earlier run
+was sf0.1, making the wall-clock comparison a 10x-smaller-dataset
+artifact)."""
 
 from __future__ import annotations
 

@@ -24,6 +24,8 @@ from real_time_iot_data_engineering_pipeline_spark.queries.similarity import (
 )
 from real_time_iot_data_engineering_pipeline_spark.queries.text import _MARKERS
 
+from .test_plans import plan_of
+
 registry.load_all()
 
 
@@ -296,10 +298,6 @@ class TestMinhashEvalGolden:
 
 
 class TestComposedPlans:
-    def _plan(self, spark, sf_dir, name) -> str:
-        df = registry.QUERIES[name](spark, sf_dir)
-        return df._jdf.queryExecution().executedPlan().toString()
-
     def test_embed_outliers_broadcasts_stats(self, spark, sf_dir):
         """Centroids and z-stats must broadcast back onto the corpus — a
         shuffle join here would move the whole embedding table twice.  The
@@ -307,7 +305,7 @@ class TestComposedPlans:
         the checkpoint job (the last SQL execution) and the z-stats join in
         the returned plan, which reads the checkpoint instead of a scan."""
         store = spark._jsparkSession.sharedState().statusStore()
-        plan = self._plan(spark, sf_dir, "q_embed_outliers")
+        plan = plan_of(spark, sf_dir, "q_embed_outliers")
         built = store.executionsList(store.executionsCount() - 1, 1).head()
         built = built.physicalPlanDescription()
         assert "BroadcastHashJoin" in built
@@ -355,7 +353,7 @@ class TestComposedPlans:
             "q_repeat_interval",
             "q_degree_distribution",
         ):
-            plan = self._plan(spark, sf_dir, name)
+            plan = plan_of(spark, sf_dir, name)
             assert "BatchEvalPython" not in plan
             assert "ArrowEvalPython" not in plan
 

@@ -446,3 +446,71 @@ def test_doremi_weights_match_pure_python(spark, sf_dir):
     for (e1, u1), (e2, u2) in zip(uplift, uplift[1:]):
         if e2 > e1:
             assert u2 > u1 - 1e-6, (e1, e2, u1, u2)
+
+
+class TestManifestOps:
+    def test_shingle_profile_matches_python(self, spark, sf_dir):
+        import re
+
+        import pyarrow.parquet as pq
+
+        docs = pq.read_table(
+            f"{sf_dir}/documents.parquet", columns=["doc_id", "text"]
+        ).to_pydict()
+        rows = {
+            r["doc_id"]: r
+            for r in registry.QUERIES["q_shingle_profile"](
+                spark, sf_dir
+            ).collect()
+        }
+        checked = 0
+        for d, t in list(zip(docs["doc_id"], docs["text"]))[:50]:
+            toks = re.split(r"[ \t\n\r\f\x0b]+", t.strip().lower())
+            if len(toks) < 3:
+                assert d not in rows
+                continue
+            grams = Counter(
+                " ".join(toks[i : i + 3]) for i in range(len(toks) - 2)
+            )
+            r = rows[d]
+            assert r["n_grams"] == sum(grams.values())
+            assert r["n_distinct_grams"] == len(grams)
+            assert r["max_gram_freq"] == max(grams.values())
+            checked += 1
+        assert checked > 10
+
+    def test_token_budget_conserves_and_caps(self, spark, sf_dir):
+        rows = registry.QUERIES["q_token_budget_plan"](spark, sf_dir).collect()
+        total_avail = sum(r["avail_tokens"] for r in rows)
+        total_alloc = sum(r["alloc_tokens"] for r in rows)
+        assert any(r["capped"] for r in rows), "premium sources must cap"
+        assert not all(r["capped"] for r in rows)
+        for r in rows:
+            assert r["alloc_tokens"] <= r["avail_tokens"] + 0.01
+            assert 0 < r["fill_frac"] <= 1.0
+        # one redistribution round must land within a capped-source's worth
+        # of the budget (exact only at the fixpoint; assert the bound)
+        assert total_alloc <= 0.5 * total_avail + 1.0
+        assert total_alloc >= 0.5 * total_avail * 0.95
+
+    def test_band_tuning_scurve_is_monotone(self, spark, sf_dir):
+        """More rows per band (fixed K) = stricter collisions = lower
+        expected recall — the S-curve family's defining order."""
+        rows = sorted(
+            registry.QUERIES["q_minhash_band_tuning"](spark, sf_dir).collect(),
+            key=lambda r: r["rows_per_band"],
+        )
+        recalls = [r["expected_recall"] for r in rows]
+        assert recalls == sorted(recalls, reverse=True)
+        assert all(r["n_pairs"] == rows[0]["n_pairs"] for r in rows)
+
+    def test_dedup_cost_curve_is_monotone(self, spark, sf_dir):
+        rows = sorted(
+            registry.QUERIES["q_dedup_cost_curve"](spark, sf_dir).collect(),
+            key=lambda r: r["threshold"],
+        )
+        pairs = [r["n_pairs"] for r in rows]
+        removed = [r["n_docs_removed"] for r in rows]
+        assert pairs == sorted(pairs, reverse=True)
+        assert removed == sorted(removed, reverse=True)
+        assert pairs[0] > 0

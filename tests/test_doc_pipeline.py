@@ -584,7 +584,7 @@ def test_stream_dsir_gate_agrees_with_batch_scorer(spark, tmp_path, sf_dir):
 
 
 def test_doc_ingest_state_survives_checkpoint_restart(spark, tmp_path):
-    """Kill-and-resume golden (VERDICT r11 #7): the doc-ingest topology
+    """Kill-and-resume golden: the doc-ingest topology
     with BOTH quality gates armed must recover from a full query
     shutdown.  Run 1 drains the original doc and terminates; run 2 — a
     NEW AvailableNow query on the SAME checkpoint — sees a same-content

@@ -2,7 +2,7 @@
 
 The oracle gate compares Spark against DuckDB; if query and oracle shared a
 misreading of the reference, both would agree and the driver would pass
-(VERDICT r01, 'builder-authored oracles').  These tests pin the trickiest
+(the risk of oracles written by the same hand as the queries).  These tests pin the trickiest
 semantics — window alignment, first-wins/last-wins tie-breaks, tolerant
 coercion, minhash banding — against literal inputs and expectations computed
 by hand from the reference's documented behavior.
@@ -564,7 +564,7 @@ class TestRealMediaDecode:
 
 
 class TestIotNullUserIdParity:
-    """ADVICE r02: Spark format_string renders NULL args as the string
+    """Spark format_string renders NULL args as the string
     'null' while DuckDB printf returns NULL.  The wire derivation gates on
     user_id IS NULL explicitly; both engines must emit a NULL sensor_id for
     a NULL user_id even though current fixtures never exercise it."""
@@ -784,7 +784,7 @@ class TestPngPixelDecode:
     test applies the spec's filter transforms FORWARD (encoder direction)
     and the engine must invert them exactly — covering all five filter
     types, packed sub-byte depths, 16-bit samples, and palette expansion.
-    This is the golden for VERDICT r11 #6: PNG pixel decode needs only
+    PNG pixel decode needs only
     stdlib zlib, so the codec seam narrows to decode_video_frames."""
 
     @staticmethod

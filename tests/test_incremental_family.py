@@ -199,7 +199,7 @@ def test_contraction_merge_equals_full_recompute(n_nodes, data):
 
 
 def test_fixture_store_consumers_are_declared_incremental_only():
-    """VERDICT r12 #6: _fixture_store persists derived state across runs
+    """_fixture_store persists derived state across runs
     keyed on the fixture — sanctioned ONLY where the registered semantics
     is incremental-vs-standing-store (the store is the operator's INPUT
     and the oracle certifies against a full recompute).  Pin the consumer
@@ -240,3 +240,49 @@ def test_fixture_store_consumers_are_declared_incremental_only():
     # the builders are consumed only inside q_cc_incremental (text.py)
     assert all(fn == "text.py" for fn, _ in builder_calls), builder_calls
     assert len(builder_calls) == 2, builder_calls
+
+
+def test_fixture_store_keeps_one_store_per_path_and_no_failed_tmp(
+    spark, tmp_path
+):
+    """A regenerated fixture rebuilds its stores and the rebuild removes
+    the stores of the fixture's earlier version: after a touch and a
+    rebuild there is one store per kind for the path.  A build that
+    fails leaves no tmp dir behind."""
+    import glob
+    import os
+    import shutil
+
+    import pytest
+    from pyspark.sql import functions as F
+
+    from real_time_iot_data_engineering_pipeline_spark.queries.text import (
+        _fixture_store,
+        fixture_store_path,
+        fixture_stores,
+    )
+
+    docs = tmp_path / "documents.parquet"
+    spark.range(3).write.parquet(str(docs))
+    kinds = ("test_store_a", "test_store_b")
+    kind_dirs = [os.path.dirname(fixture_store_path(str(tmp_path), k)) for k in kinds]
+    before = {d: set(os.listdir(d)) if os.path.isdir(d) else set() for d in kind_dirs}
+    try:
+        for k in kinds:
+            assert _fixture_store(spark, str(tmp_path), k, lambda: spark.range(5)).count() == 5
+        st = os.stat(docs)
+        os.utime(docs, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+        for k in kinds:
+            assert _fixture_store(spark, str(tmp_path), k, lambda: spark.range(7)).count() == 7
+        for d in kind_dirs:
+            assert len(set(os.listdir(d)) - before[d]) == 1, sorted(os.listdir(d))
+        assert len(fixture_stores(str(tmp_path))) == len(kinds)
+
+        os.utime(docs, ns=(st.st_atime_ns, st.st_mtime_ns + 2 * 10**9))
+        failing = lambda: spark.range(3).select(F.raise_error(F.lit("boom")))
+        with pytest.raises(Exception, match="boom"):
+            _fixture_store(spark, str(tmp_path), kinds[0], failing)
+        assert glob.glob(fixture_store_path(str(tmp_path), kinds[0]) + "*") == []
+    finally:
+        for store in fixture_stores(str(tmp_path)):
+            shutil.rmtree(store, ignore_errors=True)

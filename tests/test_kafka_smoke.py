@@ -1,4 +1,4 @@
-"""Live-broker Kafka smoke (VERDICT r10 #8): executable the day the
+"""Live-broker Kafka smoke: executable the day the
 environment ships a broker + the spark-sql-kafka connector, skipped (with
 the reason on record) everywhere else.  The sandbox path for the same
 wiring is tests/test_streaming.py::TestKafkaWiring + the file-source seam;

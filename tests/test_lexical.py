@@ -24,6 +24,8 @@ from real_time_iot_data_engineering_pipeline_spark.queries.prep import (
     SPLIT_TRAIN_PCT,
 )
 
+from .test_plans import plan_of
+
 registry.load_all()
 
 # Python twin of ranking.WS_CLASS — spelled here independently so a drift
@@ -115,23 +117,19 @@ class TestNoveltyGolden:
 
 
 class TestLexicalPlans:
-    def _plan(self, spark, sf_dir, name) -> str:
-        df = registry.QUERIES[name](spark, sf_dir)
-        return df._jdf.queryExecution().executedPlan().toString()
-
     def test_skipgram_expands_without_join(self, spark, sf_dir):
         """Skip-gram expansion must stay in the array domain — any Join in
         the plan means a posexplode alignment self-join snuck back in."""
-        plan = self._plan(spark, sf_dir, "q_skipgram_pairs")
+        plan = plan_of(spark, sf_dir, "q_skipgram_pairs")
         assert "Join" not in plan
         assert "TakeOrderedAndProject" in plan
 
     def test_zipf_topk_is_take_ordered(self, spark, sf_dir):
-        plan = self._plan(spark, sf_dir, "q_zipf_fit")
+        plan = plan_of(spark, sf_dir, "q_zipf_fit")
         assert "TakeOrderedAndProject" in plan
 
     def test_no_python_row_udfs(self, spark, sf_dir):
         for name in ("q_skipgram_pairs", "q_zipf_fit", "q_ngram_novelty"):
-            plan = self._plan(spark, sf_dir, name)
+            plan = plan_of(spark, sf_dir, name)
             assert "BatchEvalPython" not in plan
             assert "ArrowEvalPython" not in plan

@@ -23,6 +23,8 @@ from real_time_iot_data_engineering_pipeline_spark.queries.mining import (
     _DAY_ANCHOR,
 )
 
+from .test_plans import plan_of
+
 registry.load_all()
 
 
@@ -318,19 +320,15 @@ class TestDistMedian:
 
 
 class TestMiningPlans:
-    def _plan(self, spark, sf_dir, name) -> str:
-        df = registry.QUERIES[name](spark, sf_dir)
-        return df._jdf.queryExecution().executedPlan().toString()
-
     def test_market_basket_broadcasts_dim_no_cartesian(self, spark, sf_dir):
-        plan = self._plan(spark, sf_dir, "q_market_basket")
+        plan = plan_of(spark, sf_dir, "q_market_basket")
         assert "BroadcastHashJoin" in plan
         assert "CartesianProduct" not in plan
 
     def test_burstiness_window_partitions_by_user(self, spark, sf_dir):
         """The gap window must partition by the high-cardinality user key —
         a type-only partition would be 5 straggler tasks at scale."""
-        plan = self._plan(spark, sf_dir, "q_burstiness")
+        plan = plan_of(spark, sf_dir, "q_burstiness")
         assert "windowspecdefinition(user_id" in plan
 
     def test_no_python_row_udfs(self, spark, sf_dir):
@@ -344,7 +342,7 @@ class TestMiningPlans:
             "q_bollinger",
             "q_burstiness",
         ):
-            plan = self._plan(spark, sf_dir, name)
+            plan = plan_of(spark, sf_dir, name)
             assert "BatchEvalPython" not in plan
             assert "ArrowEvalPython" not in plan
 
@@ -472,7 +470,7 @@ class TestIntegrityAudit:
 
         import pandas as pd
 
-        from real_time_iot_data_engineering_pipeline_spark.queries.relational2 import (
+        from real_time_iot_data_engineering_pipeline_spark.queries.relational import (
             _FK_CHECKS,
             _PK_CHECKS,
         )

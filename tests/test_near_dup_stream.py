@@ -222,7 +222,7 @@ def test_timed_out_bucket_is_evicted():
 
 
 def test_bucket_state_survives_checkpoint_restart(spark, tmp_path):
-    """Kill-and-resume golden (VERDICT r10 #5): the band-bucket store
+    """Kill-and-resume golden: the band-bucket store
     must survive a full query shutdown.  Run 1 drains the ORIGINAL doc
     and terminates; run 2 — a NEW query on the SAME checkpoint — sees
     only the near-duplicate and can emit the (1, 2) pair ONLY if doc 1's

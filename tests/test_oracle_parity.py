@@ -78,25 +78,3 @@ def test_registered_query_schemas_are_atomic(registry_pass):
         "non-atomic top-level result columns (serialize with array_join or "
         f"to_json before returning): {offenders}"
     )
-
-
-def test_static_schemas_match_executed(registry_pass):
-    """Eager fixpoint queries declare a `static_schema`; it must equal the
-    schema the query actually produces — names, types, and order."""
-    from pyspark.sql.types import _parse_datatype_string
-
-    declared = {
-        name: fn.static_schema
-        for name, fn in registry.QUERIES.items()
-        if hasattr(fn, "static_schema")
-    }
-    assert declared, "expected at least the fixpoint queries to declare schemas"
-    for name, ddl in declared.items():
-        run = registry_pass.runs[name]
-        if run.error:  # fails its own parity test
-            continue
-        want = [
-            (f.name, f.dataType) for f in _parse_datatype_string(ddl).fields
-        ]
-        got = [(f.name, f.dataType) for f in run.schema.fields]
-        assert got == want, f"{name}: declared {want} != executed {got}"

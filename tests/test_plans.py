@@ -46,7 +46,7 @@ class TestPushdownAndJoins:
         assert "SortMergeJoin" not in plan
 
     def test_city_avg_uses_broadcast_join_back_not_window(self, spark, sf_dir):
-        """VERDICT r01: a Window over ~5 event_type partitions is a
+        """A Window over ~5 event_type partitions is a
         straggler at scale; the fix is partial-agg + broadcast join-back."""
         plan = plan_of(spark, sf_dir, "q_city_avg_compare")
         assert "BroadcastHashJoin" in plan
@@ -217,6 +217,43 @@ class TestPrepPlans:
         finally:
             spark.sql("DROP TABLE IF EXISTS test_aggs_loc")
 
+    def test_group_split_is_one_agg_plus_hash_join(self, spark, sf_dir):
+        """Group split must stay a content-hash partial agg + hash-keyed
+        join-back with the split as a pure projection: no window, no
+        cartesian, no nested-loop anywhere."""
+        plan = plan_of(spark, sf_dir, "q_group_split")
+        assert "CartesianProduct" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
+        assert "Window" not in plan
+        assert "content_hash" in plan
+
+    def test_shard_assign_is_one_partial_agg_no_join(self, spark, sf_dir):
+        """The shard manifest is a projection + ONE hash partial-agg on a
+        uniform 16-ary key: exactly one exchange (for the final agg), no
+        join, no window — the cheapest possible full-corpus pass."""
+        plan = plan_of(spark, sf_dir, "q_shard_assign")
+        assert plan.count("Exchange") == 1, plan
+        for bad in ("Join", "Window", "CartesianProduct"):
+            assert bad not in plan, bad
+        assert "partial_count" in plan or "HashAggregate" in plan
+
+    def test_text_normalize_is_arrow_python_no_shuffle(self, spark, sf_dir):
+        """NFC runs as the Arrow-batched Python stage (ArrowEvalPython),
+        never row-at-a-time (BatchEvalPython), and the op is shuffle-free
+        — it must run as wide as the scan."""
+        plan = plan_of(spark, sf_dir, "q_text_normalize")
+        assert "ArrowEvalPython" in plan
+        assert "BatchEvalPython" not in plan
+        assert "Exchange" not in plan
+
+    def test_lag_features_window_partitions_by_user(self, spark, sf_dir):
+        """The lag window must partition by the high-cardinality user key
+        (tiny per-key series), never run unpartitioned."""
+        plan = plan_of(spark, sf_dir, "q_lag_features")
+        assert "user_id" in plan
+        # an unpartitioned window would log/plan a single-partition sort
+        assert "SinglePartition" not in plan
+
 
 class TestCurationPlans:
     def test_decontaminate_broadcasts_eval_ngram_set(self, spark, sf_dir):
@@ -239,6 +276,68 @@ class TestCurationPlans:
         before the (doc_id, bigram)-keyed exchange."""
         plan = plan_of(spark, sf_dir, "q_repetition_filter")
         assert "partial_count" in plan or "Partial" in plan
+        assert "CartesianProduct" not in plan
+
+    def test_paragraph_dedup_shuffles_hashes_not_text(self, spark, sf_dir):
+        """The cross-doc line-frequency join must ride md5 hashes; the text
+        column must never reach an exchange."""
+        plan = plan_of(spark, sf_dir, "q_paragraph_dedup")
+        assert "CartesianProduct" not in plan
+        exchanges = [
+            ln for ln in plan.splitlines() if "Exchange hashpartitioning" in ln
+        ]
+        assert exchanges and all("text" not in ln for ln in exchanges), (
+            "document text rides a shuffle: " + "\n".join(exchanges)
+        )
+
+    def test_dedup_survivor_shuffles_key_not_text(self, spark, sf_dir):
+        """The quality argmax is one partial-aggregated groupBy on the
+        cluster key; document text must never ride the shuffle, and the
+        scored-vs-groups self-join in the oracle SQL must not appear
+        (corpus scans feed exactly one aggregate chain)."""
+        plan = plan_of(spark, sf_dir, "q_dedup_survivor")
+        assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
+        exchanges = [
+            ln for ln in plan.splitlines() if "Exchange hashpartitioning" in ln
+        ]
+        assert exchanges and all("text" not in ln for ln in exchanges), (
+            "text rides a shuffle: " + "\n".join(exchanges)
+        )
+
+    def test_repeated_substrings_shuffles_hashes_not_text(self, spark, sf_dir):
+        """After the n-gram explode only md5 hashes and positions move;
+        no Exchange row schema may carry the text column."""
+        plan = plan_of(spark, sf_dir, "q_repeated_substrings")
+        for ln in plan.splitlines():
+            if "Exchange hashpartitioning" in ln:
+                assert "text" not in ln, ln
+
+    def test_curation_pipeline_scans_documents_twice_max(self, spark, sf_dir):
+        """The composite recipe computes all four gates in one projection
+        over the derived corpus (documents + planted copies = two scans
+        of the same file); four chained standalone operators would scan
+        at least four times."""
+        plan = plan_of(spark, sf_dir, "q_curation_pipeline")
+        assert plan.count("Scan parquet") <= 4  # corpus union (2) x reuse
+        assert "CartesianProduct" not in plan
+
+    def test_source_cap_limits_before_exchange(self, spark, sf_dir):
+        """Domain capping is a rank-limited window: Catalyst must compile
+        `row_number() <= K` into a Partial-mode WindowGroupLimit ahead of
+        the exchange (each map partition ships at most K rows per source
+        — the 100 TB shape, same pin as q_topk_per_group)."""
+        plan = plan_of(spark, sf_dir, "q_source_cap")
+        assert "WindowGroupLimit" in plan and "Partial" in plan
+
+    def test_dsir_model_join_is_broadcast(self, spark, sf_dir):
+        """DSIR's log-ratio model is O(512 buckets) by construction — its
+        join back over the per-doc bucket counts must be a broadcast hash
+        join (the corpus side never shuffles for the model), with no
+        sort-merge anywhere: the only data-scale exchange is the
+        (doc_id, bucket) partial-aggregate."""
+        plan = plan_of(spark, sf_dir, "q_dsir_weights")
+        assert "BroadcastHashJoin" in plan
+        assert "SortMergeJoin" not in plan
         assert "CartesianProduct" not in plan
 
 
@@ -285,78 +384,6 @@ class TestRelationalPlans:
             "customer name rides a shuffle: " + "\n".join(exchanges)
         )
 
-
-class TestReportPlans:
-    def test_vocab_topk_avoids_global_sort(self, spark, sf_dir):
-        """Global top-k must plan as TakeOrderedAndProject (per-partition
-        top-k + driver merge of #partitions x k rows), never a full sort
-        exchange of the whole vocabulary."""
-        plan = plan_of(spark, sf_dir, "q_vocab_topk")
-        assert "TakeOrderedAndProject" in plan
-        assert "partial_count" in plan or "Partial" in plan
-
-    def test_corpus_stats_broadcasts_grand_total(self, spark, sf_dir):
-        """The doc_share ratio must come from a broadcast join-back of the
-        1-row total, not a single-partition window over the aggregate."""
-        plan = plan_of(spark, sf_dir, "q_corpus_stats")
-        assert "Broadcast" in plan
-        assert "Window" not in plan
-
-
-class TestRound3LateOpPlans:
-    """Plan shapes for the post-window round-3 operators (gap fill, cube,
-    paragraph dedup, quality buckets, audience set ops)."""
-
-    def test_gap_fill_window_is_keyed_not_global(self, spark, sf_dir):
-        """LOCF forward fill must window over the high-cardinality sensor
-        key — a SinglePartition window would serialize the whole stream."""
-        plan = plan_of(spark, sf_dir, "q_gap_fill")
-        assert "Window" in plan
-        assert "SinglePartition" not in plan
-        assert "hashpartitioning(user_id" in plan
-
-    def test_cube_summary_expands_in_one_scan(self, spark, sf_dir):
-        """CUBE must plan as ONE scan feeding Expand + partial aggregate,
-        not four separate aggregation jobs."""
-        plan = plan_of(spark, sf_dir, "q_cube_summary")
-        assert "Expand" in plan
-        assert plan.count("Scan parquet") == 1
-
-    def test_paragraph_dedup_shuffles_hashes_not_text(self, spark, sf_dir):
-        """The cross-doc line-frequency join must ride md5 hashes; the text
-        column must never reach an exchange."""
-        plan = plan_of(spark, sf_dir, "q_paragraph_dedup")
-        assert "CartesianProduct" not in plan
-        exchanges = [
-            ln for ln in plan.splitlines() if "Exchange hashpartitioning" in ln
-        ]
-        assert exchanges and all("text" not in ln for ln in exchanges), (
-            "document text rides a shuffle: " + "\n".join(exchanges)
-        )
-
-    def test_quality_buckets_window_only_after_aggregate(self, spark, sf_dir):
-        """Threshold binning is a projection + partial-agg groupBy; the
-        lang_share window must consume the aggregated langs x 10 table
-        (its input exchange carries the agg keys), never the raw docs."""
-        plan = plan_of(spark, sf_dir, "q_quality_buckets")
-        assert "SinglePartition" not in plan
-        window_idx = plan.find("Window")
-        agg_idx = plan.find("HashAggregate")
-        assert window_idx != -1 and agg_idx != -1
-        # executedPlan prints top-down: the window node sits ABOVE (before)
-        # the aggregate it consumes.
-        assert window_idx < agg_idx
-
-    def test_audience_setops_are_semi_anti_joins(self, spark, sf_dir):
-        """INTERSECT/EXCEPT must compile to LeftSemi/LeftAnti on distinct
-        inputs — never a cross product or a full outer reconciliation."""
-        plan = plan_of(spark, sf_dir, "q_audience_setops")
-        assert "LeftSemi" in plan
-        assert "LeftAnti" in plan
-        assert "CartesianProduct" not in plan
-
-
-class TestRound3LatePlans:
     def test_min_cost_supplier_argmin_is_one_pass(self, spark, sf_dir):
         """The correlated-subquery form must stay decorrelated: one
         aggregation chain (partkey,suppkey) -> partkey via struct-min, dims
@@ -370,39 +397,6 @@ class TestRound3LatePlans:
         assert "BroadcastNestedLoopJoin" not in plan
         assert plan.count("FileScan parquet") == 4  # lineitem + 3 dims, once each
 
-    def test_length_histogram_totals_broadcast(self, spark, sf_dir):
-        """Grand totals must attach to the ~20 bucket rows via a broadcast
-        of a single-row aggregate — no SinglePartition exchange over data
-        and no window."""
-        plan = plan_of(spark, sf_dir, "q_length_histogram")
-        assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-        assert "Window" not in plan
-
-    def test_dedup_survivor_shuffles_key_not_text(self, spark, sf_dir):
-        """The quality argmax is one partial-aggregated groupBy on the
-        cluster key; document text must never ride the shuffle, and the
-        scored-vs-groups self-join in the oracle SQL must not appear
-        (corpus scans feed exactly one aggregate chain)."""
-        plan = plan_of(spark, sf_dir, "q_dedup_survivor")
-        assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
-        exchanges = [
-            ln for ln in plan.splitlines() if "Exchange hashpartitioning" in ln
-        ]
-        assert exchanges and all("text" not in ln for ln in exchanges), (
-            "text rides a shuffle: " + "\n".join(exchanges)
-        )
-
-    def test_semantic_decontaminate_broadcasts_eval_side(self, spark, sf_dir):
-        """Eval sets are tiny; the training corpus is the 100 TB side. The
-        band join must broadcast the eval band table so training vectors
-        never shuffle — a SortMergeJoin here would shuffle the corpus."""
-        plan = plan_of(spark, sf_dir, "q_semantic_decontaminate")
-        assert "BroadcastHashJoin" in plan
-        assert "SortMergeJoin" not in plan
-        assert "CartesianProduct" not in plan
-
-
-class TestRound3FinalPlans:
     def test_large_orders_reuses_lineitem_distribution(self, spark, sf_dir):
         """Q18 shape: the qualifying-key agg and the detail re-join both
         hash on l_orderkey, customer attaches broadcast, and top-100
@@ -436,126 +430,6 @@ class TestRound3FinalPlans:
         assert "BroadcastHashJoin" in plan
         assert "SortMergeJoin" not in plan
 
-    def test_embed_quantize_stats_collapse_before_shuffle(self, spark, sf_dir):
-        """The per-dim stats pass must partial-aggregate (each partition
-        collapses to DIM rows pre-shuffle) and reach the code pass as a
-        single-row broadcast; the code/MSE projection itself must not
-        shuffle the corpus (no hash exchange keyed on corpus rows after
-        the stats join)."""
-        plan = plan_of(spark, sf_dir, "q_embed_quantize")
-        assert "partial" in plan.lower()  # map-side combine on the stats agg
-        assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-        assert "CartesianProduct" not in plan
-        assert plan.count("FileScan parquet") == 2  # corpus read: stats + codes
-
-
-class TestRankingPlans:
-    def test_bm25_filters_terms_before_posting_agg(self, spark, sf_dir):
-        """The query-term filter must land before the (doc, token)
-        aggregate (the posting list is |terms| wide, not |vocab|), the
-        scalar stats must arrive as broadcasts, and the final top-k must
-        terminate via TakeOrderedAndProject — never a global sort."""
-        plan = plan_of(spark, sf_dir, "q_bm25_rank")
-        assert "TakeOrderedAndProject" in plan
-        assert "Sort [" not in plan.split("TakeOrderedAndProject")[0]
-        assert "BroadcastExchange" in plan or "BroadcastNestedLoopJoin" in plan
-        assert "CartesianProduct" not in plan
-
-    def test_unigram_ppl_moves_counts_not_text(self, spark, sf_dir):
-        """After the explode, every exchange must carry (doc_id, token,
-        count) — the text column must not appear in any Exchange — and
-        the tf aggregate must partial-aggregate map-side."""
-        plan = plan_of(spark, sf_dir, "q_unigram_ppl")
-        assert "partial" in plan.lower()
-        for ln in plan.splitlines():
-            if "Exchange" in ln:
-                assert "text" not in ln
-        assert "CartesianProduct" not in plan
-
-
-class TestMiningAndClippingPlans:
-    def test_hard_negatives_broadcasts_queries_no_cartesian_shuffle(
-        self, spark, sf_dir
-    ):
-        """Both contrastive branches must be broadcast probes of the
-        query batch with WindowGroupLimit top-1 (each partition ships at
-        most one candidate per query per branch) — never a CartesianProduct
-        and never a corpus-wide hash exchange before ranking."""
-        plan = plan_of(spark, sf_dir, "q_hard_negatives")
-        assert "CartesianProduct" not in plan
-        assert "WindowGroupLimit" in plan
-        assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-
-    def test_winsorize_bounds_broadcast_back_no_window(self, spark, sf_dir):
-        """The per-type percentile bounds must partial-aggregate and
-        broadcast back onto the fact rows — no Window over the
-        low-cardinality event_type and no second shuffle of events."""
-        plan = plan_of(spark, sf_dir, "q_winsorize")
-        assert "Window" not in plan
-        assert "BroadcastHashJoin" in plan
-        assert "SortMergeJoin" not in plan
-
-
-class TestBilateralAndAntiPlans:
-    def test_nation_volume_broadcasts_pruned_dims(self, spark, sf_dir):
-        """Q7 shape: the 2-nation prune must reach the nation scans as
-        pushed filters, supplier/customer chains broadcast, and the only
-        non-broadcast join is the lineitem<->orders fact join."""
-        plan = plan_of(spark, sf_dir, "q_nation_volume")
-        assert plan.count("BroadcastHashJoin") >= 3
-        assert "CartesianProduct" not in plan
-        nation_scans = [
-            ln
-            for ln in plan.splitlines()
-            if "FileScan parquet" in ln and "nation" in ln and "n_name" in ln
-        ]
-        assert nation_scans and "PushedFilters: [In(n_name" in nation_scans[0]
-
-    def test_dormant_rich_is_left_anti_with_scalar_broadcast(
-        self, spark, sf_dir
-    ):
-        """Q22 shape: the global-average threshold must arrive as a
-        single-row broadcast (no SinglePartition shuffle of customers)
-        and the NOT EXISTS must compile to a LeftAnti equi-join."""
-        plan = plan_of(spark, sf_dir, "q_dormant_rich")
-        assert "LeftAnti" in plan
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-
-
-class TestConditionalAggPlans:
-    def test_promo_share_is_one_pass_with_pushed_range(self, spark, sf_dir):
-        """Q14 shape: the shipdate range must reach the lineitem scan as
-        PushedFilters, part must broadcast, and both the guarded and
-        unguarded sums must come from ONE aggregate (single lineitem
-        scan, no self-join)."""
-        plan = plan_of(spark, sf_dir, "q_promo_share")
-        li_scan = [
-            ln
-            for ln in plan.splitlines()
-            if "FileScan parquet" in ln and "lineitem" in ln
-        ]
-        assert li_scan and "l_shipdate" in li_scan[0].split("PushedFilters")[-1]
-        assert "BroadcastHashJoin" in plan
-        assert plan.count("FileScan parquet") == 2  # lineitem + part, once each
-
-
-class TestEntropyPlans:
-    def test_token_entropy_is_two_aggregates_no_window(self, spark, sf_dir):
-        """The H = ln(N) - sum(tf*ln(tf))/N identity must keep the plan
-        to two partial-aggregated groupBys — no Window operator, no
-        SinglePartition exchange, and text never rides an exchange."""
-        plan = plan_of(spark, sf_dir, "q_token_entropy")
-        assert "Window" not in plan
-        assert "partial" in plan.lower()
-        for ln in plan.splitlines():
-            if "Exchange" in ln:
-                assert "text" not in ln
-                assert "SinglePartition" not in ln
-        assert "CartesianProduct" not in plan
-
-
-class TestRelational2Plans:
     def test_forecast_revenue_is_scan_plus_scalar_agg(self, spark, sf_dir):
         """Q6 shape: all four predicates reach the reader, no join, no
         GROUP BY shuffle beyond the single-row final agg."""
@@ -652,6 +526,410 @@ class TestRelational2Plans:
         assert len(li_scans) <= 2
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
+
+
+class TestReportPlans:
+    def test_vocab_topk_avoids_global_sort(self, spark, sf_dir):
+        """Global top-k must plan as TakeOrderedAndProject (per-partition
+        top-k + driver merge of #partitions x k rows), never a full sort
+        exchange of the whole vocabulary."""
+        plan = plan_of(spark, sf_dir, "q_vocab_topk")
+        assert "TakeOrderedAndProject" in plan
+        assert "partial_count" in plan or "Partial" in plan
+
+    def test_corpus_stats_broadcasts_grand_total(self, spark, sf_dir):
+        """The doc_share ratio must come from a broadcast join-back of the
+        1-row total, not a single-partition window over the aggregate."""
+        plan = plan_of(spark, sf_dir, "q_corpus_stats")
+        assert "Broadcast" in plan
+        assert "Window" not in plan
+
+    def test_quality_buckets_window_only_after_aggregate(self, spark, sf_dir):
+        """Threshold binning is a projection + partial-agg groupBy; the
+        lang_share window must consume the aggregated langs x 10 table
+        (its input exchange carries the agg keys), never the raw docs."""
+        plan = plan_of(spark, sf_dir, "q_quality_buckets")
+        assert "SinglePartition" not in plan
+        window_idx = plan.find("Window")
+        agg_idx = plan.find("HashAggregate")
+        assert window_idx != -1 and agg_idx != -1
+        # executedPlan prints top-down: the window node sits ABOVE (before)
+        # the aggregate it consumes.
+        assert window_idx < agg_idx
+
+    def test_length_histogram_totals_broadcast(self, spark, sf_dir):
+        """Grand totals must attach to the ~20 bucket rows via a broadcast
+        of a single-row aggregate — no SinglePartition exchange over data
+        and no window."""
+        plan = plan_of(spark, sf_dir, "q_length_histogram")
+        assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
+        assert "Window" not in plan
+
+
+class TestTimeSeriesPlans:
+    """Windowed and time-series operators over the event stream: every
+    window is keyed by the sensor or event type, never unpartitioned."""
+
+    def test_gap_fill_window_is_keyed_not_global(self, spark, sf_dir):
+        """LOCF forward fill must window over the high-cardinality sensor
+        key — a SinglePartition window would serialize the whole stream."""
+        plan = plan_of(spark, sf_dir, "q_gap_fill")
+        assert "Window" in plan
+        assert "SinglePartition" not in plan
+        assert "hashpartitioning(user_id" in plan
+
+    def test_cube_summary_expands_in_one_scan(self, spark, sf_dir):
+        """CUBE must plan as ONE scan feeding Expand + partial aggregate,
+        not four separate aggregation jobs."""
+        plan = plan_of(spark, sf_dir, "q_cube_summary")
+        assert "Expand" in plan
+        assert plan.count("Scan parquet") == 1
+
+    def test_trend_slope_single_pass_aggregates(self, spark, sf_dir):
+        """regr_* compile to one partial+final aggregate pair over the
+        daily series — no self-join, no window."""
+        plan = plan_of(spark, sf_dir, "q_trend_slope")
+        assert "Window" not in plan
+        assert plan.count("Scan parquet") == 1
+
+    def test_ewma_windows_are_partitioned(self, spark, sf_dir):
+        """The cumulative-sum windows must be keyed by event_type — an
+        unpartitioned window would serialize the whole series through one
+        task (the WindowExec warning path)."""
+        plan = plan_of(spark, sf_dir, "q_ewma_daily")
+        import re
+
+        for m in re.finditer(r"windowspecdefinition\(([^)]*)\)", plan):
+            assert "event_type" in m.group(1), m.group(0)
+
+    def test_rolling_median_window_partitions_by_user(self, spark, sf_dir):
+        """The bounded-frame median must window per sensor key — an
+        unpartitioned (SinglePartition) window would serialize the whole
+        daily grain through one task at 100 TB."""
+        plan = plan_of(spark, sf_dir, "q_rolling_median")
+        assert "user_id" in plan
+        assert "SinglePartition" not in plan
+        assert "CartesianProduct" not in plan
+
+
+class TestBehaviorStatsPlans:
+    """Audience set operations and two-sample statistics over events."""
+
+    def test_audience_setops_are_semi_anti_joins(self, spark, sf_dir):
+        """INTERSECT/EXCEPT must compile to LeftSemi/LeftAnti on distinct
+        inputs — never a cross product or a full outer reconciliation."""
+        plan = plan_of(spark, sf_dir, "q_audience_setops")
+        assert "LeftSemi" in plan
+        assert "LeftAnti" in plan
+        assert "CartesianProduct" not in plan
+
+    def test_welch_and_psi_have_no_window(self, spark, sf_dir):
+        """Both stats reduce via partial aggregates; a Window anywhere
+        means someone reintroduced a per-row pass."""
+        for q in ("q_welch_ttest", "q_psi"):
+            plan = plan_of(spark, sf_dir, q)
+            assert "Window" not in plan, q
+
+
+class TestEmbeddingSearchPlans:
+    """Embedding search, quantization and semantic dedup: the corpus side
+    never shuffles when the probe side is small enough to broadcast."""
+
+    def test_semantic_decontaminate_broadcasts_eval_side(self, spark, sf_dir):
+        """Eval sets are tiny; the training corpus is the 100 TB side. The
+        band join must broadcast the eval band table so training vectors
+        never shuffle — a SortMergeJoin here would shuffle the corpus."""
+        plan = plan_of(spark, sf_dir, "q_semantic_decontaminate")
+        assert "BroadcastHashJoin" in plan
+        assert "SortMergeJoin" not in plan
+        assert "CartesianProduct" not in plan
+
+    def test_embed_quantize_stats_collapse_before_shuffle(self, spark, sf_dir):
+        """The per-dim stats pass must partial-aggregate (each partition
+        collapses to DIM rows pre-shuffle) and reach the code pass as a
+        single-row broadcast; the code/MSE projection itself must not
+        shuffle the corpus (no hash exchange keyed on corpus rows after
+        the stats join)."""
+        plan = plan_of(spark, sf_dir, "q_embed_quantize")
+        assert "partial" in plan.lower()  # map-side combine on the stats agg
+        assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
+        assert "CartesianProduct" not in plan
+        assert plan.count("FileScan parquet") == 2  # corpus read: stats + codes
+
+    def test_embed_dedup_incremental_probes_banded_store(self, spark, sf_dir):
+        """The delta side probes the SRP band store as an equi-join on
+        (band, band_key) with the delta restriction pushed to the probe
+        side — never a store self-join or an all-pairs shape."""
+        plan = plan_of(spark, sf_dir, "q_embed_dedup_incremental")
+        assert "CartesianProduct" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
+        assert "band_key" in plan
+        assert "% 4" in plan  # delta filter survives into the physical plan
+
+    def test_pq_adc_scores_via_broadcast_maps_no_corpus_shuffle(self, spark, sf_dir):
+        """ADC search must be a map-lookup expression over the codes scan:
+        the per-query LUTs ride a broadcast (BroadcastNestedLoopJoin of a
+        10-row side is the fan-out, never a shuffled join of the corpus),
+        and the top-k is the rank-limited window (WindowGroupLimit
+        Partial)."""
+        plan = plan_of(spark, sf_dir, "q_pq_adc_knn")
+        assert "WindowGroupLimit" in plan and "Partial" in plan
+        assert "CartesianProduct" not in plan
+        assert "SortMergeJoin" not in plan
+
+    def test_ivf_adc_candidates_equi_join_no_corpus_shuffle(self, spark, sf_dir):
+        """IVFADC's candidate generation must be a hash EQUI-join of the
+        codes scan against the broadcast (query, cell) probe table — the
+        shape a label-partitioned codes table partition-prunes at scale —
+        never a cartesian/sort-merge of the corpus; LUT scoring rides
+        broadcasts and the top-k is the rank-limited window."""
+        plan = plan_of(spark, sf_dir, "q_ivf_adc_knn")
+        assert "BroadcastHashJoin" in plan
+        assert "WindowGroupLimit" in plan and "Partial" in plan
+        assert "CartesianProduct" not in plan
+        assert "SortMergeJoin" not in plan
+
+    def test_residual_ivfadc_same_shape_as_ivfadc(self, spark, sf_dir):
+        """The residual variant must keep q_ivf_adc_knn's plan posture:
+        candidate generation a broadcast hash EQUI-join on the cell label
+        (partition-prunable at scale), top-k the rank-limited window,
+        no cartesian/sort-merge of the corpus; the residual subtraction
+        rides the broadcast centroid join inside the corpus scan."""
+        plan = plan_of(spark, sf_dir, "q_ivfadc_residual_knn")
+        assert "BroadcastHashJoin" in plan
+        assert "WindowGroupLimit" in plan and "Partial" in plan
+        assert "CartesianProduct" not in plan
+        assert "SortMergeJoin" not in plan
+
+
+class TestServeAndIncrementalPlans:
+    """The serve read paths and the CDC / snapshot / incremental-dedup
+    family."""
+
+    def test_serve_request_audit_broadcasts_requests(self, spark, sf_dir):
+        """The request table is API-log-sized next to events: it must ride
+        a BroadcastHashJoin into the one fact pass, never shuffle events
+        by request key."""
+        plan = plan_of(spark, sf_dir, "q_serve_request_audit")
+        assert "BroadcastHashJoin" in plan
+        assert "CartesianProduct" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
+
+    def test_serve_sensors_page_take_ordered(self, spark, sf_dir):
+        """limit+orderBy must lower to TakeOrderedAndProject — the page is
+        assembled from per-partition top-k, not a global sort."""
+        plan = plan_of(spark, sf_dir, "q_serve_sensors_page")
+        assert "TakeOrderedAndProject" in plan
+
+    def test_serve_sensor_detail_pushes_sensor_filter(self, spark, sf_dir):
+        """The /sensors/{id} detail must prune to the one sensor at the
+        scan (row-group skip), not post-filter an aggregate."""
+        plan = plan_of(spark, sf_dir, "q_serve_sensor_detail")
+        assert "PushedFilters: [" in plan
+        assert "EqualTo(user_id" in plan
+
+    def test_cdc_apply_is_partial_agg_no_window(self, spark, sf_dir):
+        """CDC state is a struct-max argmax: map-side partial aggregation,
+        one key shuffle, NO window over change history."""
+        plan = plan_of(spark, sf_dir, "q_cdc_apply")
+        assert "partial_max" in plan or "partial" in plan.lower()
+        assert "WindowExec" not in plan and "RunningWindowFunction" not in plan
+
+    def test_snapshot_diff_join_reuses_key_partitioning(self, spark, sf_dir):
+        """The v1/v2 full-outer join keys match the aggregation keys, so
+        the join must be a SortMergeJoin over the aggregate outputs with
+        no cartesian/broadcast-NL fallback."""
+        plan = plan_of(spark, sf_dir, "q_snapshot_diff")
+        assert "FullOuter" in plan
+        assert "CartesianProduct" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
+
+    def test_dedup_incremental_band_joins_only_the_delta(self, spark, sf_dir):
+        """Incremental dedup must probe the standing signature store with
+        TODAY's band rows only: the delta restriction (doc_id % 4 == 0) is
+        a pre-join filter on the probe side, the join stays a hash/merge
+        join on (band, band_key), and no all-pairs shape may appear — at
+        100 TB the store side must never self-join."""
+        plan = plan_of(spark, sf_dir, "q_dedup_incremental")
+        assert "CartesianProduct" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
+        assert "band_key" in plan
+        assert "% 4" in plan  # delta filter survives into the physical plan
+
+
+class TestLinkagePlans:
+    """Entity linkage, graph closure and keyed pair joins: every candidate
+    join is blocked or broadcast, never a cartesian product."""
+
+    def test_linkage_joins_dictionary_broadcast(self, spark, sf_dir):
+        """The edit-distance candidate join runs on the deduplicated name
+        dictionary via broadcast — never a SortMergeJoin of the catalog."""
+        plan = plan_of(spark, sf_dir, "q_name_linkage")
+        assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+        assert "SortMergeJoin" not in plan
+        assert "CartesianProduct" not in plan
+
+    def test_triangles_have_no_cartesian(self, spark, sf_dir):
+        """Edge-wedge triangle closure must stay equi-join keyed (the
+        canonical u<v edges make every leg an equi-join); the only BNLJ
+        allowed is the final scalar single-row stat cross."""
+        plan = plan_of(spark, sf_dir, "q_cosupply_triangles")
+        assert "CartesianProduct" not in plan
+
+    def test_editdist_refine_joins_inside_blocks_only(self, spark, sf_dir):
+        """The candidate join must be an equi-join on the blocking key
+        (lang, n_tokens, block3) with the doc_id< residual — a cartesian
+        or broadcast-NL here is the quadratic catastrophe at corpus
+        scale."""
+        plan = plan_of(spark, sf_dir, "q_editdist_refine")
+        assert "CartesianProduct" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
+
+    def test_bloom_join_probes_stay_in_codegen(self, spark, sf_dir):
+        """The bloom probe must lower to broadcast HASH joins on the
+        (word, bits) relation — a one-row-array crossJoin variant fused
+        the probe into a BroadcastNestedLoopJoin condition, which Spark
+        evaluates interpreted (measured 6x slower at sf0.1)."""
+        plan = plan_of(spark, sf_dir, "q_bloom_join")
+        assert "BroadcastNestedLoopJoin" not in plan
+        assert "CartesianProduct" not in plan
+        # 3 probe joins + the exact false-positive-removing join
+        assert plan.count("BroadcastHashJoin") >= 4
+
+    def test_setjoin_candidates_join_on_prefix_tokens(self, spark, sf_dir):
+        """Candidate generation must be an equi-join on the hashed prefix
+        token (SortMergeJoin/ShuffledHashJoin/BroadcastHashJoin on token
+        equality) with the doc_id inequality and length filter as join
+        residuals — the all-pairs product the prefix filter exists to
+        avoid must not appear."""
+        plan = plan_of(spark, sf_dir, "q_jaccard_setjoin")
+        assert "CartesianProduct" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
+        assert "token" in plan
+
+
+class TestRankingPlans:
+    def test_bm25_filters_terms_before_posting_agg(self, spark, sf_dir):
+        """The query-term filter must land before the (doc, token)
+        aggregate (the posting list is |terms| wide, not |vocab|), the
+        scalar stats must arrive as broadcasts, and the final top-k must
+        terminate via TakeOrderedAndProject — never a global sort."""
+        plan = plan_of(spark, sf_dir, "q_bm25_rank")
+        assert "TakeOrderedAndProject" in plan
+        assert "Sort [" not in plan.split("TakeOrderedAndProject")[0]
+        assert "BroadcastExchange" in plan or "BroadcastNestedLoopJoin" in plan
+        assert "CartesianProduct" not in plan
+
+    def test_unigram_ppl_moves_counts_not_text(self, spark, sf_dir):
+        """After the explode, every exchange must carry (doc_id, token,
+        count) — the text column must not appear in any Exchange — and
+        the tf aggregate must partial-aggregate map-side."""
+        plan = plan_of(spark, sf_dir, "q_unigram_ppl")
+        assert "partial" in plan.lower()
+        for ln in plan.splitlines():
+            if "Exchange" in ln:
+                assert "text" not in ln
+        assert "CartesianProduct" not in plan
+
+    def test_bigram_ppl_broadcasts_vocab_sides(self, spark, sf_dir):
+        """Scoring joins bigram instances to vocabulary-sized count
+        tables; at fixture scale AQE must pick broadcast for them (the
+        corpus side never builds a hash table)."""
+        plan = plan_of(spark, sf_dir, "q_bigram_ppl")
+        assert "BroadcastHashJoin" in plan
+        assert "CartesianProduct" not in plan
+
+    def test_rrf_fusion_topk_terminates_and_no_corpus_sort_merge(
+        self, spark, sf_dir
+    ):
+        """RRF's final top-k must terminate via TakeOrderedAndProject (no
+        full-result sort), and the BM25/LM derivations stay on broadcast
+        joins at fixture scale — no cartesian ever."""
+        plan = plan_of(spark, sf_dir, "q_rrf_fusion")
+        assert "TakeOrderedAndProject" in plan
+        assert "CartesianProduct" not in plan
+
+
+class TestMiningAndClippingPlans:
+    def test_hard_negatives_broadcasts_queries_no_cartesian_shuffle(
+        self, spark, sf_dir
+    ):
+        """Both contrastive branches must be broadcast probes of the
+        query batch with WindowGroupLimit top-1 (each partition ships at
+        most one candidate per query per branch) — never a CartesianProduct
+        and never a corpus-wide hash exchange before ranking."""
+        plan = plan_of(spark, sf_dir, "q_hard_negatives")
+        assert "CartesianProduct" not in plan
+        assert "WindowGroupLimit" in plan
+        assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
+
+    def test_winsorize_bounds_broadcast_back_no_window(self, spark, sf_dir):
+        """The per-type percentile bounds must partial-aggregate and
+        broadcast back onto the fact rows — no Window over the
+        low-cardinality event_type and no second shuffle of events."""
+        plan = plan_of(spark, sf_dir, "q_winsorize")
+        assert "Window" not in plan
+        assert "BroadcastHashJoin" in plan
+        assert "SortMergeJoin" not in plan
+
+
+class TestBilateralAndAntiPlans:
+    def test_nation_volume_broadcasts_pruned_dims(self, spark, sf_dir):
+        """Q7 shape: the 2-nation prune must reach the nation scans as
+        pushed filters, supplier/customer chains broadcast, and the only
+        non-broadcast join is the lineitem<->orders fact join."""
+        plan = plan_of(spark, sf_dir, "q_nation_volume")
+        assert plan.count("BroadcastHashJoin") >= 3
+        assert "CartesianProduct" not in plan
+        nation_scans = [
+            ln
+            for ln in plan.splitlines()
+            if "FileScan parquet" in ln and "nation" in ln and "n_name" in ln
+        ]
+        assert nation_scans and "PushedFilters: [In(n_name" in nation_scans[0]
+
+    def test_dormant_rich_is_left_anti_with_scalar_broadcast(
+        self, spark, sf_dir
+    ):
+        """Q22 shape: the global-average threshold must arrive as a
+        single-row broadcast (no SinglePartition shuffle of customers)
+        and the NOT EXISTS must compile to a LeftAnti equi-join."""
+        plan = plan_of(spark, sf_dir, "q_dormant_rich")
+        assert "LeftAnti" in plan
+        assert "CartesianProduct" not in plan
+        assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
+
+
+class TestConditionalAggPlans:
+    def test_promo_share_is_one_pass_with_pushed_range(self, spark, sf_dir):
+        """Q14 shape: the shipdate range must reach the lineitem scan as
+        PushedFilters, part must broadcast, and both the guarded and
+        unguarded sums must come from ONE aggregate (single lineitem
+        scan, no self-join)."""
+        plan = plan_of(spark, sf_dir, "q_promo_share")
+        li_scan = [
+            ln
+            for ln in plan.splitlines()
+            if "FileScan parquet" in ln and "lineitem" in ln
+        ]
+        assert li_scan and "l_shipdate" in li_scan[0].split("PushedFilters")[-1]
+        assert "BroadcastHashJoin" in plan
+        assert plan.count("FileScan parquet") == 2  # lineitem + part, once each
+
+
+class TestEntropyPlans:
+    def test_token_entropy_is_two_aggregates_no_window(self, spark, sf_dir):
+        """The H = ln(N) - sum(tf*ln(tf))/N identity must keep the plan
+        to two partial-aggregated groupBys — no Window operator, no
+        SinglePartition exchange, and text never rides an exchange."""
+        plan = plan_of(spark, sf_dir, "q_token_entropy")
+        assert "Window" not in plan
+        assert "partial" in plan.lower()
+        for ln in plan.splitlines():
+            if "Exchange" in ln:
+                assert "text" not in ln
+                assert "SinglePartition" not in ln
+        assert "CartesianProduct" not in plan
 
 
 class TestCorpusAndRobustStatsPlans:
@@ -769,72 +1047,6 @@ class TestFunctionSurfacePlans:
         assert plan.count("Exchange hashpartitioning") == 1
 
 
-class TestLateRound4Tier:
-    def test_linkage_joins_dictionary_broadcast(self, spark, sf_dir):
-        """The edit-distance candidate join runs on the deduplicated name
-        dictionary via broadcast — never a SortMergeJoin of the catalog."""
-        plan = plan_of(spark, sf_dir, "q_name_linkage")
-        assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-        assert "SortMergeJoin" not in plan
-        assert "CartesianProduct" not in plan
-
-    def test_triangles_have_no_cartesian(self, spark, sf_dir):
-        """Edge-wedge triangle closure must stay equi-join keyed (the
-        canonical u<v edges make every leg an equi-join); the only BNLJ
-        allowed is the final scalar single-row stat cross."""
-        plan = plan_of(spark, sf_dir, "q_cosupply_triangles")
-        assert "CartesianProduct" not in plan
-
-    def test_repeated_substrings_shuffles_hashes_not_text(self, spark, sf_dir):
-        """After the n-gram explode only md5 hashes and positions move;
-        no Exchange row schema may carry the text column."""
-        plan = plan_of(spark, sf_dir, "q_repeated_substrings")
-        for ln in plan.splitlines():
-            if "Exchange hashpartitioning" in ln:
-                assert "text" not in ln, ln
-
-    def test_welch_and_psi_have_no_window(self, spark, sf_dir):
-        """Both stats reduce via partial aggregates; a Window anywhere
-        means someone reintroduced a per-row pass."""
-        for q in ("q_welch_ttest", "q_psi"):
-            plan = plan_of(spark, sf_dir, q)
-            assert "Window" not in plan, q
-
-    def test_trend_slope_single_pass_aggregates(self, spark, sf_dir):
-        """regr_* compile to one partial+final aggregate pair over the
-        daily series — no self-join, no window."""
-        plan = plan_of(spark, sf_dir, "q_trend_slope")
-        assert "Window" not in plan
-        assert plan.count("Scan parquet") == 1
-
-    def test_curation_pipeline_scans_documents_twice_max(self, spark, sf_dir):
-        """The composite recipe computes all four gates in one projection
-        over the derived corpus (documents + planted copies = two scans
-        of the same file); four chained standalone operators would scan
-        at least four times."""
-        plan = plan_of(spark, sf_dir, "q_curation_pipeline")
-        assert plan.count("Scan parquet") <= 4  # corpus union (2) x reuse
-        assert "CartesianProduct" not in plan
-
-    def test_ewma_windows_are_partitioned(self, spark, sf_dir):
-        """The cumulative-sum windows must be keyed by event_type — an
-        unpartitioned window would serialize the whole series through one
-        task (the WindowExec warning path)."""
-        plan = plan_of(spark, sf_dir, "q_ewma_daily")
-        import re
-
-        for m in re.finditer(r"windowspecdefinition\(([^)]*)\)", plan):
-            assert "event_type" in m.group(1), m.group(0)
-
-    def test_bigram_ppl_broadcasts_vocab_sides(self, spark, sf_dir):
-        """Scoring joins bigram instances to vocabulary-sized count
-        tables; at fixture scale AQE must pick broadcast for them (the
-        corpus side never builds a hash table)."""
-        plan = plan_of(spark, sf_dir, "q_bigram_ppl")
-        assert "BroadcastHashJoin" in plan
-        assert "CartesianProduct" not in plan
-
-
 class TestClosingTier:
     def test_open_orders_no_calendar_join(self, spark, sf_dir):
         """Interval counting must be the event-ized form: one scan of
@@ -926,13 +1138,6 @@ class TestContinuationTierPlans:
         "q_mix_shift",
     )
 
-    def _plan(self, spark, sf_dir, name) -> str:
-        from real_time_iot_data_engineering_pipeline_spark import registry
-
-        registry.load_all()
-        df = registry.QUERIES[name](spark, sf_dir)
-        return df._jdf.queryExecution().executedPlan().toString()
-
     def test_no_cartesian_or_python_rows(self, spark, sf_dir):
         # Scalar-broadcast crossJoins (1-row totals) legitimately compile
         # to BroadcastNestedLoopJoin, and the eval scorecards broadcast a
@@ -942,7 +1147,7 @@ class TestContinuationTierPlans:
         # keyed bucket join instead of an all-pairs scan.
         no_bnlj = {"q_simhash_pairs", "q_doc_containment", "q_also_bought"}
         for name in self._NAMES:
-            plan = self._plan(spark, sf_dir, name)
+            plan = plan_of(spark, sf_dir, name)
             assert "CartesianProduct" not in plan, name
             if name in no_bnlj:
                 assert "BroadcastNestedLoopJoin" not in plan, name
@@ -951,27 +1156,20 @@ class TestContinuationTierPlans:
 
     def test_topk_shapes(self, spark, sf_dir):
         for name in ("q_skew_report", "q_ctr_wilson", "q_hill_tail", "q_vocab_coverage"):
-            assert "TakeOrderedAndProject" in self._plan(spark, sf_dir, name), name
-        assert "WindowGroupLimit" in self._plan(spark, sf_dir, "q_also_bought")
+            assert "TakeOrderedAndProject" in plan_of(spark, sf_dir, name), name
+        assert "WindowGroupLimit" in plan_of(spark, sf_dir, "q_also_bought")
 
     def test_broadcast_shapes(self, spark, sf_dir):
         for name in ("q_mixture_sample", "q_market_concentration", "q_mix_shift"):
-            assert "BroadcastHashJoin" in self._plan(spark, sf_dir, name), name
+            assert "BroadcastHashJoin" in plan_of(spark, sf_dir, name), name
 
 
 class TestSummariesAndTwinsTier:
-    """Round-6 sketch/summary/stateful-twin tier: the bounded-state plans
+    """Sketch, summary and stateful-twin tier: the bounded-state plans
     these operators claim (mergeable bottom-k, bucketed prefix sums,
     partition-local MG summaries, keyed CUSUM windows) asserted as physical
     shapes, so a refactor can't silently reintroduce an unbounded state or
     an unpartitioned window."""
-
-    def _plan(self, spark, sf_dir, name) -> str:
-        from real_time_iot_data_engineering_pipeline_spark import registry
-
-        registry.load_all()
-        df = registry.QUERIES[name](spark, sf_dir)
-        return df._jdf.queryExecution().executedPlan().toString()
 
     def _specs(self, plan: str) -> list[str]:
         import re
@@ -1003,7 +1201,7 @@ class TestSummariesAndTwinsTier:
             "q_stopword_profile",
             "q_minhash_band_tuning",
         ):
-            plan = self._plan(spark, sf_dir, name)
+            plan = plan_of(spark, sf_dir, name)
             assert "CartesianProduct" not in plan, name
             assert "BatchEvalPython" not in plan, name
             assert "ArrowEvalPython" not in plan, name
@@ -1012,7 +1210,7 @@ class TestSummariesAndTwinsTier:
         """Bottom-k-by-hash must compile to TakeOrderedAndProject (each
         partition keeps k rows, driver merges partitions x k) — a global
         Sort + Limit would shuffle the whole corpus through one task."""
-        plan = self._plan(spark, sf_dir, "q_bottomk_sample")
+        plan = plan_of(spark, sf_dir, "q_bottomk_sample")
         assert "TakeOrderedAndProject" in plan
         assert plan.count("Scan parquet") == 1
 
@@ -1020,14 +1218,14 @@ class TestSummariesAndTwinsTier:
         """The cumulative row count runs PARTITIONED by the arithmetic
         range bucket; the only unpartitioned window is over the <= B-row
         bucket-offset table.  Every windowspec must therefore carry bkt."""
-        plan = self._plan(spark, sf_dir, "q_partition_plan")
+        plan = plan_of(spark, sf_dir, "q_partition_plan")
         specs = self._specs(plan)
         assert specs, "expected window operators in the plan"
         for s in specs:
             assert "bkt" in s, s
 
     def test_quantile_bins_windows_are_group_keyed(self, spark, sf_dir):
-        plan = self._plan(spark, sf_dir, "q_quantile_bins")
+        plan = plan_of(spark, sf_dir, "q_quantile_bins")
         for s in self._specs(plan):
             assert "grp" in s, s
         assert "BroadcastHashJoin" in plan
@@ -1036,7 +1234,7 @@ class TestSummariesAndTwinsTier:
         """All four cumulative windows (c+/c- sums, running minima) must be
         keyed by user_id — the Lindley closed form is per-sensor math and an
         unpartitioned window would serialize the fleet through one task."""
-        plan = self._plan(spark, sf_dir, "q_cusum_alarm")
+        plan = plan_of(spark, sf_dir, "q_cusum_alarm")
         specs = self._specs(plan)
         assert specs
         for s in specs:
@@ -1048,7 +1246,7 @@ class TestSummariesAndTwinsTier:
         """Sketch and moment aggregates are one partial+final pass over one
         scan — no window, no join, no second read of events."""
         for name in ("q_hll_distinct", "q_welford_stats"):
-            plan = self._plan(spark, sf_dir, name)
+            plan = plan_of(spark, sf_dir, name)
             assert plan.count("Scan parquet") == 1, name
             assert "Window" not in plan, name
 
@@ -1056,20 +1254,46 @@ class TestSummariesAndTwinsTier:
         """Phase 1 is partition-local Arrow batches (MapInPandas); phase 2
         recounts via a BROADCAST semi-join of the bounded candidate set —
         never a shuffle of the corpus on the candidate key."""
-        plan = self._plan(spark, sf_dir, "q_misra_gries")
+        plan = plan_of(spark, sf_dir, "q_misra_gries")
         assert "MapInPandas" in plan
         assert "BroadcastHashJoin" in plan
         assert "SortMergeJoin" not in plan
 
     def test_bloom_probe_is_hash_join_on_bit_positions(self, spark, sf_dir):
-        plan = self._plan(spark, sf_dir, "q_bloom_membership")
+        plan = plan_of(spark, sf_dir, "q_bloom_membership")
         assert "BroadcastHashJoin" in plan
         assert "BroadcastNestedLoopJoin" not in plan
 
+    def test_misra_gries_recount_is_broadcast(self, spark, sf_dir):
+        plan = plan_of(spark, sf_dir, "q_misra_gries")
+        assert "BroadcastHashJoin" in plan
+        assert "CartesianProduct" not in plan
+
+    def test_band_tuning_joins_on_keys_no_cartesian(self, spark, sf_dir):
+        plan = plan_of(spark, sf_dir, "q_minhash_band_tuning")
+        assert "CartesianProduct" not in plan
+
+    def test_bottomk_uses_take_ordered_not_global_sort(self, spark, sf_dir):
+        plan = plan_of(spark, sf_dir, "q_bottomk_sample")
+        assert "TakeOrderedAndProject" in plan
+
+    def test_quantile_bins_never_sorts_the_table(self, spark, sf_dir):
+        """The whole point: quantiles WITHOUT a global sort.  The only Sort
+        allowed is inside the per-(group, q) window over the single target
+        bin (post-broadcast-join, data already reduced)."""
+        plan = plan_of(spark, sf_dir, "q_quantile_bins")
+        assert "BroadcastHashJoin" in plan
+        assert "Exchange rangepartitioning" not in plan
+
+    def test_bloom_probe_is_broadcast(self, spark, sf_dir):
+        plan = plan_of(spark, sf_dir, "q_bloom_membership")
+        assert "BroadcastHashJoin" in plan
+        assert "CartesianProduct" not in plan
+
 
 class TestTotalOrderRewrites:
-    """Round-6 late rewrites: the three total-order statistics (deciles,
-    Gini rank, Pareto cumulative share) must run their data-sized windows
+    """The three total-order statistics (deciles, Gini rank, Pareto
+    cumulative share) must run their data-sized windows
     PARTITIONED by the prefix-plan bucket — the unpartitioned ntile /
     row_number / running-sum shapes they replaced are the plans that
     single-task at scale.  Like q_rank_per_group, the bucketed plan is
@@ -1136,214 +1360,4 @@ class TestTotalOrderRewrites:
             con.close()
         problems = compare(sdf, ddf)
         assert not problems, f"{name}[bucketed]: " + " | ".join(problems)
-
-
-class TestRound7Plans:
-    """Plan shapes for the round-7 additions: the serve read paths, the
-    CDC argmax family, and the content-blocked pair join."""
-
-    def test_serve_request_audit_broadcasts_requests(self, spark, sf_dir):
-        """The request table is API-log-sized next to events: it must ride
-        a BroadcastHashJoin into the one fact pass, never shuffle events
-        by request key."""
-        plan = plan_of(spark, sf_dir, "q_serve_request_audit")
-        assert "BroadcastHashJoin" in plan
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
-
-    def test_serve_sensors_page_take_ordered(self, spark, sf_dir):
-        """limit+orderBy must lower to TakeOrderedAndProject — the page is
-        assembled from per-partition top-k, not a global sort."""
-        plan = plan_of(spark, sf_dir, "q_serve_sensors_page")
-        assert "TakeOrderedAndProject" in plan
-
-    def test_serve_sensor_detail_pushes_sensor_filter(self, spark, sf_dir):
-        """The /sensors/{id} detail must prune to the one sensor at the
-        scan (row-group skip), not post-filter an aggregate."""
-        plan = plan_of(spark, sf_dir, "q_serve_sensor_detail")
-        assert "PushedFilters: [" in plan
-        assert "EqualTo(user_id" in plan
-
-    def test_cdc_apply_is_partial_agg_no_window(self, spark, sf_dir):
-        """CDC state is a struct-max argmax: map-side partial aggregation,
-        one key shuffle, NO window over change history."""
-        plan = plan_of(spark, sf_dir, "q_cdc_apply")
-        assert "partial_max" in plan or "partial" in plan.lower()
-        assert "WindowExec" not in plan and "RunningWindowFunction" not in plan
-
-    def test_snapshot_diff_join_reuses_key_partitioning(self, spark, sf_dir):
-        """The v1/v2 full-outer join keys match the aggregation keys, so
-        the join must be a SortMergeJoin over the aggregate outputs with
-        no cartesian/broadcast-NL fallback."""
-        plan = plan_of(spark, sf_dir, "q_snapshot_diff")
-        assert "FullOuter" in plan
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
-
-    def test_editdist_refine_joins_inside_blocks_only(self, spark, sf_dir):
-        """The candidate join must be an equi-join on the blocking key
-        (lang, n_tokens, block3) with the doc_id< residual — a cartesian
-        or broadcast-NL here is the quadratic catastrophe at corpus
-        scale."""
-        plan = plan_of(spark, sf_dir, "q_editdist_refine")
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
-
-    def test_bloom_join_probes_stay_in_codegen(self, spark, sf_dir):
-        """The bloom probe must lower to broadcast HASH joins on the
-        (word, bits) relation — a one-row-array crossJoin variant fused
-        the probe into a BroadcastNestedLoopJoin condition, which Spark
-        evaluates interpreted (measured 6x slower at sf0.1)."""
-        plan = plan_of(spark, sf_dir, "q_bloom_join")
-        assert "BroadcastNestedLoopJoin" not in plan
-        assert "CartesianProduct" not in plan
-        # 3 probe joins + the exact false-positive-removing join
-        assert plan.count("BroadcastHashJoin") >= 4
-
-    def test_lag_features_window_partitions_by_user(self, spark, sf_dir):
-        """The lag window must partition by the high-cardinality user key
-        (tiny per-key series), never run unpartitioned."""
-        plan = plan_of(spark, sf_dir, "q_lag_features")
-        assert "user_id" in plan
-        # an unpartitioned window would log/plan a single-partition sort
-        assert "SinglePartition" not in plan
-
-    def test_dedup_incremental_band_joins_only_the_delta(self, spark, sf_dir):
-        """Incremental dedup must probe the standing signature store with
-        TODAY's band rows only: the delta restriction (doc_id % 4 == 0) is
-        a pre-join filter on the probe side, the join stays a hash/merge
-        join on (band, band_key), and no all-pairs shape may appear — at
-        100 TB the store side must never self-join."""
-        plan = plan_of(spark, sf_dir, "q_dedup_incremental")
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
-        assert "band_key" in plan
-        assert "% 4" in plan  # delta filter survives into the physical plan
-
-
-class TestRound9Tier:
-    def test_group_split_is_one_agg_plus_hash_join(self, spark, sf_dir):
-        """Group split must stay a content-hash partial agg + hash-keyed
-        join-back with the split as a pure projection: no window, no
-        cartesian, no nested-loop anywhere."""
-        plan = plan_of(spark, sf_dir, "q_group_split")
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
-        assert "Window" not in plan
-        assert "content_hash" in plan
-
-    def test_embed_dedup_incremental_probes_banded_store(self, spark, sf_dir):
-        """The delta side probes the SRP band store as an equi-join on
-        (band, band_key) with the delta restriction pushed to the probe
-        side — never a store self-join or an all-pairs shape."""
-        plan = plan_of(spark, sf_dir, "q_embed_dedup_incremental")
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
-        assert "band_key" in plan
-        assert "% 4" in plan  # delta filter survives into the physical plan
-
-    def test_rolling_median_window_partitions_by_user(self, spark, sf_dir):
-        """The bounded-frame median must window per sensor key — an
-        unpartitioned (SinglePartition) window would serialize the whole
-        daily grain through one task at 100 TB."""
-        plan = plan_of(spark, sf_dir, "q_rolling_median")
-        assert "user_id" in plan
-        assert "SinglePartition" not in plan
-        assert "CartesianProduct" not in plan
-
-    def test_setjoin_candidates_join_on_prefix_tokens(self, spark, sf_dir):
-        """Candidate generation must be an equi-join on the hashed prefix
-        token (SortMergeJoin/ShuffledHashJoin/BroadcastHashJoin on token
-        equality) with the doc_id inequality and length filter as join
-        residuals — the all-pairs product the prefix filter exists to
-        avoid must not appear."""
-        plan = plan_of(spark, sf_dir, "q_jaccard_setjoin")
-        assert "CartesianProduct" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
-        assert "token" in plan
-
-
-class TestRound10Plans:
-    def test_source_cap_limits_before_exchange(self, spark, sf_dir):
-        """Domain capping is a rank-limited window: Catalyst must compile
-        `row_number() <= K` into a Partial-mode WindowGroupLimit ahead of
-        the exchange (each map partition ships at most K rows per source
-        — the 100 TB shape, same pin as q_topk_per_group)."""
-        plan = plan_of(spark, sf_dir, "q_source_cap")
-        assert "WindowGroupLimit" in plan and "Partial" in plan
-
-    def test_shard_assign_is_one_partial_agg_no_join(self, spark, sf_dir):
-        """The shard manifest is a projection + ONE hash partial-agg on a
-        uniform 16-ary key: exactly one exchange (for the final agg), no
-        join, no window — the cheapest possible full-corpus pass."""
-        plan = plan_of(spark, sf_dir, "q_shard_assign")
-        assert plan.count("Exchange") == 1, plan
-        for bad in ("Join", "Window", "CartesianProduct"):
-            assert bad not in plan, bad
-        assert "partial_count" in plan or "HashAggregate" in plan
-
-    def test_text_normalize_is_arrow_python_no_shuffle(self, spark, sf_dir):
-        """NFC runs as the Arrow-batched Python stage (ArrowEvalPython),
-        never row-at-a-time (BatchEvalPython), and the op is shuffle-free
-        — it must run as wide as the scan."""
-        plan = plan_of(spark, sf_dir, "q_text_normalize")
-        assert "ArrowEvalPython" in plan
-        assert "BatchEvalPython" not in plan
-        assert "Exchange" not in plan
-
-    def test_pq_adc_scores_via_broadcast_maps_no_corpus_shuffle(self, spark, sf_dir):
-        """ADC search must be a map-lookup expression over the codes scan:
-        the per-query LUTs ride a broadcast (BroadcastNestedLoopJoin of a
-        10-row side is the fan-out, never a shuffled join of the corpus),
-        and the top-k is the rank-limited window (WindowGroupLimit
-        Partial)."""
-        plan = plan_of(spark, sf_dir, "q_pq_adc_knn")
-        assert "WindowGroupLimit" in plan and "Partial" in plan
-        assert "CartesianProduct" not in plan
-        assert "SortMergeJoin" not in plan
-
-    def test_ivf_adc_candidates_equi_join_no_corpus_shuffle(self, spark, sf_dir):
-        """IVFADC's candidate generation must be a hash EQUI-join of the
-        codes scan against the broadcast (query, cell) probe table — the
-        shape a label-partitioned codes table partition-prunes at scale —
-        never a cartesian/sort-merge of the corpus; LUT scoring rides
-        broadcasts and the top-k is the rank-limited window."""
-        plan = plan_of(spark, sf_dir, "q_ivf_adc_knn")
-        assert "BroadcastHashJoin" in plan
-        assert "WindowGroupLimit" in plan and "Partial" in plan
-        assert "CartesianProduct" not in plan
-        assert "SortMergeJoin" not in plan
-
-    def test_residual_ivfadc_same_shape_as_ivfadc(self, spark, sf_dir):
-        """The residual variant must keep q_ivf_adc_knn's plan posture:
-        candidate generation a broadcast hash EQUI-join on the cell label
-        (partition-prunable at scale), top-k the rank-limited window,
-        no cartesian/sort-merge of the corpus; the residual subtraction
-        rides the broadcast centroid join inside the corpus scan."""
-        plan = plan_of(spark, sf_dir, "q_ivfadc_residual_knn")
-        assert "BroadcastHashJoin" in plan
-        assert "WindowGroupLimit" in plan and "Partial" in plan
-        assert "CartesianProduct" not in plan
-        assert "SortMergeJoin" not in plan
-
-    def test_dsir_model_join_is_broadcast(self, spark, sf_dir):
-        """DSIR's log-ratio model is O(512 buckets) by construction — its
-        join back over the per-doc bucket counts must be a broadcast hash
-        join (the corpus side never shuffles for the model), with no
-        sort-merge anywhere: the only data-scale exchange is the
-        (doc_id, bucket) partial-aggregate."""
-        plan = plan_of(spark, sf_dir, "q_dsir_weights")
-        assert "BroadcastHashJoin" in plan
-        assert "SortMergeJoin" not in plan
-        assert "CartesianProduct" not in plan
-
-    def test_rrf_fusion_topk_terminates_and_no_corpus_sort_merge(
-        self, spark, sf_dir
-    ):
-        """RRF's final top-k must terminate via TakeOrderedAndProject (no
-        full-result sort), and the BM25/LM derivations stay on broadcast
-        joins at fixture scale — no cartesian ever."""
-        plan = plan_of(spark, sf_dir, "q_rrf_fusion")
-        assert "TakeOrderedAndProject" in plan
-        assert "CartesianProduct" not in plan
 

@@ -177,6 +177,61 @@ class TestDlqReplay:
         assert still[0].validation_failures == "out_of_range:value"
         assert still[0].data_quality_flag == "invalid"
 
+    def test_replay_of_topology_dlq_keeps_the_dlq_row_contract(
+        self, spark, tmp_path
+    ):
+        """Replaying a DLQ that run_topology wrote, under unchanged rules,
+        recovers nothing and gives back every quarantined row as it was
+        written: the out-of-range row keeps its reason, the non-JSON line
+        keeps its raw payload and its leading malformed:json reason, and
+        recovered rows carry no payload column."""
+        from real_time_iot_data_engineering_pipeline_spark.streaming.pipeline import (
+            CORRUPT_COL,
+        )
+        from real_time_iot_data_engineering_pipeline_spark.streaming.router import (
+            replay_dlq,
+        )
+        from real_time_iot_data_engineering_pipeline_spark.streaming.topology import (
+            run_topology,
+        )
+
+        src = tmp_path / "src"
+        src.mkdir()
+        kw = dict(props='{"k": 7}', event_type="click")
+        write_file(
+            str(src),
+            "f1.json",
+            [
+                dict(ev(1, "2024-01-19 10:00:00", value=5.0), **kw),
+                dict(ev(2, "2024-01-19 10:00:01", value=500.0), **kw),
+            ],
+            seq=0,
+        )
+        with open(src / "f1.json", "a") as f:
+            f.write("%%% not json %%%\n")
+
+        res = run_topology(spark, str(src), str(tmp_path / "out"))
+        cols = ["event_id", "validation_failures", "raw_payload"]
+        written = sorted(
+            (tuple(r) for r in res.read_dlq().select(cols).collect()),
+            key=lambda t: (t[0] is not None, t[0]),
+        )
+        assert [t[0] for t in written] == [None, 2]
+        assert written[0][1].startswith("malformed:json;")
+        assert written[0][2] == "%%% not json %%%"
+        assert written[1][1] == "out_of_range:value"
+
+        replay = replay_dlq(spark, res.dlq_dir)
+        assert replay.recovered.count() == 0
+        assert "raw_payload" not in replay.recovered.columns
+        assert CORRUPT_COL not in replay.recovered.columns
+        assert replay.still_failing.columns == res.read_dlq().columns
+        again = sorted(
+            (tuple(r) for r in replay.still_failing.select(cols).collect()),
+            key=lambda t: (t[0] is not None, t[0]),
+        )
+        assert again == written
+
 
     def test_router_quarantines_malformed_with_payload(self, spark, tmp_path):
         """The router's DLQ gets the same malformed:json + raw_payload

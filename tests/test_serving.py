@@ -124,7 +124,7 @@ class TestEndpoints:
 
 
 class TestLiveSinkDashboard:
-    """Round-6 verdict ask #6: the reference dashboard reads the
+    """The reference dashboard reads the
     CONTINUOUSLY-UPSERTED aggregate table (docs/topic3_usage_guide.md:
     187-189), not a static frame.  Drive run_topology's keyed sink epoch
     by epoch and read it back through ServingLayer mid-stream: the API

@@ -4,6 +4,9 @@ force, candidate-set pruning, and the multimodal decode-stub contract."""
 
 from __future__ import annotations
 
+import math
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -563,7 +566,7 @@ class TestIvfAdc:
     def test_ivfadc_equals_flat_adc_restricted_to_probed_cells(
         self, spark, sf_dir
     ):
-        """The restriction golden VERDICT r10 asked for: IVFADC's output must
+        """The restriction golden: IVFADC's output must
         equal the flat ADC ranking (q_pq_adc_knn's scoring, recomputed in
         numpy) restricted to the query's nprobe nearest cells — i.e. cell
         routing changes WHICH codes are scanned, never how they score."""
@@ -844,3 +847,61 @@ class TestSemDeDup:
         assert len(found) >= 0.9 * len(same), (len(found), len(same))
         for a, b in found:
             assert rows[a].keep != rows[b].keep, (a, b)
+
+
+class TestEmbeddingOps:
+    def test_label_balance_matches_python(self, spark, sf_dir):
+        import pyarrow.parquet as pq
+
+        labels = pq.read_table(
+            f"{sf_dir}/embeddings.parquet", columns=["label"]
+        ).to_pydict()["label"]
+        c = Counter(labels)
+        n = len(labels)
+        h = -sum((v / n) * math.log(v / n) for v in c.values())
+        rows = registry.QUERIES["q_label_balance"](spark, sf_dir).collect()
+        assert len(rows) == len(c)
+        for r in rows:
+            assert r["n"] == c[r["label"]]
+            assert r["entropy"] == pytest.approx(h, abs=1e-5)
+            assert r["imbalance_ratio"] == pytest.approx(
+                max(c.values()) / min(c.values()), abs=1e-5
+            )
+
+    def test_centroid_drift_matches_python(self, spark, sf_dir):
+        """Full pure-Python recompute of both half-centroids and their
+        cosine.  (On this fixture labels are NOT geometric clusters — the
+        embeddings are label-independent noise — so the drift score is
+        legitimately low/noisy; the operator's job is to measure it, and
+        the recompute certifies the measurement, not a cluster shape.)"""
+        import pyarrow.parquet as pq
+
+        t = pq.read_table(
+            f"{sf_dir}/embeddings.parquet",
+            columns=["vec_id", "embedding", "label"],
+        ).to_pydict()
+        sums: dict[tuple[int, int], list[float]] = {}
+        counts: Counter = Counter()
+        for vid, emb, lab in zip(t["vec_id"], t["embedding"], t["label"]):
+            key = (lab, vid % 2)
+            acc = sums.setdefault(key, [0.0] * len(emb))
+            for i, v in enumerate(emb):
+                acc[i] += float(v)
+            counts[key] += 1
+        rows = registry.QUERIES["q_embed_centroid_drift"](
+            spark, sf_dir
+        ).collect()
+        assert rows
+        for r in rows:
+            lab = r["label"]
+            assert r["n_a"] == counts[(lab, 0)]
+            assert r["n_b"] == counts[(lab, 1)]
+            ca = [s / counts[(lab, 0)] for s in sums[(lab, 0)]]
+            cb = [s / counts[(lab, 1)] for s in sums[(lab, 1)]]
+            dot = sum(a * b for a, b in zip(ca, cb))
+            na = math.sqrt(sum(a * a for a in ca))
+            nb = math.sqrt(sum(b * b for b in cb))
+            assert -1.0 <= r["centroid_cos"] <= 1.0
+            assert r["centroid_cos"] == pytest.approx(
+                dot / (na * nb), abs=1e-5
+            )

@@ -200,7 +200,7 @@ class TestWindowedPipeline:
         assert not os.path.isdir(orphan)  # debris collected
 
     def test_sink_gc_keeps_previous_version_one_upsert(self, spark, tmp_path):
-        """GC lag of 1 (ADVICE r02): after a commit, the version the pointer
+        """GC lag of 1: after a commit, the version the pointer
         previously referenced must survive one more upsert so a reader that
         resolved the old pointer can finish its lazy scan; versions two
         commits old are collected."""

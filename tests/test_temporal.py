@@ -28,6 +28,8 @@ from pyspark.sql.types import (
 from real_time_iot_data_engineering_pipeline_spark import registry
 from real_time_iot_data_engineering_pipeline_spark.queries.temporal import asof_join
 
+from .test_plans import plan_of
+
 registry.load_all()
 
 
@@ -119,16 +121,12 @@ class TestAsofSemantics:
 
 
 class TestTemporalPlans:
-    def _plan(self, spark, sf_dir, name):
-        df = registry.QUERIES[name](spark, sf_dir)
-        return df._jdf.queryExecution().executedPlan().toString()
-
     def test_asof_windows_are_bucketed(self, spark, sf_dir):
         """The per-event window must partition by (key, bucket) — a window
         keyed by event_type alone is the 5-straggler plan at 100 TB.  The
         only key-alone window allowed is the carry-in over the metadata-
         scale bucket spine."""
-        plan = self._plan(spark, sf_dir, "q_asof_join")
+        plan = plan_of(spark, sf_dir, "q_asof_join")
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
         # main window partitions by both key and bucket
@@ -141,7 +139,7 @@ class TestTemporalPlans:
         """Interval join must be a broadcast HASH join on (key, bucket) with
         the range check as a residual — an inequality-only join plans as
         BroadcastNestedLoop, which is O(n x m) at scale."""
-        plan = self._plan(spark, sf_dir, "q_range_join")
+        plan = plan_of(spark, sf_dir, "q_range_join")
         assert "BroadcastHashJoin" in plan
         assert "BroadcastNestedLoopJoin" not in plan
         assert "CartesianProduct" not in plan
@@ -149,7 +147,7 @@ class TestTemporalPlans:
     def test_rollup_is_single_pass_expand(self, spark, sf_dir):
         """All four grouping sets must come from ONE scan via Expand with
         partial aggregation — not N separate jobs."""
-        plan = self._plan(spark, sf_dir, "q_rollup_hypertable")
+        plan = plan_of(spark, sf_dir, "q_rollup_hypertable")
         assert "Expand" in plan
         assert "partial_count" in plan or "Partial" in plan
         # one scan of events, not four
@@ -514,7 +512,7 @@ class TestRollingMedianDeadSensor:
     """A dead-sensor stretch — days whose every reading has value NULL —
     must yield NULL rolling medians, not INVALID_INDEX_OF_ZERO: collect_list
     drops NULLs, so the 7-day frame array can be EMPTY and the unguarded
-    (size+1) div 2 index is 0 (the crash ADVICE r9 reproduced).  Parity is
+    (size+1) div 2 index is 0 (a reproduced crash).  Parity is
     asserted against the registered DuckDB oracle, whose framed median
     returns NULL for the same rows."""
 
