@@ -47,10 +47,12 @@ restricts the run to the named queries (full protocol, own detail file).
 
 from __future__ import annotations
 
+import ast
 import hashlib
 import json
 import os
 import random
+import re
 import sys
 import time
 
@@ -81,6 +83,19 @@ HEADLINE = [
     "q_text_stats",
     "q_multimodal_features",
 ]
+
+
+def timed_loop_sha(src: str) -> str:
+    """First 12 hex digits of the sha256 of the timed loop between the
+    TIMED-LOOP markers of `src`, taken over the loop's parsed AST (no
+    comments, no layout): an edit to the timing code changes it, an edit
+    to its comments does not."""
+    loop = re.search(
+        r"^[ \t]*# TIMED-LOOP-START$(.*?)^[ \t]*# TIMED-LOOP-END$", src, re.M | re.S
+    ).group(1)
+    # the loop is indented inside main(); an `if` header makes it a block
+    tree = ast.parse("if True:" + loop)
+    return hashlib.sha256(ast.dump(tree).encode()).hexdigest()[:12]
 
 
 def main() -> None:
@@ -149,7 +164,7 @@ def main() -> None:
     calib_per_pass: list[float] = []
     # The timed loop between the markers is hashed into timed_loop_sha
     # below: any edit to the timing methodology is detectable from the
-    # artifact alone.
+    # artifact alone, and a comment-only edit keeps the hash.
     # TIMED-LOOP-START
     for k in range(reps):
         order = list(names)
@@ -165,9 +180,7 @@ def main() -> None:
     # TIMED-LOOP-END
     timings = {n: round(t, 3) for n, t in timings.items()}
     with open(os.path.abspath(__file__)) as f:
-        src = f.read()
-    loop_src = src.split("# TIMED-LOOP-START")[1].split("# TIMED-LOOP-END")[0]
-    timed_loop_sha = hashlib.sha256(loop_src.encode()).hexdigest()[:12]
+        loop_sha = timed_loop_sha(f.read())
 
     # Machine adjudication vs first-seen baselines: ratio > 2.0 is the
     # contract bar; the over_bar dict IS the round's re-run worklist.
@@ -202,7 +215,7 @@ def main() -> None:
         "calib_per_pass": calib_per_pass,
         "bench_seed": seed,
         "reps": reps,
-        "timed_loop_sha": timed_loop_sha,
+        "timed_loop_sha": loop_sha,
         "baseline_ratios": ratios,
         "over_bar": over_bar,
     }

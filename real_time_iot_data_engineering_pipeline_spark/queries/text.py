@@ -1059,7 +1059,9 @@ def q_doc_dup_groups_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _store_prefix(sf_dir: str, kind: str) -> str:
     """<tmp>/spark_graft_<kind>/<digest of the fixture path>: every store
-    of that path, whatever its documents.parquet stamps, starts with it."""
+    of that path, whatever its documents.parquet stamps, starts with it,
+    and so do the stores of the earlier naming (the bare digest, and a
+    failed build's `<digest>.tmp.<pid>`)."""
     import hashlib
     import os
     import tempfile
@@ -1087,14 +1089,15 @@ def fixture_stores(sf_dir: str) -> list[str]:
     these."""
     import glob
 
-    return glob.glob(_store_prefix(sf_dir, "*") + "-*")
+    return glob.glob(_store_prefix(sf_dir, "*") + "*")
 
 
 def _fixture_store(spark: SparkSession, sf_dir: str, kind: str, build):
     """Materialize-once-per-fixture parquet store: `build()` returns the
     DataFrame to persist; the cache key is the documents.parquet
     fingerprint (path + mtime + size), so a regenerated fixture rebuilds,
-    and a rebuild removes the stores of the path's earlier fingerprints.
+    and a rebuild removes the stores of the path's earlier fingerprints
+    and of the earlier naming.
     The write is atomic (tmp dir + rename) so concurrent first callers
     cannot observe a half-written store; a build that fails removes its
     tmp dir.
@@ -1133,7 +1136,7 @@ def _fixture_store(spark: SparkSession, sf_dir: str, kind: str, build):
             os.rename(tmp, path)
         except OSError:  # lost the race; the winner's store is identical
             shutil.rmtree(tmp, ignore_errors=True)
-        for old in glob.glob(_store_prefix(sf_dir, kind) + "-*"):
+        for old in glob.glob(_store_prefix(sf_dir, kind) + "*"):
             if not old.startswith(path):
                 shutil.rmtree(old, ignore_errors=True)
     return spark.read.parquet(path)

@@ -7,12 +7,16 @@ timestamp semantics, and disable ANSI mode so string->number coercion is
 tolerant (null-on-failure), matching the reference validator's semantics
 (data_quality/validation_consumer.py:182-191).
 
-Scale posture: shuffle partitions default to one per local core.  Stateful
+Scale posture: shuffle partitions default to one per local core, which
+is the width of batch shuffles (coalesced by AQE either way).  Streams
+size their state from the input they admit per trigger instead: stateful
 streaming operators get no AQE coalescing and fix their partition count
-(one state store each) when a checkpoint is created, so more partitions
-than cores would run every stateful stage in several waves of state
-stores; batch shuffles are coalesced by AQE either way.  On a real cluster
-this is overridden (under-partitioning is what hurts at 100 TB).
+(one state store each) when a checkpoint is created, and
+streaming/launch.start_query creates it with min(this value,
+max_files_per_trigger) partitions, since a trigger of n small files has
+at most n input partitions to feed them.  On a real cluster the session
+value is overridden (under-partitioning is what hurts at 100 TB), and a
+stream admitting more per trigger gets wider state up to it.
 
 RocksDB state stores write changelog checkpoints: each micro-batch uploads
 only the rows it changed, and a full snapshot is taken in the background

@@ -24,13 +24,13 @@ replay, same protocol as the router sink).
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.tokenize import WS as _WS
 from ..sinks import micro_batch
+from .launch import drain, start_query
 from pyspark.sql import types as T
 
 DOC_WIRE_SCHEMA = T.StructType(
@@ -418,15 +418,15 @@ def run_doc_ingest(
         dsir_unseen=dsir_unseen,
         dsir_min_logw=dsir_min_logw,
     )
-    q = (
-        stream.writeStream.outputMode("update")
-        .queryName("doc-ingest")
-        .option("checkpointLocation", os.path.join(out_dir, "ckpt"))
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    nq = None
+    queries = [
+        start_query(
+            stream,
+            os.path.join(out_dir, "ckpt"),
+            max_files_per_trigger,
+            foreach_batch=sink,
+            name="doc-ingest",
+        )
+    ]
     if with_near_dup:
         from .near_dup import near_dup_stream
 
@@ -438,28 +438,15 @@ def run_doc_ingest(
             ts_col="fetched_at",
             watermark=DOC_WATERMARK_DELAY,
         )
-        nq = (
-            pairs.writeStream.outputMode("append")
-            .queryName("doc-near-dup")
-            .option(
-                "checkpointLocation", os.path.join(out_dir, "ckpt_near_dup")
+        queries.append(
+            start_query(
+                pairs,
+                os.path.join(out_dir, "ckpt_near_dup"),
+                max_files_per_trigger,
+                path=os.path.join(out_dir, "near_dup"),
+                name="doc-near-dup",
+                mode="append",
             )
-            .format("parquet")
-            .option("path", os.path.join(out_dir, "near_dup"))
-            .trigger(availableNow=True)
-            .start()
         )
-    try:
-        # One shared deadline across both queries: timeout_seconds bounds
-        # the whole call, not each awaitTermination (with_near_dup=True
-        # used to block for up to 2x the caller's budget).
-        deadline = time.monotonic() + timeout_seconds
-        q.awaitTermination(timeout_seconds)
-        if nq is not None:
-            nq.awaitTermination(max(0.0, deadline - time.monotonic()))
-    finally:
-        if q.isActive:
-            q.stop()
-        if nq is not None and nq.isActive:
-            nq.stop()
+    drain(queries, timeout_seconds)
     return sink

@@ -12,8 +12,8 @@ Beyond the reference's four numbers, each BatchMetrics keeps the progress
 event's breakdown (the quantities the Structured Streaming paper reports
 its evaluation through): the trigger's phase durations, the event-time
 watermark, and per state operator its rows, rows dropped as late by the
-watermark, and state-store memory — where a micro-batch's time went and
-what its state costs, with no debugger.
+watermark, state-store memory and state partitions — where a micro-batch's
+time went and what its state costs, with no debugger.
 """
 
 from __future__ import annotations
@@ -47,6 +47,9 @@ class StateOperatorMetrics:
     rows_updated: int
     rows_dropped_by_watermark: int
     memory_used_bytes: int
+    # numShufflePartitions: the operator's state partitions (one store
+    # each), fixed when its checkpoint was created (streaming/launch.py)
+    shuffle_partitions: int
 
 
 @dataclass
@@ -93,6 +96,7 @@ class MetricsListener(L.StreamingQueryListener):
                 rows_updated=op.numRowsUpdated or 0,
                 rows_dropped_by_watermark=op.numRowsDroppedByWatermark or 0,
                 memory_used_bytes=op.memoryUsedBytes or 0,
+                shuffle_partitions=op.numShufflePartitions or 0,
             )
             for op in (p.stateOperators or [])
         ]

@@ -21,7 +21,8 @@ Scale posture: the streaming agg is a keyed state-store aggregation — state
 size is bounded by (#keys x #open-windows) and the watermark evicts closed
 windows (RocksDB state store configured in session.py).  maxFilesPerTrigger /
 maxOffsetsPerTrigger cap per-batch input so one slow batch cannot snowball
-(backpressure envelope, streaming_job.py:96,227).
+(backpressure envelope, streaming_job.py:96,227), and the same cap sizes a
+new checkpoint's state stages (streaming/launch.py).
 """
 
 from __future__ import annotations
@@ -31,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sinks import KeyedParquetSink
+from .launch import drain, start_query
 
 # Wire schema of one event message (the JSON the reference puts on Kafka —
 # streaming_job.py:103-124; field roles per FIXTURES.md Part A: user_id <->
@@ -220,19 +222,14 @@ def run_pipeline(
     )
     agg = windowed_aggregate(parsed)
     sink = KeyedParquetSink(spark, sink_dir, AGG_KEY_COLS)
-    writer = (
-        agg.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink.foreach_batch())
+    query = start_query(
+        agg,
+        checkpoint_dir,
+        max_files_per_trigger,
+        foreach_batch=sink.foreach_batch(),
+        processing_time=None if available_now else processing_time,
     )
     if available_now:
-        query = writer.trigger(availableNow=True).start()
-        try:
-            query.awaitTermination(timeout_seconds)
-        finally:
-            if query.isActive:
-                query.stop()
-    else:
-        query = writer.trigger(processingTime=processing_time).start()
+        drain([query], timeout_seconds)
     sink.query = query
     return sink

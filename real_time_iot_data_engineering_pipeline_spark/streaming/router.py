@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from ..functions.validation import failure_reasons
 from ..queries.validation import _rules
 from ..sinks import micro_batch
+from .launch import drain, start_query
 from .pipeline import CORRUPT_COL, parse_event_stream, read_event_file_stream
 
 
@@ -113,18 +114,10 @@ def run_router(
         read_event_file_stream(spark, source_dir, max_files_per_trigger)
     )
     sink = RouterSink(out_dir)
-    query = (
-        raw.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
+    query = start_query(
+        raw, checkpoint_dir, max_files_per_trigger, foreach_batch=sink, mode="append"
     )
-    try:
-        query.awaitTermination(timeout_seconds)
-    finally:
-        if query.isActive:
-            query.stop()
+    drain([query], timeout_seconds)
     return sink
 
 

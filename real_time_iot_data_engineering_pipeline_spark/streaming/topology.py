@@ -25,11 +25,20 @@ quality monitor (with_monitor) and the stream-stream attribution join
 (with_attribution — views joined to clicks within the window,
 streaming/stream_join.py), each with its own checkpoint.
 
-Every branch's foreachBatch body is wrapped by sinks.micro_batch: the
-epoch's plan runs once, into a local checkpoint whose job also counts the
-rows, and an empty epoch is skipped.  So the main path's emptiness check
-and its merge write share one run of the dedup and window aggregation,
-whose state stores commit once per epoch.
+Every stateful branch's foreachBatch body is wrapped by
+sinks.micro_batch: the epoch's plan runs once, into a local checkpoint
+whose job also counts the rows, and an empty epoch is skipped.  So the
+main path's emptiness check and its merge write share one run of the
+dedup and window aggregation, whose state stores commit once per epoch.
+The DLQ branch is stateless, so it needs no such materialization: it
+writes its epoch straight to `epoch=<id>` in one job, and an all-valid
+epoch leaves an empty epoch directory, which read_dlq and replay_dlq read
+as zero rows.
+
+Every query starts through streaming/launch.start_query, so a new
+checkpoint's state stages are no wider than the files one trigger admits
+(max_files_per_trigger), and the drain waits for all of them under one
+deadline (launch.drain).
 """
 
 from __future__ import annotations
@@ -40,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sinks import KeyedParquetSink, micro_batch
+from .launch import drain, start_query
 from .monitor import DriftMonitorSink, QualityMonitorSink
 from .pipeline import (
     AGG_KEY_COLS,
@@ -142,22 +152,23 @@ def run_topology(
     agg_sink = KeyedParquetSink(spark, os.path.join(out_dir, "aggs"), AGG_KEY_COLS)
     dlq_dir = os.path.join(out_dir, "dlq")
 
-    def start(df: DataFrame, name: str, fb, mode: str = "update") -> object:
-        return (
-            df.writeStream.outputMode(mode)
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(out_dir, f"ckpt-{name}"))
-            .foreachBatch(fb)
-            .trigger(availableNow=True)
-            .start()
+    def start(df: DataFrame, name: str, fb, mode: str = "update"):
+        return start_query(
+            df,
+            os.path.join(out_dir, f"ckpt-{name}"),
+            max_files_per_trigger,
+            foreach_batch=fb,
+            name=name,
+            mode=mode,
         )
 
     def epoch_writer(target_dir: str):
-        """foreachBatch body appending each non-empty micro-batch under its
-        own epoch directory (idempotent on replay) — shared by every
-        file-append branch of the topology."""
+        """foreachBatch body writing each micro-batch under its own epoch
+        directory (idempotent on replay) — shared by every file-append
+        branch of the topology.  The stateless DLQ branch uses it as is,
+        one job per epoch; a stateful branch wraps it in micro_batch, so
+        the epoch's plan runs once and an empty epoch is skipped."""
 
-        @micro_batch
         def _write(batch_df: DataFrame, epoch_id: int) -> None:
             batch_df.write.mode("overwrite").parquet(
                 os.path.join(target_dir, f"epoch={int(epoch_id)}")
@@ -194,8 +205,7 @@ def run_topology(
 
     # optional attribution branch: stream-stream interval join of the
     # VALIDATED stream against itself (view -> click within the window),
-    # append-mode, its own checkpoint — the fourth consumer of the shared
-    # source listing
+    # append-mode, its own checkpoint and its own scan of the source
     attribution_dir = None
     q_attr = None
     if with_attribution:
@@ -207,7 +217,7 @@ def run_topology(
         q_attr = start(
             attributed,
             "topology-attribution",
-            epoch_writer(attribution_dir),
+            micro_batch(epoch_writer(attribution_dir)),
             mode="append",
         )
 
@@ -243,7 +253,12 @@ def run_topology(
         cusum_dir = os.path.join(out_dir, "cusum")
         flagged = cusum_stream(valid_events, mu0=cusum_mu0)
         queries.append(
-            start(flagged, "topology-cusum", epoch_writer(cusum_dir), mode="append")
+            start(
+                flagged,
+                "topology-cusum",
+                micro_batch(epoch_writer(cusum_dir)),
+                mode="append",
+            )
         )
 
     # optional online z-score gate: per-sensor Welford moments carried
@@ -258,7 +273,7 @@ def run_topology(
             start(
                 zscore_stream(valid_events),
                 "topology-zscore",
-                epoch_writer(zscore_dir),
+                micro_batch(epoch_writer(zscore_dir)),
                 mode="append",
             )
         )
@@ -275,7 +290,7 @@ def run_topology(
             start(
                 heavy_hitters_stream(valid_events),
                 "topology-flood",
-                epoch_writer(flood_dir),
+                micro_batch(epoch_writer(flood_dir)),
                 mode="append",
             )
         )
@@ -294,7 +309,7 @@ def run_topology(
             start(
                 sample_stream(valid_events),
                 "topology-sample",
-                epoch_writer(sample_dir),
+                micro_batch(epoch_writer(sample_dir)),
                 mode="append",
             )
         )
@@ -312,18 +327,12 @@ def run_topology(
             start(
                 quantile_stream(valid_events),
                 "topology-quantiles",
-                epoch_writer(quantile_dir),
+                micro_batch(epoch_writer(quantile_dir)),
                 mode="append",
             )
         )
 
-    try:
-        for q in queries:
-            q.awaitTermination(timeout_seconds)
-    finally:
-        for q in queries:
-            if q.isActive:
-                q.stop()
+    drain(queries, timeout_seconds)
     return TopologyResult(
         spark,
         agg_sink,

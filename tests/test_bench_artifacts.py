@@ -110,3 +110,21 @@ def test_dedup_similarity_families_have_sf1_baselines():
         "scripts/gen_baseline.py"
     )
 
+
+
+def test_timed_loop_sha_ignores_comments_not_code():
+    """The artifact's timed_loop_sha names the timing code, not its
+    comments: a comment added inside the loop (at any indent) keeps it,
+    a changed statement changes it."""
+    import bench
+
+    src = (REPO / "bench.py").read_text()
+    sha = bench.timed_loop_sha(src)
+    loop_line = "    for k in range(reps):\n"
+    assert src.count(loop_line) == 1
+    commented = src.replace(
+        loop_line, "    # a note\n# at column 0\n" + loop_line + "        # inside\n"
+    )
+    assert bench.timed_loop_sha(commented) == sha
+    edited = src.replace(loop_line, "    for k in range(reps + 1):\n")
+    assert bench.timed_loop_sha(edited) != sha

@@ -286,3 +286,33 @@ def test_fixture_store_keeps_one_store_per_path_and_no_failed_tmp(
     finally:
         for store in fixture_stores(str(tmp_path)):
             shutil.rmtree(store, ignore_errors=True)
+
+
+def test_fixture_store_removes_stores_of_the_earlier_naming(spark, tmp_path):
+    """Stores written before the `<path digest>-<stamp>` naming, a bare
+    path digest and a failed build's `<digest>.tmp.<pid>`, are the path's
+    superseded stores too: a build removes them, and fixture_stores lists
+    them while they exist."""
+    import os
+    import shutil
+
+    from real_time_iot_data_engineering_pipeline_spark.queries.text import (
+        _fixture_store,
+        _store_prefix,
+        fixture_store_path,
+        fixture_stores,
+    )
+
+    spark.range(3).write.parquet(str(tmp_path / "documents.parquet"))
+    kind = "test_store_legacy"
+    legacy = [_store_prefix(str(tmp_path), kind), _store_prefix(str(tmp_path), kind) + ".tmp.4242"]
+    for d in legacy:
+        os.makedirs(d)
+    try:
+        assert set(legacy) <= set(fixture_stores(str(tmp_path)))
+        assert _fixture_store(spark, str(tmp_path), kind, lambda: spark.range(4)).count() == 4
+        assert not any(os.path.exists(d) for d in legacy)
+        assert fixture_stores(str(tmp_path)) == [fixture_store_path(str(tmp_path), kind)]
+    finally:
+        for store in fixture_stores(str(tmp_path)) + legacy:
+            shutil.rmtree(store, ignore_errors=True)

@@ -1258,11 +1258,13 @@ class TestSummariesAndTwinsTier:
         assert "MapInPandas" in plan
         assert "BroadcastHashJoin" in plan
         assert "SortMergeJoin" not in plan
+        assert "CartesianProduct" not in plan
 
     def test_bloom_probe_is_hash_join_on_bit_positions(self, spark, sf_dir):
         plan = plan_of(spark, sf_dir, "q_bloom_membership")
         assert "BroadcastHashJoin" in plan
         assert "BroadcastNestedLoopJoin" not in plan
+        assert "CartesianProduct" not in plan
 
     def test_misra_gries_recount_is_broadcast(self, spark, sf_dir):
         plan = plan_of(spark, sf_dir, "q_misra_gries")
@@ -1280,10 +1282,13 @@ class TestSummariesAndTwinsTier:
     def test_quantile_bins_never_sorts_the_table(self, spark, sf_dir):
         """The whole point: quantiles WITHOUT a global sort.  The only Sort
         allowed is inside the per-(group, q) window over the single target
-        bin (post-broadcast-join, data already reduced)."""
+        bin (post-broadcast-join, data already reduced), so every window is
+        keyed by grp."""
         plan = plan_of(spark, sf_dir, "q_quantile_bins")
         assert "BroadcastHashJoin" in plan
         assert "Exchange rangepartitioning" not in plan
+        for s in self._specs(plan):
+            assert "grp" in s, s
 
     def test_bloom_probe_is_broadcast(self, spark, sf_dir):
         plan = plan_of(spark, sf_dir, "q_bloom_membership")

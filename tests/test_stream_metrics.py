@@ -80,13 +80,13 @@ def expected_state() -> list[tuple[int, int]]:
     return out
 
 
-def drain(spark, src: str, out: str, n_batches: int) -> list:
+def drain(spark, src: str, out: str, n_batches: int, max_files_per_trigger: int = 1) -> list:
     """run_topology with a MetricsListener attached; returns the main
     query's non-empty micro-batches of this run, in order."""
     listener = MetricsListener()
     spark.streams.addListener(listener)
     try:
-        run_topology(spark, src, out)
+        run_topology(spark, src, out, max_files_per_trigger=max_files_per_trigger)
         deadline = time.time() + 30
 
         def main():

@@ -170,8 +170,8 @@ def test_topology_quality_monitor_alerts_per_batch(spark, tmp_path):
 
 
 def test_topology_attribution_branch(spark, tmp_path):
-    """with_attribution=True adds the stream-stream interval join as a
-    fourth consumer of the same source: validated views join validated
+    """with_attribution=True adds the stream-stream interval join as one
+    more query over the same source: validated views join validated
     clicks within the 10-minute window; invalid events never reach the
     join; the agg/DLQ branches are unaffected."""
     src = tmp_path / "src"
