@@ -20,19 +20,36 @@ only partitions containing changed keys are re-merged and rewritten; every
 untouched partition's files carry into the new version byte-identical
 without being read, decoded, or shuffled.  A day of late data into a
 year-sized table costs one day's rewrite, not 365.  Without partition_col
-the rewrite is whole-table — still fine for the bounded aggregate stream it
-serves (<=100 sensors x a handful of open 5-minute windows, README.md:10).
-The merge itself is one hash shuffle on the key columns; the only
-driver-side data is the batch's distinct partition-value list (bounded by
-#touched partitions — the same class of scalar as the incremental-refresh
-watermark).
+every upsert reads, shuffles and rewrites the whole table.  What is
+bounded is one epoch's change (<=100 sensors x a handful of open 5-minute
+windows, README.md:10), not the table: the aggregate table keeps every
+closed window, so an upsert of one 1,000-row epoch took 0.24 s into a
+10k-row table and 0.57 s into a 1M-row one.  The merge itself is one hash
+shuffle on the key columns; the only driver-side data is the batch's
+distinct partition-value list (bounded by #touched partitions — the same
+class of scalar as the incremental-refresh watermark).
 
-Per micro-batch cost: the foreach_batch adapter runs the epoch's plan once
-(sinks/micro_batch.py) and its empty-batch fast path skips an empty epoch
-on the materialized frame, so the merge never re-executes the stream's
-stateful operators.  Every version, partitioned or not, ships its
-write-time schema in _sinkschema.json, so reading the live table back for
-the next merge (or for read()) launches no schema-inference job.
+Per micro-batch cost: without partition_col the foreach_batch adapter
+hands the epoch's frame straight to the merge, so the merge's write job is
+the one run of the stream's stateful plan.  That job also counts the
+epoch's rows, and an epoch with none leaves its version unpublished (the
+table is unchanged), so the empty-epoch skip launches no job of its own.
+It learns the epoch was empty only after the write, though, so an empty
+epoch (the no-data batch that closes a drain once the watermark moved)
+still pays a whole-table merge.  On a 4-vCPU host that batch took
+0.14-0.21 s through a micro_batch skip, and takes 0.3 s at 1k table rows,
+0.42 s at 100k and 0.92 s at 1M.  Once
+the table exists the merge reads it through the sink's session and runs
+there, so its shuffle is as wide as the table needs, not as the stream's
+state.  A retried attempt runs the epoch's plan again from the epoch's
+starting state.  A partition-pruned merge acts on the epoch twice (the
+touched partition values, then the write), so with partition_col the
+adapter runs it on the epoch materialized once, and skips an empty one,
+through sinks/micro_batch.py.
+
+Every version, partitioned or not, ships its write-time schema in
+_sinkschema.json, so reading the live table back for the next merge (or
+for read()) launches no schema-inference job.
 """
 
 from __future__ import annotations
@@ -42,7 +59,7 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -143,19 +160,28 @@ class KeyedParquetSink:
             raise FileNotFoundError(f"no data written yet under {self.root}")
         return self._read_version(current).drop(_EPOCH_COL)
 
-    def upsert(self, batch_df: DataFrame, epoch_id: int) -> None:
+    def upsert(self, batch_df: DataFrame, epoch_id: int, skip_empty: bool = False) -> None:
         """Merge `batch_df` into the table, keyed last-write-wins (higher
         epoch wins; replay of the same epoch is a no-op by value).  Mirrors
-        streaming_job.py:586-603; its empty-batch fast path lives in the
-        foreach_batch adapter, which skips an empty epoch without running
-        its plan twice (sinks/micro_batch.py).  Called directly, upsert
-        merges whatever it is given, an empty frame included.
+        streaming_job.py:586-603, whose empty-batch fast path is
+        skip_empty, set by an unpartitioned sink's foreach_batch adapter
+        (a partitioned one skips through micro_batch): the write job also
+        counts the merge input's rows of this epoch, and a version holding
+        none is dropped unpublished, since the batch was empty and the
+        table would not change.  (A replayed epoch also counts the rows its
+        first run left in the table, and publishes an equal table.)  The
+        count observes the merged frame, which lives on the session that
+        runs the write: an Observation reports only on its own frame's
+        session, and the foreachBatch frame's is the stream's clone.
+        Without skip_empty, upsert merges whatever it is given, an empty
+        frame included.
 
         Commit protocol: write the merged table to a fresh version dir,
         fsync a temp pointer, os.replace it over CURRENT (atomic on POSIX),
         then garbage-collect older versions.  Readers and crashed writers
         can never observe a partial table."""
-        incoming = batch_df.withColumn(_EPOCH_COL, F.lit(int(epoch_id)))
+        epoch = int(epoch_id)
+        incoming = batch_df.withColumn(_EPOCH_COL, F.lit(epoch))
         current = self._current()
         prev_version = os.path.basename(current) if current is not None else None
         pcol = self.partition_col
@@ -175,13 +201,18 @@ class KeyedParquetSink:
             )
         else:
             merged = incoming
+        if skip_empty:
+            rows = Observation(f"sink_rows_{uuid.uuid4().hex}")
+            merged = merged.observe(
+                rows, F.count_if(F.col(_EPOCH_COL) == epoch).alias("rows")
+            )
         w = Window.partitionBy(*self.key_cols).orderBy(F.col(_EPOCH_COL).desc())
         deduped = (
             merged.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        version = f"v{int(epoch_id)}-{os.getpid()}-{uuid.uuid4().hex[:8]}"
+        version = f"v{epoch}-{os.getpid()}-{uuid.uuid4().hex[:8]}"
         out = os.path.join(self.root, version)
         if pcol is not None:
             deduped.write.mode("overwrite").partitionBy(pcol).parquet(out)
@@ -189,6 +220,9 @@ class KeyedParquetSink:
                 self._carry_untouched_partitions(current, out)
         else:
             deduped.write.mode("overwrite").parquet(out)
+        if skip_empty and rows.get["rows"] == 0:
+            shutil.rmtree(out, ignore_errors=True)
+            return
         self._write_schema(out, deduped.schema)
         self._commit(version, prev_version)
 
@@ -321,18 +355,23 @@ class KeyedParquetSink:
         the batch replays, and compact() is a no-op when already tight."""
         from .retry import with_retry
 
-        @micro_batch
+        # A whole-table merge acts on the epoch once, in its write, which
+        # also counts the rows to skip an empty epoch.  A pruned merge acts
+        # twice (the touched partition values, then the write), so it runs
+        # on the epoch materialized once, and micro_batch skips it if empty.
+        pruned = self.partition_col is not None
+
         def _fn(batch_df: DataFrame, epoch_id: int) -> None:
+            def _upsert() -> None:
+                self.upsert(batch_df, epoch_id, skip_empty=not pruned)
+
             if retry_attempts <= 1:
-                self.upsert(batch_df, epoch_id)
+                _upsert()
             else:
-                with_retry(
-                    lambda: self.upsert(batch_df, epoch_id),
-                    max_attempts=retry_attempts,
-                )
+                with_retry(_upsert, max_attempts=retry_attempts)
             if compact_every > 0 and int(epoch_id) % compact_every == (
                 compact_every - 1
             ):
                 self.compact()
 
-        return _fn
+        return micro_batch(_fn) if pruned else _fn

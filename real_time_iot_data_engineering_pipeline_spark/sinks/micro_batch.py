@@ -1,4 +1,5 @@
-"""One execution per micro-batch for every foreachBatch body.
+"""One execution per micro-batch for a foreachBatch body with more than
+one action.
 
 A foreachBatch frame is the epoch's whole incremental plan, stateful
 operators included, and every action on it re-runs that plan: the state
@@ -7,6 +8,12 @@ counts each state operator's rows once per run.  A body that guards with
 isEmpty() and then writes (the reference's df.rdd.isEmpty() fast path,
 streaming_job.py:586-603) therefore pays for its epoch twice, and a body
 with two writes pays once more per write.
+
+A body with one action runs the plan once without this wrapper, and the
+wrapper's own job would be one more per epoch: an unpartitioned keyed
+sink's merge counts the epoch's rows in its write job to skip an empty
+epoch (sinks/keyed_parquet.py), and the topology's stateless DLQ branch
+writes its frame directly.
 
 `micro_batch` runs the plan exactly once, into executor block storage
 (localCheckpoint, eager), skips the body when the epoch produced no rows,

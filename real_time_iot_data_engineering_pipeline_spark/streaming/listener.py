@@ -60,6 +60,8 @@ class BatchMetrics:
     state_rows: int  # numRowsTotal summed over the state operators
     is_slow: bool
     query_name: str | None = None  # progress.name; None for unnamed queries
+    # progress.runId, the job group of every Spark job the run launches
+    run_id: str | None = None
     # seconds per PHASES entry; a phase the trigger did not run reads 0.0
     phase_seconds: dict[str, float] = field(default_factory=dict)
     watermark: str | None = None  # eventTime.watermark (ISO-8601, UTC)
@@ -107,6 +109,7 @@ class MetricsListener(L.StreamingQueryListener):
             state_rows=sum(op.rows_total for op in ops),
             is_slow=duration > self.slow_batch_seconds,
             query_name=p.name,
+            run_id=str(p.runId),
             phase_seconds={ph: durations.get(ph, 0) / 1000.0 for ph in PHASES},
             watermark=(p.eventTime or {}).get("watermark"),
             state_operators=ops,

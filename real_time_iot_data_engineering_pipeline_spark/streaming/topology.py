@@ -25,12 +25,13 @@ quality monitor (with_monitor) and the stream-stream attribution join
 (with_attribution — views joined to clicks within the window,
 streaming/stream_join.py), each with its own checkpoint.
 
-Every stateful branch's foreachBatch body is wrapped by
-sinks.micro_batch: the epoch's plan runs once, into a local checkpoint
-whose job also counts the rows, and an empty epoch is skipped.  So the
-main path's emptiness check and its merge write share one run of the
-dedup and window aggregation, whose state stores commit once per epoch.
-The DLQ branch is stateless, so it needs no such materialization: it
+The main path's keyed sink runs each epoch's dedup and window
+aggregation inside its merge write, whose job also counts the rows to
+skip an empty epoch (sinks/keyed_parquet.py), so their state stores
+commit once per epoch.  The other stateful branches append through
+epoch_writer wrapped in sinks.micro_batch: the epoch's plan runs once,
+into a local checkpoint whose job also counts the rows, and an empty
+epoch is skipped.  The DLQ branch is stateless and needs neither: it
 writes its epoch straight to `epoch=<id>` in one job, and an all-valid
 epoch leaves an empty epoch directory, which read_dlq and replay_dlq read
 as zero rows.

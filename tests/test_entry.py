@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import importlib.util
 import json
+import os
 import subprocess
 import sys
 from pathlib import Path
@@ -14,6 +15,51 @@ import pytest
 from real_time_iot_data_engineering_pipeline_spark import registry
 
 ENTRY = Path(__file__).resolve().parents[1] / "__spark_entry__.py"
+ORACLE_UTILS = Path(__file__).resolve().parent / "oracle_utils.py"
+
+# The queries whose Python workers run a function of the package
+# (mapInPandas over a module-level body).
+WORKER_QUERIES = (
+    "q_misra_gries",
+    "q_ttl_dedup",
+    "q_multimodal_features",
+    "q_multimodal_framesample",
+    "q_multimodal_resize",
+)
+
+# A driver's session as an external harness builds it: Spark's default ANSI,
+# a non-UTC zone, no build_session, and the entry file loaded by path, so
+# the repo reaches the driver's sys.path through that file alone.  Prints
+# {query: compare problems, or the error it raised} as JSON.
+DRIVER_LEG = """
+import importlib.util, json, sys
+from pyspark.sql import SparkSession
+
+def load(name, path):
+    spec = importlib.util.spec_from_file_location(name, path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+entry_path, oracle_utils_path, sf_dir, *names = sys.argv[1:]
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.sql.shuffle.partitions", "4")
+         .config("spark.sql.session.timeZone", "America/New_York")
+         .config("spark.ui.enabled", "false").getOrCreate())
+entry = load("__spark_entry__", entry_path)
+ou = load("oracle_utils", oracle_utils_path)
+con = ou.duck_connection(sf_dir)
+queries, oracles = entry.queries(), entry.oracle_sql()
+problems = {}
+for name in names:
+    try:
+        got = queries[name](spark, sf_dir).toPandas()
+        problems[name] = ou.compare(got, con.execute(oracles[name]).fetchdf())[:3]
+    except Exception as exc:
+        problems[name] = [str(exc).strip().splitlines()[-1][:300]]
+spark.stop()
+print(json.dumps(problems))
+"""
 
 
 @pytest.fixture(scope="module")
@@ -60,3 +106,24 @@ def test_fresh_load_lists_queries_in_module_order():
 
 def test_entry_returns_rows(entry_module, spark):
     assert entry_module.entry(spark).count() > 0
+
+
+def test_worker_queries_run_from_any_working_directory(sf_dir, tmp_path):
+    """A driver running from outside the repo: every query whose Python
+    worker runs a package function still matches its DuckDB oracle.  The
+    worker cannot import the package there, so the function must travel
+    by value (registry.load_all)."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["PYSPARK_PYTHON"] = sys.executable
+    run = subprocess.run(
+        [sys.executable, "-c", DRIVER_LEG, str(ENTRY), str(ORACLE_UTILS), sf_dir, *WORKER_QUERIES],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
+    problems = json.loads(run.stdout.splitlines()[-1])
+    assert sorted(problems) == sorted(WORKER_QUERIES)
+    assert {name: p for name, p in problems.items() if p} == {}

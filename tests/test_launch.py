@@ -1,7 +1,8 @@
 """How the streaming entry points start and drain their queries
 (streaming/launch.py): one deadline for a whole drain, state stages no
 wider than the input one trigger admits, a checkpoint that keeps the
-width it was created with, and the stateless DLQ branch's direct write."""
+width it was created with and commits its files by rename, and the
+stateless DLQ branch's direct write."""
 
 from __future__ import annotations
 
@@ -156,6 +157,19 @@ def test_a_checkpoint_keeps_the_state_width_it_was_created_with(spark, tmp_path)
     got = aggregates(resumed.read())
     assert got == aggregates(again.read())
     assert sum(c for c, *_ in got.values()) == sum(len(f) - 1 for f in FILES)
+
+
+def test_checkpoint_files_commit_through_the_file_system(spark, tmp_path):
+    """Under build_session a local checkpoint's offset, commit and state
+    files commit with FileSystem.rename, which is rename(2), instead of
+    FileContext.rename, whose link-status lookup forks processes when the
+    Hadoop client has no native library."""
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path / "ckpt")),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert manager.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
 
 
 def test_an_all_valid_epoch_leaves_the_dlq_readable(spark, tmp_path):

@@ -1,23 +1,39 @@
 """What a micro-batch of the topology reports about itself: stateful work
-counted once per epoch, the listener's progress breakdown, and a state
-checkpoint that survives a change of checkpoint format.
+counted once per epoch, into the keyed sink whether it is partitioned or
+not, the listener's progress breakdown, a retried merge that leaves the
+table of a clean drain, and a state checkpoint that survives a change of
+checkpoint format.
 
-Each test drives run_topology over two files (one file per micro-batch)
-and compares against a pure-Python recount of the same rows."""
+Each test drives the topology's main path over two files (one file per
+micro-batch) and compares against a pure-Python recount of the same rows."""
 
 from __future__ import annotations
 
 import datetime as dt
+import functools
 import glob
 import os
+import re
 import time
 
 import pytest
 
-from real_time_iot_data_engineering_pipeline_spark.sinks import KeyedParquetSink
+from real_time_iot_data_engineering_pipeline_spark.sinks import KeyedParquetSink, retry
 from real_time_iot_data_engineering_pipeline_spark.streaming import MetricsListener
+from real_time_iot_data_engineering_pipeline_spark.streaming.launch import (
+    drain as drain_queries,
+)
+from real_time_iot_data_engineering_pipeline_spark.streaming.launch import start_query
 from real_time_iot_data_engineering_pipeline_spark.streaming.listener import PHASES
-from real_time_iot_data_engineering_pipeline_spark.streaming.pipeline import AGG_KEY_COLS
+from real_time_iot_data_engineering_pipeline_spark.streaming.pipeline import (
+    AGG_KEY_COLS,
+    CORRUPT_COL,
+    dedup_stream,
+    parse_event_stream,
+    read_event_file_stream,
+    windowed_aggregate,
+)
+from real_time_iot_data_engineering_pipeline_spark.streaming.router import validated_stream
 from real_time_iot_data_engineering_pipeline_spark.streaming.topology import (
     run_topology,
 )
@@ -80,35 +96,74 @@ def expected_state() -> list[tuple[int, int]]:
     return out
 
 
-def drain(spark, src: str, out: str, n_batches: int, max_files_per_trigger: int = 1) -> list:
-    """run_topology with a MetricsListener attached; returns the main
-    query's non-empty micro-batches of this run, in order."""
+def listen(spark, run, name: str, n_batches: int) -> list:
+    """Call run() with a MetricsListener attached; returns query `name`'s
+    non-empty micro-batches of this run, in order."""
     listener = MetricsListener()
     spark.streams.addListener(listener)
     try:
-        run_topology(spark, src, out, max_files_per_trigger=max_files_per_trigger)
+        run()
         deadline = time.time() + 30
 
-        def main():
-            return [
-                b for b in listener.batches
-                if b.query_name == "topology-main" and b.num_input_rows > 0
-            ]
+        def batches():
+            return [b for b in listener.batches if b.query_name == name and b.num_input_rows > 0]
 
-        while time.time() < deadline and len(main()) < n_batches:
+        while time.time() < deadline and len(batches()) < n_batches:
             time.sleep(0.2)
     finally:
         spark.streams.removeListener(listener)
-    return sorted(main(), key=lambda b: b.batch_id)
+    return sorted(batches(), key=lambda b: b.batch_id)
+
+
+def drain(spark, src: str, out: str, n_batches: int, max_files_per_trigger: int = 1) -> list:
+    """run_topology, listened to; returns the main query's non-empty
+    micro-batches of this run, in order."""
+    return listen(
+        spark,
+        lambda: run_topology(spark, src, out, max_files_per_trigger=max_files_per_trigger),
+        "topology-main",
+        n_batches,
+    )
+
+
+def write_batches(src) -> None:
+    src.mkdir()
+    for seq, rows in enumerate(BATCHES):
+        write_file(str(src), f"f{seq}.json", rows, seq=seq)
+
+
+def recount() -> dict[tuple[int, int], int]:
+    """Rows per (sensor, window) over every batch."""
+    seen: set = set()
+    expected: dict = {}
+    for rows in BATCHES:
+        for r in valid_unique(rows, seen):
+            k = window_key(r)
+            expected[k] = expected.get(k, 0) + 1
+    return expected
+
+
+def table_counts(sink: KeyedParquetSink) -> dict[tuple[int, int], int]:
+    return {
+        (r.user_id, int(r.window_start.replace(tzinfo=dt.timezone.utc).timestamp())): r["count"]
+        for r in sink.read().collect()
+    }
+
+
+def aggregation_state(batches: list) -> list[tuple[int, int]]:
+    """(keys updated, keys held) of the aggregation's state per batch."""
+    out = []
+    for b in batches:
+        (agg,) = [op for op in b.state_operators if op.name == "stateStoreSave"]
+        out.append((agg.rows_updated, agg.rows_total))
+    return out
 
 
 @pytest.fixture(scope="module")
 def two_batches(spark, tmp_path_factory):
     root = tmp_path_factory.mktemp("stream-metrics")
     src = root / "src"
-    src.mkdir()
-    for seq, rows in enumerate(BATCHES):
-        write_file(str(src), f"f{seq}.json", rows, seq=seq)
+    write_batches(src)
     return drain(spark, str(src), str(root / "out"), len(BATCHES))
 
 
@@ -118,11 +173,89 @@ def test_stateful_metrics_count_each_epoch_once(two_batches):
     foreachBatch body that guards with isEmpty() before writing runs it
     twice and reports every figure doubled."""
     assert len(two_batches) == len(BATCHES)
-    got = []
-    for b in two_batches:
-        (agg,) = [op for op in b.state_operators if op.name == "stateStoreSave"]
-        got.append((agg.rows_updated, agg.rows_total))
-    assert got == expected_state()
+    assert aggregation_state(two_batches) == expected_state()
+
+
+def jobs_of_batch(spark, b) -> int:
+    """Spark jobs micro-batch `b` ran, from the status tracker: a run's
+    jobs carry its run id as job group and `batch = <id>` in their
+    description."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    return sum(
+        1
+        for job in sc.statusTracker().getJobIdsForGroup(b.run_id)
+        if re.search(r"batch = (\d+)", store.job(job).description().get()).group(1)
+        == str(b.batch_id)
+    )
+
+
+def test_a_main_epoch_runs_only_its_merge_jobs(spark, two_batches):
+    """The keyed sink runs each epoch's stateful plan inside its merge
+    write, with no job of its own to materialize the epoch first.  The
+    first merge has no table to read and runs on the stream's session,
+    without AQE, in one job; the second reads the table through the
+    sink's session, whose AQE runs the merge's shuffle as its own job."""
+    assert [jobs_of_batch(spark, b) for b in two_batches] == [1, 2]
+
+
+def test_a_pruned_merge_runs_each_epoch_plan_once(spark, tmp_path):
+    """A partitioned sink's merge acts on its epoch twice (the touched
+    partition values, then the write), so its adapter runs the epoch's
+    plan once into a local checkpoint: the aggregation's state metrics
+    equal the recount, not twice it, and the table holds the recount."""
+    src = tmp_path / "src"
+    write_batches(src)
+    sink = KeyedParquetSink(spark, str(tmp_path / "aggs"), AGG_KEY_COLS, partition_col="user_id")
+    valid = validated_stream(parse_event_stream(read_event_file_stream(spark, str(src))))
+    main = windowed_aggregate(
+        dedup_stream(valid.filter("is_valid").drop("failure_reasons", "is_valid", CORRUPT_COL)),
+        watermark_delay=None,
+    )
+
+    def run():
+        query = start_query(
+            main, str(tmp_path / "ckpt"), 1, foreach_batch=sink.foreach_batch(), name="pruned"
+        )
+        drain_queries([query], 60)
+
+    assert aggregation_state(listen(spark, run, "pruned", len(BATCHES))) == expected_state()
+    assert table_counts(sink) == recount()
+
+
+def test_a_retried_merge_leaves_the_table_of_a_clean_drain(spark, tmp_path, monkeypatch):
+    """The keyed sink's merge write runs the epoch's stateful plan, so a
+    retried attempt (run_topology retries each merge) runs the dedup and
+    the aggregation again from the epoch's starting state.  A drain whose
+    second merge fails once at its commit leaves the same table as a clean
+    drain, holding the recount, and no extra version behind."""
+    monkeypatch.setattr(retry, "with_retry", functools.partial(retry.with_retry, sleep=lambda s: None))
+    src = tmp_path / "src"
+    write_batches(src)
+    drain(spark, str(src), str(tmp_path / "clean"), len(BATCHES))
+
+    commit, commits = KeyedParquetSink._commit, []
+
+    def fail_second_commit(self, version, prev_version):
+        commits.append(version)
+        if len(commits) == 2:
+            raise OSError("injected commit failure")
+        commit(self, version, prev_version)
+
+    monkeypatch.setattr(KeyedParquetSink, "_commit", fail_second_commit)
+    batches = drain(spark, str(src), str(tmp_path / "retried"), len(BATCHES))
+    assert [b.num_input_rows for b in batches] == [len(rows) for rows in BATCHES]
+    assert len(commits) == 3
+
+    clean, retried = (
+        KeyedParquetSink(spark, str(tmp_path / name / "aggs"), AGG_KEY_COLS)
+        for name in ("clean", "retried")
+    )
+    assert sorted(retried.read().drop("processed_at").collect()) == sorted(
+        clean.read().drop("processed_at").collect()
+    )
+    assert len(os.listdir(retried.root)) == len(os.listdir(clean.root))
+    assert table_counts(retried) == recount()
 
 
 def test_listener_keeps_the_progress_breakdown(two_batches):
@@ -175,15 +308,5 @@ def test_snapshot_checkpoint_resumes_with_changelog_checkpointing(spark, tmp_pat
     assert [b.num_input_rows for b in second] == [len(BATCHES[1])]
     assert second[0].batch_id > first[-1].batch_id
 
-    seen: set = set()
-    expected: dict = {}
-    for rows in BATCHES:
-        for r in valid_unique(rows, seen):
-            k = window_key(r)
-            expected[k] = expected.get(k, 0) + 1
     aggs = KeyedParquetSink(spark, os.path.join(out, "aggs"), AGG_KEY_COLS)
-    got = {
-        (r.user_id, int(r.window_start.replace(tzinfo=dt.timezone.utc).timestamp())): r["count"]
-        for r in aggs.read().collect()
-    }
-    assert got == expected
+    assert table_counts(aggs) == recount()
