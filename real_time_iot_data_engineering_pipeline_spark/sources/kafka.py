@@ -3,16 +3,17 @@
 The reference reads with startingOffsets=latest, failOnDataLoss=false and an
 ingest cap of maxOffsetsPerTrigger=10000 (spark_streaming/streaming_job.py:
 205-230), and produces keyed-by-sensor JSON with an idempotent producer
-(data_generator/producer.py:196-217,250-302).  This container has no Kafka
-broker or connector jar, so these builders only *configure* readers/writers;
-tests assert the option sets and the key/value projection, and the streaming
-tests drive the same downstream plan through the file source
+(data_generator/producer.py:196-217,250-302).  These builders only
+return options and frames: scripts/kafka_smoke.py builds a Kafka reader and
+writer from them on a host with a broker and the spark-sql-kafka connector.
+Tests assert the option sets and the key/value projection, and the streaming
+tests drive the downstream plan through the file source
 (streaming/pipeline.py::read_event_file_stream).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 RAW_TOPIC = "raw_iot_data"  # kafka/topics_config.json:3-13
@@ -35,15 +36,6 @@ def kafka_source_options(
         "maxOffsetsPerTrigger": str(max_offsets_per_trigger),
         "failOnDataLoss": str(fail_on_data_loss).lower(),
     }
-
-
-def kafka_stream_reader(spark: SparkSession, **overrides):
-    """A configured (unstarted) readStream for the raw topic.  Calling
-    .load() requires the spark-sql-kafka connector on the classpath."""
-    reader = spark.readStream.format("kafka")
-    for k, v in kafka_source_options(**overrides).items():
-        reader = reader.option(k, v)
-    return reader
 
 
 def to_kafka_sink_frame(df: DataFrame, key_col: str = "user_id") -> DataFrame:

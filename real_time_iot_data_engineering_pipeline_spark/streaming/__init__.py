@@ -2,9 +2,13 @@
 
 Re-expresses the reference's streaming job (spark_streaming/streaming_job.py:
 readStream kafka -> from_json parse -> withWatermark + 5-minute windowed agg
--> outputMode(update) -> foreachBatch Mongo upsert) as one Spark plan over a
-pluggable source: a file source for deterministic tests, the same Kafka
-options for production (sources/kafka.py).
+-> outputMode(update) -> foreachBatch Mongo upsert) as Spark plans over a
+JSON-lines file source.  Two entry points start streaming queries:
+topology.run_topology (the event stream: validate, route, aggregate, with
+its optional branches) and doc_pipeline.run_doc_ingest (the document
+stream).  sources/kafka.py holds the reference's Kafka options; only
+scripts/kafka_smoke.py builds a Kafka reader from them, on a host with a
+broker and the connector jar.
 """
 
 from .listener import MetricsListener
@@ -12,19 +16,15 @@ from .pipeline import (
     dedup_stream,
     parse_event_stream,
     read_event_file_stream,
-    run_pipeline,
     windowed_aggregate,
 )
-from .router import RouterSink, run_router, validated_stream
+from .router import validated_stream
 
 __all__ = [
     "MetricsListener",
-    "RouterSink",
     "dedup_stream",
     "parse_event_stream",
     "read_event_file_stream",
-    "run_pipeline",
-    "run_router",
     "validated_stream",
     "windowed_aggregate",
 ]

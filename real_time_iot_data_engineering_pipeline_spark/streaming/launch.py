@@ -1,8 +1,10 @@
 """Starting and draining the engine's streaming queries.
 
-Every streaming entry point (run_topology, run_pipeline, run_router,
-run_doc_ingest) starts its queries through `start_query` and, when it
-drains with AvailableNow, waits for them through `drain`.
+The package's two streaming entry points, topology.run_topology and
+doc_pipeline.run_doc_ingest, start their queries through `start_query`,
+the one caller of `writeStream` in streaming/, and, when they drain with
+AvailableNow, wait for them through `drain` (tests/test_launch.py checks
+both rules).
 
 State width.  A stateful operator (dedup, window aggregation, the
 applyInPandasWithState twins) keeps one state store per shuffle

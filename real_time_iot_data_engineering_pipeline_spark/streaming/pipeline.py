@@ -1,4 +1,5 @@
-"""The streaming pipeline: parse -> watermark -> windowed agg -> keyed upsert.
+"""The event stream's stages: parse -> watermark -> windowed agg, which
+streaming/topology.run_topology wires into the keyed upsert.
 
 This is the engine's twin of the reference's Spark job
 (spark_streaming/streaming_job.py):
@@ -7,9 +8,10 @@ This is the engine's twin of the reference's Spark job
   from_json / select / to_timestamp  :233-271   parse_event_stream
   withWatermark('...', '1 minute')   :303       windowed_aggregate
   groupBy(key, window(ts, '5 min'))  :301-327   windowed_aggregate
-  outputMode('update')               :735       run_pipeline
-  trigger(processingTime='10 s')     :736       run_pipeline (tests use
-                                                availableNow for determinism)
+  outputMode('update')               :735       topology.run_topology (main)
+  trigger(processingTime='10 s')     :736       run_topology(processing_time=
+                                                '10 seconds'); AvailableNow
+                                                by default, for determinism
   foreachBatch(keyed upsert)         :733-739   sinks.KeyedParquetSink
 
 The bounded algebraic twin of the aggregation is queries/core.py::
@@ -30,9 +32,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from ..sinks import KeyedParquetSink
-from .launch import drain, start_query
 
 # Wire schema of one event message (the JSON the reference puts on Kafka —
 # streaming_job.py:103-124; field roles per FIXTURES.md Part A: user_id <->
@@ -61,7 +60,6 @@ EVENT_WIRE_SCHEMA_WITH_CORRUPT = T.StructType(
 
 WATERMARK_DELAY = "1 minute"  # streaming_job.py:81,303
 WINDOW_DURATION = "5 minutes"  # streaming_job.py:80,306
-MICRO_BATCH_INTERVAL = "10 seconds"  # streaming_job.py:82,736
 
 # Window families (batch twins: queries/core.py::q_tumbling_agg,
 # queries/windows.py::q_sliding_agg / q_session_agg — same durations).
@@ -189,47 +187,3 @@ def dedup_stream(
 
 
 AGG_KEY_COLS = ["user_id", "window_start"]  # streaming_job.py:419-423 upsert key
-
-
-def run_pipeline(
-    spark: SparkSession,
-    source_dir: str,
-    sink_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-    available_now: bool = True,
-    processing_time: str = MICRO_BATCH_INTERVAL,
-    timeout_seconds: float = 120.0,
-) -> KeyedParquetSink:
-    """End-to-end: file stream -> parse -> watermark+window agg -> update
-    mode -> foreachBatch keyed upsert (streaming_job.py:693-752,733-739).
-
-    available_now=True drains everything currently in source_dir in
-    deterministic micro-batches and stops — the test/replay mode; False runs
-    the reference's continuous 10-second trigger until externally stopped.
-
-    The StreamingQuery handle is attached as `sink.query`:
-    continuous-mode callers stop/await/inspect it directly instead of
-    scanning spark.streams.active, which misattributes when other queries
-    share the session."""
-    raw = read_event_file_stream(spark, source_dir, max_files_per_trigger)
-    # The plain pipeline has no DLQ branch: malformed lines are dropped
-    # here (the topology variant quarantines them with their raw payload).
-    parsed = (
-        parse_event_stream(raw)
-        .filter(F.col(CORRUPT_COL).isNull())
-        .drop(CORRUPT_COL)
-    )
-    agg = windowed_aggregate(parsed)
-    sink = KeyedParquetSink(spark, sink_dir, AGG_KEY_COLS)
-    query = start_query(
-        agg,
-        checkpoint_dir,
-        max_files_per_trigger,
-        foreach_batch=sink.foreach_batch(),
-        processing_time=None if available_now else processing_time,
-    )
-    if available_now:
-        drain([query], timeout_seconds)
-    sink.query = query
-    return sink

@@ -1,19 +1,22 @@
-"""Streaming topic router: one validated stream fans out to a valid sink and
-a dead-letter sink — the reference's validation consumer as a Spark stream.
+"""Topic routing rules: one validated stream splits into the valid rows
+and the dead-letter rows — the reference's validation consumer as stream
+transformations.
 
 The reference routes record-by-record in a Kafka consumer loop
 (data_quality/validation_consumer.py:513-587): valid records to
 `validated_iot_data` with data_quality_flag='valid', failures to
 `dlq_iot_data` with `validation_failures` attached.  Here validation is the
 same single-projection rule pass as the bounded queries
-(queries/validation.py::_rules), computed ONCE per micro-batch inside
-foreachBatch, then split by two filters — Spark's equivalent of writing two
-topics from one consumer without re-reading or re-validating the input.
+(queries/validation.py::_rules), and the split is two filters on its
+`is_valid` column.  streaming/topology.run_topology starts each side as
+its own query (the dlq branch, and the valid branch under with_valid),
+Spark's form of writing two topics from one consumer; replay_dlq reads a
+DLQ back through the current rules.
 
-Scale: the rule pass is shuffle-free; foreachBatch writes each branch as an
-append-only partitioned file sink (a Kafka sink would be
+Scale: the rule pass is shuffle-free, and each side is an append-only
+epoch-partitioned file sink (a Kafka sink would be
 `to_kafka_sink_frame(...).write.format('kafka')` with the options in
-sources/kafka.py — same plan, different format).
+sources/kafka.py).
 """
 
 from __future__ import annotations
@@ -25,9 +28,7 @@ from pyspark.sql import functions as F
 
 from ..functions.validation import failure_reasons
 from ..queries.validation import _rules
-from ..sinks import micro_batch
-from .launch import drain, start_query
-from .pipeline import CORRUPT_COL, parse_event_stream, read_event_file_stream
+from .pipeline import CORRUPT_COL
 
 
 def validated_stream(events: DataFrame) -> DataFrame:
@@ -41,8 +42,8 @@ def validated_stream(events: DataFrame) -> DataFrame:
 
 def dlq_rows(invalid: DataFrame) -> DataFrame:
     """The dead-letter row contract every DLQ writer shares (the topology's
-    DLQ branch, `RouterSink`, `replay_dlq`'s still-failing rows), applied
-    to the failing rows of `validated_stream`: reasons become
+    DLQ branch and `replay_dlq`'s still-failing rows), applied to the
+    failing rows of `validated_stream`: reasons become
     `validation_failures` and the flag is 'invalid'
     (validation_consumer.py:557-563).  A malformed-JSON row (all-null
     columns, raw line captured at the reader) gets a leading
@@ -62,63 +63,6 @@ def dlq_rows(invalid: DataFrame) -> DataFrame:
         .withColumn("data_quality_flag", F.lit("invalid"))
         .drop("is_valid")
     )
-
-
-class RouterSink:
-    """foreachBatch body writing the valid / DLQ branches of one validated
-    micro-batch (validation_consumer.py:495-510,557-563).  Appends are
-    idempotent across epoch replays because each epoch writes to its own
-    subdirectory (overwritten on replay)."""
-
-    def __init__(self, root: str):
-        self.root = root
-        self.valid_dir = os.path.join(root, "valid")
-        self.dlq_dir = os.path.join(root, "dlq")
-
-    @micro_batch
-    def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        validated = validated_stream(batch_df)
-        valid = validated.filter("is_valid").withColumn(
-            "data_quality_flag", F.lit("valid")
-        )
-        # per-epoch subdirs => replaying an epoch overwrites its own output
-        # instead of appending duplicates (exactly-once with checkpointing)
-        valid.drop("is_valid", CORRUPT_COL).write.mode("overwrite").parquet(
-            os.path.join(self.valid_dir, f"epoch={int(epoch_id)}")
-        )
-        dlq_rows(validated.filter(~F.col("is_valid"))).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(self.dlq_dir, f"epoch={int(epoch_id)}"))
-
-    def read_valid(self, spark: SparkSession) -> DataFrame:
-        return spark.read.option("basePath", self.valid_dir).parquet(
-            self.valid_dir + "/epoch=*"
-        )
-
-    def read_dlq(self, spark: SparkSession) -> DataFrame:
-        return spark.read.option("basePath", self.dlq_dir).parquet(
-            self.dlq_dir + "/epoch=*"
-        )
-
-
-def run_router(
-    spark: SparkSession,
-    source_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-    timeout_seconds: float = 120.0,
-) -> RouterSink:
-    """events file stream -> parse -> foreachBatch valid/DLQ fan-out."""
-    raw = parse_event_stream(
-        read_event_file_stream(spark, source_dir, max_files_per_trigger)
-    )
-    sink = RouterSink(out_dir)
-    query = start_query(
-        raw, checkpoint_dir, max_files_per_trigger, foreach_batch=sink, mode="append"
-    )
-    drain([query], timeout_seconds)
-    return sink
 
 
 class ReplayResult:

@@ -1,4 +1,5 @@
-"""The reference's COMPLETE dataflow as one Spark streaming topology.
+"""The reference's COMPLETE dataflow as one Spark streaming topology, and
+the one entry point for the event stream.
 
 Reference (SURVEY.md §3.3):
 
@@ -6,7 +7,7 @@ Reference (SURVEY.md §3.3):
                               `-> [dlq]                  (upsert)    `-> Postgres
 
 — four processes, three Kafka topics, two databases.  Here it is two
-Structured Streaming queries over ONE file/Kafka source:
+Structured Streaming queries over ONE file source:
 
     main path:  parse -> validate (rule projection) -> keep valid
                 -> dropDuplicatesWithinWatermark (the validator's dup state)
@@ -20,34 +21,48 @@ FileStreamSource, which lists, reads, parses and validates every file
 again.  The Mongo->Postgres hop disappears: the keyed sink IS the
 queryable table (sinks/catalog.py registers it for SQL access).
 
-Optional branches fan out from the same validated stream: a per-batch
-quality monitor (with_monitor) and the stream-stream attribution join
-(with_attribution — views joined to clicks within the window,
-streaming/stream_join.py), each with its own checkpoint.
+Optional branches fan out from the same validated stream, each its own
+query `topology-<name>` with its own checkpoint `ckpt-topology-<name>`: a
+per-batch quality monitor (with_monitor), a drift monitor
+(drift_reference), and the append branches of one table, each writing
+`<out_dir>/<name>/epoch=<id>`, read back with TopologyResult.read(name):
+the validated topic (valid), the stream-stream attribution join
+(attribution, streaming/stream_join.py) and the stateful twins of
+streaming/stateful.py (cusum, zscore, flood, sample, quantiles).
 
-The main path's keyed sink runs each epoch's dedup and window
-aggregation inside its merge write, whose job also counts the rows to
-skip an empty epoch (sinks/keyed_parquet.py), so their state stores
-commit once per epoch.  The other stateful branches append through
-epoch_writer wrapped in sinks.micro_batch: the epoch's plan runs once,
-into a local checkpoint whose job also counts the rows, and an empty
-epoch is skipped.  The DLQ branch is stateless and needs neither: it
-writes its epoch straight to `epoch=<id>` in one job, and an all-valid
-epoch leaves an empty epoch directory, which read_dlq and replay_dlq read
-as zero rows.
+Late rows.  dropDuplicatesWithinWatermark runs before the window
+aggregate, so a row whose event time is at or below the late-event
+watermark is dropped there, whatever window it falls in;
+windowed_aggregate on its own drops a late row only once its window END
+is at or below that watermark (tests/test_topology.py pins both).
+
+Per-epoch work.  The main path's keyed sink runs each epoch's dedup and
+window aggregation inside its merge write, whose job also counts the
+rows to skip an empty epoch (sinks/keyed_parquet.py), so their state
+stores commit once per epoch.  A stateful append branch writes through
+sinks.micro_batch: the epoch's plan runs once, into a local checkpoint
+whose job also counts the rows, and an empty epoch is skipped.  The
+stateless branches (dlq, valid) need neither: each writes its epoch
+straight to `epoch=<id>` in one job, and an epoch with no such rows
+leaves an empty epoch directory, which read(name) and replay_dlq read as
+zero rows.
 
 Every query starts through streaming/launch.start_query, so a new
 checkpoint's state stages are no wider than the files one trigger admits
-(max_files_per_trigger), and the drain waits for all of them under one
-deadline (launch.drain).
+(max_files_per_trigger).  With the default AvailableNow trigger the call
+drains every query under one deadline (launch.drain); with a
+processing_time trigger (the reference's continuous 10-second
+micro-batches) it returns with the queries running.
 """
 
 from __future__ import annotations
 
 import os
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from ..sinks import KeyedParquetSink, micro_batch
 from .launch import drain, start_query
@@ -61,62 +76,41 @@ from .pipeline import (
     windowed_aggregate,
 )
 from .router import dlq_rows, validated_stream
+from .stateful import (
+    cusum_stream,
+    heavy_hitters_stream,
+    quantile_stream,
+    sample_stream,
+    zscore_stream,
+)
 from .stream_join import attribute_clicks, split_by_type
 
 
+@dataclass
 class TopologyResult:
-    def __init__(
-        self,
-        spark: SparkSession,
-        agg_sink: KeyedParquetSink,
-        dlq_dir: str,
-        monitor: QualityMonitorSink | None = None,
-        attribution_dir: str | None = None,
-        drift: DriftMonitorSink | None = None,
-        cusum_dir: str | None = None,
-        zscore_dir: str | None = None,
-        flood_dir: str | None = None,
-        sample_dir: str | None = None,
-        quantile_dir: str | None = None,
-    ):
-        self.spark = spark
-        self.aggregates = agg_sink
-        self.dlq_dir = dlq_dir
-        self.monitor = monitor
-        self.attribution_dir = attribution_dir
-        self.drift = drift
-        self.cusum_dir = cusum_dir
-        self.zscore_dir = zscore_dir
-        self.flood_dir = flood_dir
-        self.sample_dir = sample_dir
-        self.quantile_dir = quantile_dir
+    """What run_topology started.  `queries` holds every query's handle:
+    drained and stopped under AvailableNow, still running under a
+    processing-time trigger, where the caller stops them (scanning
+    spark.streams.active would take queries that share the session)."""
 
-    def read_cusum(self) -> DataFrame:
-        assert self.cusum_dir is not None
-        return self.spark.read.parquet(self.cusum_dir + "/epoch=*")
+    spark: SparkSession
+    out_dir: str
+    aggregates: KeyedParquetSink
+    queries: list[StreamingQuery]
+    monitor: QualityMonitorSink | None = None
+    drift: DriftMonitorSink | None = None
 
-    def read_zscore(self) -> DataFrame:
-        assert self.zscore_dir is not None
-        return self.spark.read.parquet(self.zscore_dir + "/epoch=*")
+    @property
+    def dlq_dir(self) -> str:
+        return os.path.join(self.out_dir, "dlq")
 
-    def read_sample(self) -> DataFrame:
-        assert self.sample_dir is not None
-        return self.spark.read.parquet(self.sample_dir + "/epoch=*")
-
-    def read_quantiles(self) -> DataFrame:
-        assert self.quantile_dir is not None
-        return self.spark.read.parquet(self.quantile_dir + "/epoch=*")
-
-    def read_flood(self) -> DataFrame:
-        assert self.flood_dir is not None
-        return self.spark.read.parquet(self.flood_dir + "/epoch=*")
+    def read(self, name: str) -> DataFrame:
+        """Every epoch the append branch `name` (dlq, valid, attribution,
+        cusum, zscore, flood, sample, quantiles) wrote."""
+        return self.spark.read.parquet(os.path.join(self.out_dir, name, "epoch=*"))
 
     def read_dlq(self) -> DataFrame:
-        return self.spark.read.parquet(self.dlq_dir + "/epoch=*")
-
-    def read_attribution(self) -> DataFrame:
-        assert self.attribution_dir is not None
-        return self.spark.read.parquet(self.attribution_dir + "/epoch=*")
+        return self.read("dlq")
 
 
 def run_topology(
@@ -136,9 +130,14 @@ def run_topology(
     with_flood_detector: bool = False,
     with_sampler: bool = False,
     with_quantiles: bool = False,
+    with_valid: bool = False,
+    processing_time: str | None = None,
 ) -> TopologyResult:
-    """Drain source_dir through the full validate->route->dedup->window->
-    upsert topology with Trigger.AvailableNow on both branches.
+    """Run source_dir through the full validate->route->dedup->window->
+    upsert topology.  With processing_time=None every query drains what
+    source_dir holds with Trigger.AvailableNow, within timeout_seconds;
+    a processing_time such as '10 seconds' starts every query on that
+    trigger and returns without waiting.
 
     window_family: 'tumbling' (reference default), 'sliding', or 'session'
     (streaming/pipeline.py WINDOW_FAMILIES).  Session windows require
@@ -149,26 +148,28 @@ def run_topology(
 
     compact_every > 0 runs the sink's small-file compaction after every
     Nth epoch inside foreachBatch (sinks/keyed_parquet.py) — the
-    long-running-stream maintenance knob."""
+    long-running-stream maintenance knob.
+
+    with_valid writes the validated topic: the valid rows with their
+    validation columns, minus is_valid and the corrupt-record column,
+    flagged data_quality_flag='valid' (validation_consumer.py:495-510)."""
     agg_sink = KeyedParquetSink(spark, os.path.join(out_dir, "aggs"), AGG_KEY_COLS)
-    dlq_dir = os.path.join(out_dir, "dlq")
 
     def start(df: DataFrame, name: str, fb, mode: str = "update"):
         return start_query(
             df,
-            os.path.join(out_dir, f"ckpt-{name}"),
+            os.path.join(out_dir, f"ckpt-topology-{name}"),
             max_files_per_trigger,
             foreach_batch=fb,
-            name=name,
+            name=f"topology-{name}",
             mode=mode,
+            processing_time=processing_time,
         )
 
-    def epoch_writer(target_dir: str):
-        """foreachBatch body writing each micro-batch under its own epoch
-        directory (idempotent on replay) — shared by every file-append
-        branch of the topology.  The stateless DLQ branch uses it as is,
-        one job per epoch; a stateful branch wraps it in micro_batch, so
-        the epoch's plan runs once and an empty epoch is skipped."""
+    def epoch_writer(name: str):
+        """foreachBatch body writing each micro-batch to
+        out_dir/<name>/epoch=<id>, overwritten on replay (idempotent)."""
+        target_dir = os.path.join(out_dir, name)
 
         def _write(batch_df: DataFrame, epoch_id: int) -> None:
             batch_df.write.mode("overwrite").parquet(
@@ -193,157 +194,63 @@ def run_topology(
         watermark_delay=None,
         family=window_family,
     )
-    q_main = start(
-        main,
-        "topology-main",
-        agg_sink.foreach_batch(retry_attempts=3, compact_every=compact_every),
-        mode="append" if window_family == "session" else "update",
-    )
+    queries = [
+        start(
+            main,
+            "main",
+            agg_sink.foreach_batch(retry_attempts=3, compact_every=compact_every),
+            mode="append" if window_family == "session" else "update",
+        ),
+        # DLQ path: invalid rows -> append with their reasons
+        start(dlq_rows(validated.filter(~F.col("is_valid"))), "dlq", epoch_writer("dlq")),
+    ]
 
-    # DLQ path: invalid rows -> append with their reasons
-    dlq = dlq_rows(validated.filter(~F.col("is_valid")))
-    q_dlq = start(dlq, "topology-dlq", epoch_writer(dlq_dir))
-
-    # optional attribution branch: stream-stream interval join of the
-    # VALIDATED stream against itself (view -> click within the window),
-    # append-mode, its own checkpoint and its own scan of the source
-    attribution_dir = None
-    q_attr = None
-    if with_attribution:
-        attribution_dir = os.path.join(out_dir, "attribution")
-        attributed = attribute_clicks(
-            split_by_type(valid_events, "view"),
-            split_by_type(valid_events, "click"),
-        )
-        q_attr = start(
-            attributed,
-            "topology-attribution",
-            micro_batch(epoch_writer(attribution_dir)),
-            mode="append",
-        )
-
-    # optional monitoring branch (Learning Guide §5-6): per-batch quality
-    # metrics + alert verdicts over the SAME validated stream
+    # per-batch quality metrics + alert verdicts over the SAME validated
+    # stream (Learning Guide §5-6)
     monitor = None
-    queries = [q_main, q_dlq]
-    if q_attr is not None:
-        queries.append(q_attr)
     if with_monitor:
         monitor = QualityMonitorSink(
             spark, os.path.join(out_dir, "monitor"), now=monitor_now
         )
-        queries.append(start(validated, "topology-monitor", monitor))
+        queries.append(start(validated, "monitor", monitor))
 
-    # optional drift branch: per-batch PSI of the VALID stream's value
-    # distribution against a fixed reference histogram (stream-static) —
-    # the live twin of queries/behavior.py::q_psi
+    # per-batch PSI of the valid values against a fixed reference
+    # histogram (stream-static) — the live twin of queries/behavior.py::q_psi
     drift = None
     if drift_reference is not None:
         drift = DriftMonitorSink(
             spark, os.path.join(out_dir, "drift"), drift_reference
         )
-        queries.append(start(valid_events, "topology-drift", drift))
+        queries.append(start(valid_events, "drift", drift))
 
-    # optional online-CUSUM branch: per-sensor changepoint alarms with
-    # state carried across micro-batches (streaming/stateful.py) — the
-    # live twin of the batch q_cusum operator
-    cusum_dir = None
+    # The append branches: name -> (frame, stateful).  Each stateful one is
+    # the live twin of a batch operator (q_click_attribution, q_cusum,
+    # q_zscore_flag, q_heavy_hitters, q_bottomk_sample, q_quantile_summary)
+    # with its state carried across micro-batches.
+    branches: dict[str, tuple[DataFrame, bool]] = {}
+    if with_valid:
+        valid = validated.filter("is_valid").drop("is_valid", CORRUPT_COL)
+        branches["valid"] = (valid.withColumn("data_quality_flag", F.lit("valid")), False)
+    if with_attribution:
+        views = split_by_type(valid_events, "view")
+        clicks = split_by_type(valid_events, "click")
+        branches["attribution"] = (attribute_clicks(views, clicks), True)
     if cusum_mu0 is not None:
-        from .stateful import cusum_stream
-
-        cusum_dir = os.path.join(out_dir, "cusum")
-        flagged = cusum_stream(valid_events, mu0=cusum_mu0)
-        queries.append(
-            start(
-                flagged,
-                "topology-cusum",
-                micro_batch(epoch_writer(cusum_dir)),
-                mode="append",
-            )
-        )
-
-    # optional online z-score gate: per-sensor Welford moments carried
-    # across micro-batches (streaming/stateful.py::zscore_stream) — the
-    # live twin of the batch q_zscore_flag operator
-    zscore_dir = None
+        branches["cusum"] = (cusum_stream(valid_events, mu0=cusum_mu0), True)
     if with_zscore_gate:
-        from .stateful import zscore_stream
-
-        zscore_dir = os.path.join(out_dir, "zscore")
-        queries.append(
-            start(
-                zscore_stream(valid_events),
-                "topology-zscore",
-                micro_batch(epoch_writer(zscore_dir)),
-                mode="append",
-            )
-        )
-
-    # optional flood-detector branch: bounded-memory Misra-Gries heavy
-    # hitters per hash bucket (streaming/stateful.py) — the live twin of
-    # the batch q_heavy_hitters flood/hot-key report
-    flood_dir = None
+        branches["zscore"] = (zscore_stream(valid_events), True)
     if with_flood_detector:
-        from .stateful import heavy_hitters_stream
-
-        flood_dir = os.path.join(out_dir, "flood")
-        queries.append(
-            start(
-                heavy_hitters_stream(valid_events),
-                "topology-flood",
-                micro_batch(epoch_writer(flood_dir)),
-                mode="append",
-            )
-        )
-
-    # optional audit-sample branch: deterministic bottom-k-by-hash uniform
-    # sample of the VALID stream folded across micro-batches
-    # (streaming/stateful.py::sample_stream) — the live twin of the batch
-    # q_bottomk_sample, giving operators a stable inspection sample of
-    # what the pipeline actually admitted
-    sample_dir = None
+        branches["flood"] = (heavy_hitters_stream(valid_events), True)
     if with_sampler:
-        from .stateful import sample_stream
-
-        sample_dir = os.path.join(out_dir, "sample")
-        queries.append(
-            start(
-                sample_stream(valid_events),
-                "topology-sample",
-                micro_batch(epoch_writer(sample_dir)),
-                mode="append",
-            )
-        )
-
-    # optional distribution-summary branch: per-event-type fixed-bin
-    # histogram quantiles (p50/p90/p99 with an explicit error bound) folded
-    # across micro-batches (streaming/stateful.py::quantile_stream) — the
-    # live twin of the batch q_quantile_summary, bounded state per key
-    quantile_dir = None
+        branches["sample"] = (sample_stream(valid_events), True)
     if with_quantiles:
-        from .stateful import quantile_stream
-
-        quantile_dir = os.path.join(out_dir, "quantiles")
+        branches["quantiles"] = (quantile_stream(valid_events), True)
+    for name, (frame, stateful) in branches.items():
+        write = epoch_writer(name)
         queries.append(
-            start(
-                quantile_stream(valid_events),
-                "topology-quantiles",
-                micro_batch(epoch_writer(quantile_dir)),
-                mode="append",
-            )
+            start(frame, name, micro_batch(write) if stateful else write, mode="append")
         )
 
-    drain(queries, timeout_seconds)
-    return TopologyResult(
-        spark,
-        agg_sink,
-        dlq_dir,
-        monitor,
-        attribution_dir,
-        drift,
-        cusum_dir,
-        zscore_dir,
-        flood_dir,
-        sample_dir,
-        quantile_dir,
-    )
+    if processing_time is None:
+        drain(queries, timeout_seconds)
+    return TopologyResult(spark, out_dir, agg_sink, queries, monitor, drift)

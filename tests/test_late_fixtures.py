@@ -1,7 +1,12 @@
-"""Late-data fixture generator vs the real streaming pipeline: the
+"""Late-data fixture generator vs the streaming window aggregate: the
 simulator encodes the watermark semantics pinned in tests/test_streaming.py;
 the generated stream (reference lateness taxonomy, generator.py:258-292)
-must produce EXACTLY the simulated windows when run through Spark."""
+must produce EXACTLY the simulated windows when run through Spark.
+
+The simulator models windowed_aggregate on its own, which drops a late row
+once its window END is at or below the late-event watermark.  The topology
+drops late rows earlier, by their own event time, in its dedup stage
+(tests/test_topology.py pins the difference)."""
 
 from __future__ import annotations
 
@@ -14,8 +19,13 @@ from real_time_iot_data_engineering_pipeline_spark.streaming.late_fixtures impor
     simulate_windowed_counts,
     write_late_files,
 )
+from real_time_iot_data_engineering_pipeline_spark.sinks import KeyedParquetSink
+from real_time_iot_data_engineering_pipeline_spark.streaming.launch import drain, start_query
 from real_time_iot_data_engineering_pipeline_spark.streaming.pipeline import (
-    run_pipeline,
+    AGG_KEY_COLS,
+    parse_event_stream,
+    read_event_file_stream,
+    windowed_aggregate,
 )
 
 
@@ -35,9 +45,9 @@ def test_generated_stream_matches_simulated_watermark_semantics(spark, tmp_path)
     batches = write_late_files(src, n_events=200, n_files=8)
     expected = simulate_windowed_counts(batches)
 
-    sink = run_pipeline(
-        spark, src, str(tmp_path / "sink"), str(tmp_path / "ckpt")
-    )
+    sink = KeyedParquetSink(spark, str(tmp_path / "sink"), AGG_KEY_COLS)
+    agg = windowed_aggregate(parse_event_stream(read_event_file_stream(spark, src)))
+    drain([start_query(agg, str(tmp_path / "ckpt"), 1, foreach_batch=sink.foreach_batch())], 120)
     got = {
         str(r.window_start): (r.sum_value, r["count"])
         for r in sink.read().collect()

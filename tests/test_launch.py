@@ -1,13 +1,16 @@
 """How the streaming entry points start and drain their queries
-(streaming/launch.py): one deadline for a whole drain, state stages no
-wider than the input one trigger admits, a checkpoint that keeps the
-width it was created with and commits its files by rename, and the
-stateless DLQ branch's direct write."""
+(streaming/launch.py): two entry points, which start every query through
+launch.py, one deadline for a whole drain, state stages no wider than the
+input one trigger admits, a checkpoint that keeps the width it was
+created with and commits its files by rename, and the stateless DLQ
+branch's direct write."""
 
 from __future__ import annotations
 
+import ast
 import datetime as dt
 import os
+from pathlib import Path
 
 import pytest
 
@@ -21,6 +24,20 @@ from real_time_iot_data_engineering_pipeline_spark.streaming.topology import (
 
 from . import test_stream_metrics as metrics
 from .test_streaming import write_file
+
+
+def test_launch_starts_every_query_of_the_two_entry_points():
+    """In streaming/, only launch.py touches writeStream, and the only
+    run_* functions are the two entry points."""
+    writers, entry_points = set(), set()
+    for path in sorted(Path(launch.__file__).parent.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Attribute) and node.attr == "writeStream":
+                writers.add(path.name)
+            if isinstance(node, ast.FunctionDef) and node.name.startswith("run_"):
+                entry_points.add(node.name)
+    assert writers == {"launch.py"}
+    assert entry_points == {"run_topology", "run_doc_ingest"}
 
 
 class StubQuery:

@@ -1,4 +1,4 @@
-"""Tests for the streaming valid/DLQ router, sink retry, and the
+"""Tests for the topology's valid/DLQ routing, sink retry, and the
 executor-side per-partition bulk writer."""
 
 from __future__ import annotations
@@ -14,7 +14,7 @@ from real_time_iot_data_engineering_pipeline_spark.sinks import (
     write_per_partition,
     with_retry,
 )
-from real_time_iot_data_engineering_pipeline_spark.streaming.router import run_router
+from real_time_iot_data_engineering_pipeline_spark.streaming.topology import run_topology
 
 from .test_streaming import ev, write_file
 
@@ -46,11 +46,9 @@ class TestStreamingRouter:
         write_file(str(src), "f1.json", [good, bad_range], seq=0)
         write_file(str(src), "f2.json", [bad_many], seq=1)
 
-        sink = run_router(
-            spark, str(src), str(tmp_path / "out"), str(tmp_path / "ckpt")
-        )
-        valid = sink.read_valid(spark).collect()
-        dlq = {r.event_id: r for r in sink.read_dlq(spark).collect()}
+        result = run_topology(spark, str(src), str(tmp_path / "out"), with_valid=True)
+        valid = result.read("valid").collect()
+        dlq = {r.event_id: r for r in result.read_dlq().collect()}
 
         assert [r.event_id for r in valid] == [1]
         assert valid[0].data_quality_flag == "valid"
@@ -72,11 +70,11 @@ class TestStreamingRouter:
             [dict(ev(1, "2024-01-19 10:00:00"), props='{"k": 1}', event_type="view")],
             seq=0,
         )
-        out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-        sink = run_router(spark, str(src), out, ckpt)
-        assert sink.read_valid(spark).count() == 1
-        sink = run_router(spark, str(src), out, ckpt)  # no new files
-        assert sink.read_valid(spark).count() == 1
+        out = str(tmp_path / "out")  # the outputs and their checkpoints
+        result = run_topology(spark, str(src), out, with_valid=True)
+        assert result.read("valid").count() == 1
+        result = run_topology(spark, str(src), out, with_valid=True)  # no new files
+        assert result.read("valid").count() == 1
 
 
 class TestRetry:
@@ -234,8 +232,9 @@ class TestDlqReplay:
 
 
     def test_router_quarantines_malformed_with_payload(self, spark, tmp_path):
-        """The router's DLQ gets the same malformed:json + raw_payload
-        contract as the topology branch."""
+        """Beside the valid branch, the DLQ keeps a malformed line with the
+        malformed:json + raw_payload contract, and the valid rows carry
+        no raw_payload column."""
         import os as _os
 
         src = tmp_path / "src"
@@ -252,13 +251,11 @@ class TestDlqReplay:
         st = _os.stat(src / "f1.json")
         _os.utime(path, (st.st_mtime + 10, st.st_mtime + 10))
 
-        sink = run_router(
-            spark, str(src), str(tmp_path / "out"), str(tmp_path / "ckpt")
-        )
-        valid = sink.read_valid(spark).collect()
+        result = run_topology(spark, str(src), str(tmp_path / "out"), with_valid=True)
+        valid = result.read("valid").collect()
         assert [r.event_id for r in valid] == [1]
-        assert "raw_payload" not in sink.read_valid(spark).columns
-        bad = sink.read_dlq(spark).filter("raw_payload IS NOT NULL").collect()
+        assert "raw_payload" not in result.read("valid").columns
+        bad = result.read_dlq().filter("raw_payload IS NOT NULL").collect()
         assert len(bad) == 1
         assert bad[0].raw_payload == "<<garbage>>"
         assert bad[0].validation_failures.startswith("malformed:json")

@@ -27,9 +27,9 @@ from real_time_iot_data_engineering_pipeline_spark.streaming import (
     dedup_stream,
     parse_event_stream,
     read_event_file_stream,
-    run_pipeline,
     windowed_aggregate,
 )
+from real_time_iot_data_engineering_pipeline_spark.streaming.topology import run_topology
 
 BASE_MTIME = 1_700_000_000
 
@@ -156,28 +156,32 @@ class TestWindowedPipeline:
     def test_checkpoint_restart_processes_only_new_data(self, spark, tmp_path):
         src = tmp_path / "src"
         src.mkdir()
+        valid_kwargs = dict(props='{"k": 1}')
         write_file(
             str(src),
             "f1.json",
             [
-                ev(1, "2024-01-15 10:10:00", value=5.0),
-                ev(2, "2024-01-15 10:11:00", value=7.0),
+                dict(ev(1, "2024-01-15 10:10:00", value=5.0), **valid_kwargs),
+                dict(ev(2, "2024-01-15 10:11:00", value=7.0), **valid_kwargs),
             ],
             seq=0,
         )
-        sink_dir, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-        sink = run_pipeline(spark, str(src), sink_dir, ckpt)
+        out = str(tmp_path / "out")  # the sink and its checkpoints
+        sink = run_topology(spark, str(src), out).aggregates
         assert sink_rows(sink) == {"1@2024-01-15T10:10:00": (12.0, 2)}
 
         # restart with no new data: table unchanged
-        sink = run_pipeline(spark, str(src), sink_dir, ckpt)
+        sink = run_topology(spark, str(src), out).aggregates
         assert sink_rows(sink) == {"1@2024-01-15T10:10:00": (12.0, 2)}
 
         # add one file; restart processes ONLY it, resuming window state
         write_file(
-            str(src), "f2.json", [ev(3, "2024-01-15 10:12:00", value=9.0)], seq=1
+            str(src),
+            "f2.json",
+            [dict(ev(3, "2024-01-15 10:12:00", value=9.0), **valid_kwargs)],
+            seq=1,
         )
-        sink = run_pipeline(spark, str(src), sink_dir, ckpt)
+        sink = run_topology(spark, str(src), out).aggregates
         assert sink_rows(sink) == {"1@2024-01-15T10:10:00": (21.0, 3)}
 
     def test_sink_crash_window_leaves_previous_table_intact(self, spark, tmp_path):
@@ -408,21 +412,19 @@ class TestListener:
     def test_listener_captures_batches_and_flags_slow(self, spark, tmp_path):
         src = tmp_path / "src"
         src.mkdir()
-        write_file(str(src), "f1.json", [ev(1, "2024-01-15 10:00:00")], seq=0)
-        write_file(str(src), "f2.json", [ev(2, "2024-01-15 10:01:00")], seq=1)
+        valid_kwargs = dict(props='{"k": 1}')
+        write_file(str(src), "f1.json", [dict(ev(1, "2024-01-15 10:00:00"), **valid_kwargs)], seq=0)
+        write_file(str(src), "f2.json", [dict(ev(2, "2024-01-15 10:01:00"), **valid_kwargs)], seq=1)
         eager = MetricsListener(slow_batch_seconds=0.0)  # everything is "slow"
         lax = MetricsListener(slow_batch_seconds=1e9)  # nothing is
         spark.streams.addListener(eager)
         spark.streams.addListener(lax)
         try:
-            run_pipeline(
-                spark,
-                str(src),
-                str(tmp_path / "sink"),
-                str(tmp_path / "ckpt"),
-            )
+            result = run_topology(spark, str(src), str(tmp_path / "out"))
+            # the listener bus delivers each query's progress events before
+            # its termination event
             deadline = time.time() + 30
-            while time.time() < deadline and len(eager.batches) < 2:
+            while time.time() < deadline and len(eager.terminated) < len(result.queries):
                 time.sleep(0.2)
         finally:
             spark.streams.removeListener(eager)
@@ -431,7 +433,9 @@ class TestListener:
         assert eager.started and all(b.duration_seconds >= 0 for b in eager.batches)
         assert len(eager.slow_batches) == len(eager.batches)  # threshold 0
         assert lax.slow_batches == []  # same query, sane threshold
-        assert sum(b.num_input_rows for b in eager.batches) == 2
+        # the DLQ query reports to the listeners too
+        main = [b for b in eager.batches if b.query_name == "topology-main"]
+        assert sum(b.num_input_rows for b in main) == 2
 
 
 class TestStreamingDedupBucketKey:
@@ -552,26 +556,18 @@ class TestStateStoreAndTrigger:
         trigger, wait for the first batch to land in the sink, stop."""
         import time
 
-        from real_time_iot_data_engineering_pipeline_spark.streaming.pipeline import (
-            run_pipeline,
-        )
-
         src = tmp_path / "src"
         src.mkdir()
         write_file(
             str(src),
             "f1.json",
-            [ev(1, "2024-01-15 10:10:00", value=5.0)],
+            [dict(ev(1, "2024-01-15 10:10:00", value=5.0), props='{"k": 1}')],
             seq=0,
         )
-        sink = run_pipeline(
-            spark,
-            str(src),
-            str(tmp_path / "sink"),
-            str(tmp_path / "ckpt"),
-            available_now=False,
-            processing_time="1 seconds",
+        result = run_topology(
+            spark, str(src), str(tmp_path / "out"), processing_time="1 seconds"
         )
+        sink = result.aggregates
         try:
             deadline = time.time() + 60
             while time.time() < deadline and not sink.exists():
@@ -579,7 +575,7 @@ class TestStateStoreAndTrigger:
             assert sink.exists()
             assert sink_rows(sink) == {"1@2024-01-15T10:10:00": (5.0, 1)}
         finally:
-            for q in spark.streams.active:
+            for q in result.queries:
                 q.stop()
 
 

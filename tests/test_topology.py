@@ -4,11 +4,21 @@ whole four-process dataflow (SURVEY.md §3.3) in one engine invocation."""
 
 from __future__ import annotations
 
+import os
+
+from real_time_iot_data_engineering_pipeline_spark.sinks import KeyedParquetSink
+from real_time_iot_data_engineering_pipeline_spark.streaming.launch import drain, start_query
+from real_time_iot_data_engineering_pipeline_spark.streaming.pipeline import (
+    AGG_KEY_COLS,
+    parse_event_stream,
+    read_event_file_stream,
+    windowed_aggregate,
+)
 from real_time_iot_data_engineering_pipeline_spark.streaming.topology import (
     run_topology,
 )
 
-from .test_streaming import ev, write_file
+from .test_streaming import ev, sink_rows, write_file
 
 
 def test_full_topology_end_to_end(spark, tmp_path):
@@ -200,7 +210,7 @@ def test_topology_attribution_branch(spark, tmp_path):
     )
 
     pairs = {
-        (r.view_id, r.click_id): r for r in result.read_attribution().collect()
+        (r.view_id, r.click_id): r for r in result.read("attribution").collect()
     }
     assert set(pairs) == {(1, 2)}, f"unexpected attribution pairs: {set(pairs)}"
     assert pairs[(1, 2)].user_id == 1 and pairs[(1, 2)].click_value == 3.0
@@ -381,7 +391,7 @@ def test_topology_cusum_branch(spark, tmp_path):
     result = run_topology(
         spark, str(src), str(tmp_path / "out"), cusum_mu0=50.0
     )
-    rows = {r.event_id: r for r in result.read_cusum().collect()}
+    rows = {r.event_id: r for r in result.read("cusum").collect()}
     assert len(rows) == 5
     assert rows[3].s_pos == 26.0 and not rows[3].alarm
     # batch boundary: 26 carried + 13 = 39 > 30 -> alarm
@@ -420,7 +430,7 @@ def test_topology_zscore_branch(spark, tmp_path):
     result = run_topology(
         spark, str(src), str(tmp_path / "out"), with_zscore_gate=True
     )
-    rows = {r.event_id: r for r in result.read_zscore().collect()}
+    rows = {r.event_id: r for r in result.read("zscore").collect()}
     assert len(rows) == 8
     assert all(rows[eid].z is None for eid in range(1, 6))  # warmup
     assert not rows[6].is_anomaly
@@ -457,7 +467,7 @@ def test_topology_flood_detector_branch(spark, tmp_path):
     result = run_topology(
         spark, str(src), str(tmp_path / "out"), with_flood_detector=True
     )
-    rows = result.read_flood().collect()
+    rows = result.read("flood").collect()
     assert rows
     final_processed = {}
     for r in rows:
@@ -469,15 +479,10 @@ def test_topology_flood_detector_branch(spark, tmp_path):
     assert result.aggregates.read().count() >= 1  # main path unaffected
 
 
-def test_topology_all_branches_together(spark, tmp_path):
-    """All six optional branches active in ONE topology run (attribution,
-    monitor, drift, CUSUM, z-gate, flood detector) beside the main and
-    DLQ paths: eight concurrent streaming queries over the shared source
-    listing, each with its own checkpoint — the configuration no
-    per-branch test exercises, guarding against checkpoint collisions or
-    cross-branch watermark interference."""
-    src = tmp_path / "src"
-    src.mkdir()
+def write_mixed_traffic(src) -> None:
+    """Two files of views and clicks by three users, user 2 flooding clicks
+    of 65.0 (over the CUSUM target of 50), plus one row with a malformed
+    event_type for the DLQ: every optional branch has rows to write."""
     valid_kwargs = dict(props='{"k": 1}')
     eid = 0
 
@@ -509,16 +514,31 @@ def test_topology_all_branches_together(spark, tmp_path):
         rows(1, [("click", 65.0, 2), ("click", 65.0, 2), ("view", 11.0, 1)]),
         seq=1,
     )
-    reference = spark.createDataFrame(
+
+
+def drift_reference(spark):
+    return spark.createDataFrame(
         [(float(v),) for v in (5, 10, 15, 20, 25, 30, 35, 40)], "value DOUBLE"
     )
+
+
+def test_topology_all_branches_together(spark, tmp_path):
+    """All six optional branches active in ONE topology run (attribution,
+    monitor, drift, CUSUM, z-gate, flood detector) beside the main and
+    DLQ paths: eight concurrent streaming queries over the shared source
+    listing, each with its own checkpoint — the configuration no
+    per-branch test exercises, guarding against checkpoint collisions or
+    cross-branch watermark interference."""
+    src = tmp_path / "src"
+    src.mkdir()
+    write_mixed_traffic(src)
     result = run_topology(
         spark,
         str(src),
         str(tmp_path / "out"),
         with_monitor=True,
         with_attribution=True,
-        drift_reference=reference,
+        drift_reference=drift_reference(spark),
         cusum_mu0=50.0,
         with_zscore_gate=True,
         with_flood_detector=True,
@@ -526,11 +546,98 @@ def test_topology_all_branches_together(spark, tmp_path):
     # every branch produced its artifact; none starved another
     assert result.aggregates.read().count() >= 1
     assert result.read_dlq().count() == 1  # the bad event_type row
-    assert result.read_cusum().count() >= 1
-    assert result.read_zscore().count() >= 1
-    assert result.read_flood().count() >= 1
+    assert result.read("cusum").count() >= 1
+    assert result.read("zscore").count() >= 1
+    assert result.read("flood").count() >= 1
     assert result.monitor is not None and result.monitor.read().count() >= 1
     assert result.drift is not None and result.drift.read().count() >= 1
+
+
+BRANCHES = ("main", "dlq", "attribution", "monitor", "drift", "cusum", "zscore",
+            "flood", "sample", "quantiles", "valid")
+EPOCH_WRITER_BRANCHES = ("dlq", "valid", "attribution", "cusum", "zscore", "flood",
+                         "sample", "quantiles")
+
+
+def test_topology_query_names_and_directories(spark, tmp_path):
+    """Every branch is query topology-<name> checkpointed at
+    out/ckpt-topology-<name>, so existing checkpoints resume, and every
+    epoch-writer branch's read(name) reads what it wrote under out/<name>.
+    A default run starts exactly the two queries perfbench waits on."""
+    src = tmp_path / "src"
+    src.mkdir()
+    write_mixed_traffic(src)
+
+    default = run_topology(spark, str(src), str(tmp_path / "default"))
+    assert sorted(q.name for q in default.queries) == ["topology-dlq", "topology-main"]
+
+    out = str(tmp_path / "out")
+    result = run_topology(
+        spark,
+        str(src),
+        out,
+        with_monitor=True,
+        with_attribution=True,
+        drift_reference=drift_reference(spark),
+        cusum_mu0=50.0,
+        with_zscore_gate=True,
+        with_flood_detector=True,
+        with_sampler=True,
+        with_quantiles=True,
+        with_valid=True,
+    )
+    assert sorted(q.name for q in result.queries) == sorted(f"topology-{n}" for n in BRANCHES)
+    assert not any(q.isActive for q in result.queries)
+    assert {d for d in os.listdir(out) if d.startswith("ckpt-")} == {
+        f"ckpt-topology-{n}" for n in BRANCHES
+    }
+    for name in EPOCH_WRITER_BRANCHES:
+        files = result.read(name).inputFiles()
+        assert files, name
+        assert all(f.startswith(f"file://{out}/{name}/epoch=") for f in files), name
+
+
+def test_topology_drops_a_row_late_by_its_own_event_time(spark, tmp_path):
+    """The topology's dedup stage drops a row whose event time is at or
+    below the late-event watermark, before the window aggregate sees it;
+    windowed_aggregate alone drops a late row only once its window END is
+    at or below that watermark.  The third file is filtered with the
+    watermark after the first (10:10 less 1 minute; late-event filtering
+    lags one batch, SPARK-24634): its 10:06 row is late by its own time,
+    while its window [10:05, 10:10) is still open."""
+    src = tmp_path / "src"
+    src.mkdir()
+    valid_kwargs = dict(props='{"k": 1}')
+    files = [
+        [("10:10", 2.0)],
+        [("10:11", 3.0)],
+        [("10:06", 4.0), ("10:12", 6.0)],
+    ]
+    eid = 0
+    for seq, rows in enumerate(files):
+        batch = []
+        for hhmm, value in rows:
+            eid += 1
+            batch.append(dict(ev(eid, f"2024-01-19 {hhmm}:00", value=value), **valid_kwargs))
+        write_file(str(src), f"f{seq}.json", batch, seq=seq)
+
+    result = run_topology(spark, str(src), str(tmp_path / "out"))
+    assert sink_rows(result.aggregates) == {"1@2024-01-19T10:10:00": (11.0, 3)}
+    (main,) = [q for q in result.queries if q.name == "topology-main"]
+    dropped: dict[str, int] = {}
+    for p in main.recentProgress:
+        for op in p["stateOperators"]:
+            name = op["operatorName"]
+            dropped[name] = dropped.get(name, 0) + op["numRowsDroppedByWatermark"]
+    assert dropped == {"dedupeWithinWatermark": 1, "stateStoreSave": 0}
+
+    alone = KeyedParquetSink(spark, str(tmp_path / "alone"), AGG_KEY_COLS)
+    agg = windowed_aggregate(parse_event_stream(read_event_file_stream(spark, str(src))))
+    drain([start_query(agg, str(tmp_path / "ckpt"), 1, foreach_batch=alone.foreach_batch())], 120)
+    assert sink_rows(alone) == {
+        "1@2024-01-19T10:05:00": (4.0, 1),
+        "1@2024-01-19T10:10:00": (11.0, 3),
+    }
 
 
 def test_topology_soak_state_plateaus_under_late_dup_dlq_traffic(
@@ -665,7 +772,7 @@ def test_topology_sampler_branch(spark, tmp_path):
     result = run_topology(
         spark, str(src), str(tmp_path / "out"), with_sampler=True
     )
-    sample = result.read_sample().collect()
+    sample = result.read("sample").collect()
     got = {r.event_id for r in sample}
     assert 99 not in got
     assert got == set(good_ids)  # fewer rows than capacity: all sampled
@@ -693,7 +800,7 @@ def test_topology_quantiles_branch(spark, tmp_path):
     result = run_topology(
         spark, str(src), str(tmp_path / "out"), with_quantiles=True
     )
-    summ = result.read_quantiles().collect()
+    summ = result.read("quantiles").collect()
     final = max(summ, key=lambda r: r.processed)
     assert final.event_type == "click"
     assert final.processed == 8  # the DLQ'd row is not counted
