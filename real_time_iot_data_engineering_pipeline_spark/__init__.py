@@ -17,4 +17,17 @@ Layout:
   registry   - query + oracle registration used by __spark_entry__ and tests
 """
 
+import sys
+
+from pyspark import cloudpickle
+
 __version__ = "0.1.0"
+
+# Ship the package's functions to Python workers by value.  A function
+# handed to mapInPandas or applyInPandasWithState (the Misra-Gries and TTL
+# twins, the multimodal stages, every stateful stream operator) would
+# otherwise be pickled by reference, and the worker would have to import
+# the package: a driver that put the repo on its own sys.path
+# (__spark_entry__.py does) has workers that find the package only when
+# the driver's working directory happens to be the repo root.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])

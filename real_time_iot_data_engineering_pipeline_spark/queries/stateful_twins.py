@@ -1,15 +1,15 @@
 """Batch oracle twins of the streaming stateful folds.
 
-streaming/stateful.py carries three applyInPandasWithState operators
-(Misra-Gries heavy hitters, Welford z-score moments, online CUSUM) whose
-correctness is golden-tested but — being streaming — can't earn driver
+Three of streaming/stateful.py's stateful stream operators
+(Misra-Gries heavy hitters, Welford z-score moments, online CUSUM) have
+math that is golden-tested but — being streaming — can't earn driver
 CORRECTNESS rows.  Each operator here re-expresses the SAME mathematics as
 a bounded, deterministic batch query with a DuckDB oracle, so the stateful
 tier's math gains hard-signal certification (round-5 verdict ask #4):
 
-- q_misra_gries     <-> heavy_hitters_stream (stateful.py:308-390)
-- q_welford_stats   <-> zscore_stream's (n, mean, M2) state (stateful.py:210-256)
-- q_cusum_alarm     <-> cusum_stream's s+/s- Lindley recursion (stateful.py:121-151)
+- q_misra_gries     <-> heavy_hitters_stream (stateful.py::_misra_gries)
+- q_welford_stats   <-> zscore_stream's (n, mean, M2) state (stateful.py::_zscore)
+- q_cusum_alarm     <-> cusum_stream's s+/s- Lindley recursion (stateful.py::_cusum)
 
 Reference parity: the reference pipeline has no sketch tier at all (its
 validation consumer is row-at-a-time Python, data_quality/
@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from ..functions.rounding import fround, fround_sql
 from ..registry import register
 from ..sources import load_table
+from ..streaming.stateful import misra_gries_update
 
 # ---------------------------------------------------------------------------
 # Misra-Gries heavy hitters: bounded-memory candidates + exact recount
@@ -45,20 +46,13 @@ MG_CAPACITY = 2 * SUPPORT_K
 
 
 def _mg_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """One Misra-Gries summary per partition (streaming fold of
-    stateful.py:_misra_gries, minus cross-batch state): at most MG_CAPACITY
-    counters live at any moment, independent of partition size or key
-    cardinality."""
+    """One Misra-Gries summary per partition, counted by the stream's own
+    update (streaming/stateful.py::misra_gries_update, minus cross-batch
+    state): at most MG_CAPACITY counters live at any moment, independent
+    of partition size or key cardinality."""
     summary: dict[int, int] = {}
     for pdf in batches:
-        for k in pdf["key"]:
-            k = int(k)
-            if k in summary:
-                summary[k] += 1
-            elif len(summary) < MG_CAPACITY:
-                summary[k] = 1
-            else:  # decrement-all eviction
-                summary = {kk: c - 1 for kk, c in summary.items() if c > 1}
+        summary = misra_gries_update(summary, pdf["key"], MG_CAPACITY)
     yield pd.DataFrame({"key": sorted(summary)})
 
 
@@ -141,7 +135,7 @@ WELFORD_MIN_OBS = 5  # stateful.py ZSCORE_MIN_OBS
 def q_welford_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-sensor Welford state (n, mean, M2) plus derived variance/std/cv —
     the exact batch value of the state zscore_stream
-    (streaming/stateful.py:210-256) carries across micro-batches, so the
+    (streaming/stateful.py::_zscore) carries across micro-batches, so the
     stream's moment math is certified against a DuckDB oracle.
 
     Scale: Spark's avg/var_samp are merge-stable central-moment partial
@@ -234,7 +228,7 @@ CUSUM_H = "400.0"
 def q_cusum_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-sensor online CUSUM (Page 1954) as a batch query: the one-sided
     sums s+ = max(0, s+ + (x - mu0 - slack)) and s- = max(0, s- + (mu0 - x
-    - slack)) that cusum_stream (streaming/stateful.py:121-151) folds
+    - slack)) that cusum_stream (streaming/stateful.py::_cusum) folds
     row-by-row have the Lindley closed form
 
         S_t = C_t - min(0, min_{{j<=t}} C_j),   C_t = cumsum(y),

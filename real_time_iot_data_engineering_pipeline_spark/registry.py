@@ -15,11 +15,9 @@ summation-order differences between engines can't flip the hash.
 
 from __future__ import annotations
 
-import sys
 from collections.abc import Callable
 from importlib import import_module
 
-from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -77,16 +75,7 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
 
 
 def load_all() -> None:
-    """Import every query module (idempotent) and have cloudpickle ship
-    the package's functions by value.
-
-    A query that hands a module-level function to mapInPandas (the
-    Misra-Gries and TTL twins, the multimodal stages) would otherwise
-    pickle it by reference, and the Python worker would have to import
-    the package.  __spark_entry__.py puts the repo on the driver's
-    sys.path only, so a worker finds the package only when the driver's
-    working directory happens to be the repo root."""
+    """Import every query module (idempotent)."""
     pkg = __name__.rsplit(".", 1)[0]
     for mod in _QUERY_MODULES:
         import_module(f"{pkg}.{mod}")
-    cloudpickle.register_pickle_by_value(sys.modules[pkg])

@@ -9,11 +9,15 @@ isEmpty() and then writes (the reference's df.rdd.isEmpty() fast path,
 streaming_job.py:586-603) therefore pays for its epoch twice, and a body
 with two writes pays once more per write.
 
-A body with one action runs the plan once without this wrapper, and the
-wrapper's own job would be one more per epoch: an unpartitioned keyed
-sink's merge counts the epoch's rows in its write job to skip an empty
-epoch (sinks/keyed_parquet.py), and the topology's stateless DLQ branch
-writes its frame directly.
+Its users are the bodies with more than one action: the quality and
+drift monitors (streaming/monitor.py), the document ingest's sink
+(streaming/doc_pipeline.py::DocIngestSink) and a partitioned keyed
+sink's pruned merge (sinks/keyed_parquet.py).  A body with one action
+runs the plan once without this wrapper, and the wrapper's own job would
+be one more per epoch: an unpartitioned keyed sink's merge counts the
+epoch's rows in its write job to skip an empty epoch, and every append
+branch of the topology (streaming/topology.py), stateful or not, writes
+its frame directly.
 
 `micro_batch` runs the plan exactly once, into executor block storage
 (localCheckpoint, eager), skips the body when the epoch produced no rows,

@@ -1,6 +1,7 @@
 """Streaming MinHash/LSH near-duplicate detection — the near-dup twin of
-the doc ingest's exact content-hash dedup (doc_pipeline.py:127), closing
-the round-8 incremental-dedup story across BOTH execution modes: the batch
+the doc ingest's exact content-hash dedup
+(doc_pipeline.py::ingest_doc_stream), closing the round-8
+incremental-dedup story across BOTH execution modes: the batch
 side is q_dedup_incremental (today's bands probe the standing signature
 store); this is the same probe running continuously, with the "standing
 store" living in streaming state.
@@ -9,10 +10,10 @@ Shape: a stateless JVM projection computes each document's 32-slot
 MinHash signature and explodes it into 8 LSH band rows (the signature
 family is BIT-IDENTICAL to the batch queries' — md5 hex halves,
 g_i = (h1 + i*h2) mod P over 3-word shingles — pinned by a golden test
-against the batch plan), then `applyInPandasWithState` keyed by the band
-key holds each bucket's recent signatures and emits a candidate pair the
-moment a new document collides with a stored one at estimated Jaccard
->= {PAIR_MIN_EST}.
+against the batch plan), then a stateful fold keyed by the band key
+(`_bucket_fold`, behind stateful.py's group_fold) holds each bucket's
+recent signatures and emits a candidate pair the moment a new document
+collides with a stored one at estimated Jaccard >= {PAIR_MIN_EST}.
 
 The signature stage is pure column expressions (round 9; previously a
 per-doc Python md5 loop inside mapInPandas — the one row-at-a-time-ish
@@ -44,19 +45,15 @@ from __future__ import annotations
 import hashlib
 import json
 import re
-from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.tokenize import WS as _WS
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
 from ..queries.text import _BANDS, _K, _P, _ROWS, _WORDS_SPARK
-from .stateful import arm_idle_timeout
+from .stateful import apply_group_fold, group_fold
 
 PAIR_MIN_EST = 0.5  # same survivor threshold as q_doc_dedup_minhash
 BUCKET_CAP = 64  # max signatures retained per band bucket (drop-oldest)
@@ -64,7 +61,8 @@ TTL_MS = 30 * 60 * 1000  # evict buckets idle for 30 min past the watermark
 
 
 def minhash_signature(text: str) -> list[int] | None:
-    """The batch signature family in pure Python (queries/text.py:140-195):
+    """The batch signature family in pure Python
+    (queries/text.py::_shingle_rows and _minhash_sigs):
     3-word shingles over split(trim(lower(text)), the shared WS class), one md5 per
     shingle, h1/h2 = the 15-hex-char halves, slot i = min (h1 + i*h2) % P.
     Returns None for documents with fewer than 3 words (the batch plan
@@ -166,32 +164,13 @@ STATE_SCHEMA = "doc_ids string, sigs string"
 
 
 def _bucket_fold(cap: int, ttl_ms: int):
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+    def step(key, prior, rows):
         (band_key,) = key
-        if state.hasTimedOut:
-            state.remove()  # idle bucket: evict, never re-arm
-            return
         band = int(band_key.split(":", 1)[0])
-        if state.exists:
-            doc_ids_js, sigs_js = state.get
-            doc_ids = json.loads(doc_ids_js)
-            sigs = json.loads(sigs_js)
-        else:
-            doc_ids, sigs = [], []
+        doc_ids, sigs = (json.loads(js) for js in prior)
         known = set(doc_ids)
         out = {"doc_a": [], "doc_b": [], "est_jaccard": [], "band": []}
-        rows = []
-        for pdf in pdfs:
-            rows.extend(
-                zip(pdf["doc_id"].tolist(), pdf["ts"].tolist(), pdf["sig_json"])
-            )
-        # deterministic intra-batch order: event time, then doc id
-        rows.sort(key=lambda r: (r[1], r[0]))
-        for doc_id, _ts, sj in rows:
+        for doc_id, sj in zip(rows["doc_id"].tolist(), rows["sig_json"]):
             if doc_id in known:
                 continue  # replay of a member (at-least-once source)
             sig = json.loads(sj)
@@ -205,22 +184,16 @@ def _bucket_fold(cap: int, ttl_ms: int):
             doc_ids.append(doc_id)
             sigs.append(sig)
             known.add(doc_id)
-        if len(doc_ids) > cap:  # drop-oldest: bound state per bucket
-            doc_ids = doc_ids[-cap:]
-            sigs = sigs[-cap:]
-        state.update(
-            (
-                json.dumps(doc_ids, separators=(",", ":")),
-                json.dumps(sigs, separators=(",", ":")),
-            )
+        # drop-oldest: bound state per bucket
+        new_state = (
+            json.dumps(doc_ids[-cap:], separators=(",", ":")),
+            json.dumps(sigs[-cap:], separators=(",", ":")),
         )
-        arm_idle_timeout(
-            state, max((t for _, t, _ in rows), default=None), ttl_ms
-        )
-        if out["doc_a"]:
-            yield pd.DataFrame(out)
+        return new_state, pd.DataFrame(out)
 
-    return fn
+    # deterministic intra-batch order: event time, then doc id; an idle
+    # bucket is evicted ttl_ms past its last event
+    return group_fold(step, ("[]", "[]"), ttl_ms=ttl_ms, order=("ts", "doc_id"))
 
 
 def near_dup_stream(
@@ -234,10 +207,6 @@ def near_dup_stream(
     signature/band explode (stateless JVM projections) -> watermark ->
     per-band stateful bucket probe.  Returns the candidate-pair stream."""
     banded = banded_rows(docs, ts_col).withWatermark("ts", watermark)
-    return banded.groupBy("band_key").applyInPandasWithState(
-        _bucket_fold(cap, ttl_ms),
-        outputStructType=PAIR_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return apply_group_fold(
+        banded, "band_key", _bucket_fold(cap, ttl_ms), PAIR_SCHEMA, STATE_SCHEMA
     )

@@ -1,25 +1,53 @@
-"""Custom stateful streaming operator: per-sensor sudden-change detection.
+"""The stream's stateful operators: per-key folds carried across
+micro-batches in GroupState, behind one adapter.
 
-The bounded twin (queries/analytics.py::q_sudden_change) uses lag() over a
-window; a stream can't look back — it must REMEMBER the previous reading per
-sensor.  Built-in streaming operators don't express "compare to previous
-element", so this is the designated escape hatch: applyInPandasWithState
-(SURVEY §2.9) — Arrow-batched pandas per key group, explicit GroupState
-holding (last_ts, last_value), watermark-driven state timeout.
+A stream cannot look back or ahead, so every operator here REMEMBERS what
+it needs per key, through applyInPandasWithState (SURVEY §2.9): Arrow-
+batched pandas per key group, an explicit GroupState, and a watermark-
+driven event-time timeout that evicts idle keys.  That contract is written
+once, in `group_fold`, and wired once, in `apply_group_fold`:
 
-Reference semantics: 'sudden temp change > 20°C between consecutive
-readings' (Learning Guide.txt:1058 §3); threshold parameterized because the
-events fixture's value range differs (queries/analytics.py uses 10).
+- On a timeout the key's state is removed, nothing is emitted and the
+  timeout is never re-armed (re-arming would keep a dead key alive for
+  good, and a summary would be re-emitted on every eviction).
+- Otherwise the step gets the prior state, or its initial value when the
+  key has none, and the key group's rows as ONE frame (in event order when
+  the fold is order-dependent), and returns the new state and the rows to
+  emit.
+- The timeout is re-armed TTL past the later of the watermark and the
+  group's max `ts` (arm_idle_timeout); an operator without a TTL keeps its
+  state for the life of the query.
 
-Scale: state is one (ts, value) pair per sensor — bounded by key
-cardinality, evicted by the event-time timeout; each micro-batch shuffles
-only by user_id (the same partitioning the aggregation already needs).
+Each operator is then its step function alone (the factory names `_detect`
+... `_cap` return the adapted `fn(key, pdfs, state)`, which the fold tests
+drive directly with a stand-in state):
+
+- sudden_change_stream (`_detect`): per-sensor delta to the previous
+  reading, the live twin of queries/analytics.py::q_sudden_change.
+- cusum_stream (`_cusum`): online CUSUM, twin of q_cusum / q_cusum_alarm.
+- zscore_stream (`_zscore`): Welford moments, twin of q_zscore_flag /
+  q_welford_stats.
+- heavy_hitters_stream (`_misra_gries`): Misra-Gries per hash bucket,
+  twin of q_heavy_hitters / q_misra_gries (one `misra_gries_update`).
+- sample_stream (`_bottom_k`): bottom-k by MD5, twin of q_bottomk_sample.
+- quantile_stream (`_hist_fold`): fixed-bin histogram quantiles, twin of
+  q_quantile_summary.
+- distinct_stream (`_kmv`): K-minimum-values distinct count, twin of
+  q_distinct_users.
+- source_cap_stream (`_cap`): first-k admission per source, no timeout,
+  twin of q_source_cap.
+- streaming/near_dup.py::near_dup_stream (`_bucket_fold`): the LSH band
+  bucket store.
+
+Scale: every state is bounded per key (a pair, a few doubles, or a
+capacity-sized summary) and evicted by the timeout; each micro-batch
+shuffles once on the operator's key.
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 from typing import Any
 
 import numpy as np
@@ -29,20 +57,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("delta", T.DoubleType()),
-        T.StructField("is_sudden_change", T.BooleanType()),
-    ]
-)
-
-STATE_SCHEMA = "last_ts timestamp, last_value double"
-
-SUDDEN_THRESHOLD = 20.0  # Learning Guide.txt:1058 §3
+# step(key, prior state, the key group's rows) -> (new state, rows to emit)
+Step = Callable[[tuple[Any, ...], tuple, pd.DataFrame], tuple[tuple, pd.DataFrame]]
+# applyInPandasWithState's function: fn(key, pdfs, state) -> frames to emit
+Fold = Callable[
+    [tuple[Any, ...], Iterator[pd.DataFrame], GroupState], Iterator[pd.DataFrame]
+]
 
 
 def arm_idle_timeout(state: GroupState, batch_max_ts, ttl_ms: int) -> None:
@@ -61,21 +81,81 @@ def arm_idle_timeout(state: GroupState, batch_max_ts, ttl_ms: int) -> None:
     )
 
 
-def _detect(threshold: float):
+def group_fold(
+    step: Step,
+    initial: tuple,
+    ttl_ms: int | None,
+    order: tuple[str, ...] | None = ("ts", "event_id"),
+) -> Fold:
+    """Adapt `step` to applyInPandasWithState's `fn(key, pdfs, state)`:
+    evict on timeout, fold the key group's rows (sorted by `order`, if
+    given) into the prior state or `initial`, and re-arm the idle timeout
+    `ttl_ms` past the group's max `ts` (never, when ttl_ms is None: the
+    query must then run with GroupStateTimeout.NoTimeout)."""
+
     def fn(
         key: tuple[Any, ...],
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
         if state.hasTimedOut:
-            # watermark passed the idle deadline: evict, emit nothing —
-            # without this branch every idle key re-arms its own timeout
-            # forever and state never shrinks
             state.remove()
             return
-        last_ts, last_value = state.get if state.exists else (None, None)
-        rows = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
+        rows = pd.concat(list(pdfs))
+        if order:
+            rows = rows.sort_values(list(order))
+        new_state, out = step(key, state.get if state.exists else initial, rows)
+        state.update(new_state)
+        if ttl_ms is not None:
+            arm_idle_timeout(state, rows["ts"].max(), ttl_ms)
+        if len(out):
+            yield out
+
+    return fn
+
+
+def apply_group_fold(
+    frame: DataFrame,
+    key: str,
+    fold: Fold,
+    output: T.StructType,
+    state_schema: str,
+    timeout: str = GroupStateTimeout.EventTimeTimeout,
+) -> DataFrame:
+    """frame grouped by `key` through `fold` (a group_fold) in append mode."""
+    return frame.groupBy(key).applyInPandasWithState(
+        fold,
+        outputStructType=output,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=timeout,
+    )
+
+
+# ---------------------------------------------------------------------------
+# Per-sensor sudden-change detection
+# ---------------------------------------------------------------------------
+
+OUTPUT_SCHEMA = T.StructType(
+    [
+        T.StructField("user_id", T.LongType()),
+        T.StructField("event_id", T.LongType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("value", T.DoubleType()),
+        T.StructField("delta", T.DoubleType()),
+        T.StructField("is_sudden_change", T.BooleanType()),
+    ]
+)
+
+STATE_SCHEMA = "last_ts timestamp, last_value double"
+
+SUDDEN_THRESHOLD = 20.0  # Learning Guide.txt:1058 §3
+
+
+def _detect(threshold: float):
+    def step(key, prior, rows):
+        (user_id,) = key
+        last_ts, last_value = prior
         out = {k: [] for k in ("event_id", "ts", "value", "delta", "is_sudden_change")}
         for _, r in rows.iterrows():
             delta = None if last_value is None else float(r["value"]) - last_value
@@ -87,14 +167,13 @@ def _detect(threshold: float):
                 delta is not None and abs(delta) > threshold
             )
             last_ts, last_value = r["ts"], float(r["value"])
-        state.update((last_ts, last_value))
-        # state lives while the sensor keeps reporting; idle sensors expire
-        # one watermark-delay after their last event (the reference's
-        # in-process tracker expired after 1 minute too)
-        arm_idle_timeout(state, rows["ts"].max(), 60_000)
-        yield pd.DataFrame({"user_id": [user_id] * len(out["event_id"]), **out})
+        out_df = pd.DataFrame({"user_id": [user_id] * len(out["event_id"]), **out})
+        return (last_ts, last_value), out_df
 
-    return fn
+    # state lives while the sensor keeps reporting; idle sensors expire
+    # one watermark-delay after their last event (the reference's
+    # in-process tracker expired after 1 minute too)
+    return group_fold(step, (None, None), ttl_ms=60_000)
 
 
 def sudden_change_stream(
@@ -103,17 +182,20 @@ def sudden_change_stream(
     watermark_delay: str = "1 minute",
 ) -> DataFrame:
     """events (already parsed) -> per-sensor stateful sudden-change flags.
-    Input must carry user_id, event_id, ts (timestamp), value."""
-    return (
-        events.withWatermark("ts", watermark_delay)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _detect(threshold),
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    Input must carry user_id, event_id, ts (timestamp), value.
+
+    The bounded twin (queries/analytics.py::q_sudden_change) uses lag()
+    over a window; a stream must REMEMBER the previous reading per sensor,
+    so the state is that (last_ts, last_value) pair.  Reference semantics:
+    'sudden temp change > 20°C between consecutive readings' (Learning
+    Guide.txt:1058 §3); the threshold is a parameter because the events
+    fixture's value range differs (queries/analytics.py uses 10)."""
+    return apply_group_fold(
+        events.withWatermark("ts", watermark_delay),
+        "user_id",
+        _detect(threshold),
+        OUTPUT_SCHEMA,
+        STATE_SCHEMA,
     )
 
 
@@ -137,20 +219,9 @@ CUSUM_STATE_SCHEMA = "s_pos double, s_neg double"
 
 
 def _cusum(mu0: float, slack: float, h: float):
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+    def step(key, prior, rows):
         (user_id,) = key
-        if state.hasTimedOut:
-            # watermark passed the idle deadline: evict, emit nothing —
-            # without this branch every idle key re-arms its own timeout
-            # forever and state never shrinks
-            state.remove()
-            return
-        s_pos, s_neg = state.get if state.exists else (0.0, 0.0)
-        rows = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
+        s_pos, s_neg = prior
         out = {k: [] for k in ("event_id", "ts", "value", "s_pos", "s_neg", "alarm")}
         for _, r in rows.iterrows():
             x = float(r["value"])
@@ -165,11 +236,10 @@ def _cusum(mu0: float, slack: float, h: float):
             out["alarm"].append(alarm)
             if alarm:  # standard CUSUM restart after signalling
                 s_pos, s_neg = 0.0, 0.0
-        state.update((s_pos, s_neg))
-        arm_idle_timeout(state, rows["ts"].max(), 60_000)
-        yield pd.DataFrame({"user_id": [user_id] * len(out["event_id"]), **out})
+        out_df = pd.DataFrame({"user_id": [user_id] * len(out["event_id"]), **out})
+        return (s_pos, s_neg), out_df
 
-    return fn
+    return group_fold(step, (0.0, 0.0), ttl_ms=60_000)
 
 
 def cusum_stream(
@@ -193,13 +263,12 @@ def cusum_stream(
     watermark-evicted after idle — and each batch shuffles once by the
     same user key the rest of the topology already uses; inside a key
     group the pandas fold is O(batch rows)."""
-    with_wm = events.withWatermark("ts", watermark_delay)
-    return with_wm.groupBy("user_id").applyInPandasWithState(
+    return apply_group_fold(
+        events.withWatermark("ts", watermark_delay),
+        "user_id",
         _cusum(mu0, slack, h),
-        outputStructType=CUSUM_OUTPUT_SCHEMA,
-        stateStructType=CUSUM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        CUSUM_OUTPUT_SCHEMA,
+        CUSUM_STATE_SCHEMA,
     )
 
 
@@ -226,20 +295,9 @@ ZSCORE_MIN_OBS = 5
 
 
 def _zscore(threshold: float, min_obs: int):
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+    def step(key, prior, rows):
         (user_id,) = key
-        if state.hasTimedOut:
-            # watermark passed the idle deadline: evict, emit nothing —
-            # without this branch every idle key re-arms its own timeout
-            # forever and state never shrinks
-            state.remove()
-            return
-        n, mean, m2 = state.get if state.exists else (0, 0.0, 0.0)
-        rows = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
+        n, mean, m2 = prior
         out = {k: [] for k in ("event_id", "ts", "value", "n_seen", "z", "is_anomaly")}
         for _, r in rows.iterrows():
             x = float(r["value"])
@@ -269,11 +327,10 @@ def _zscore(threshold: float, min_obs: int):
                 delta = x - mean
                 mean += delta / n
                 m2 += delta * (x - mean)
-        state.update((n, mean, m2))
-        arm_idle_timeout(state, rows["ts"].max(), 60_000)
-        yield pd.DataFrame({"user_id": [user_id] * len(out["event_id"]), **out})
+        out_df = pd.DataFrame({"user_id": [user_id] * len(out["event_id"]), **out})
+        return (n, mean, m2), out_df
 
-    return fn
+    return group_fold(step, (0, 0.0, 0.0), ttl_ms=60_000)
 
 
 def zscore_stream(
@@ -296,13 +353,12 @@ def zscore_stream(
     cardinality, watermark-evicted after idle; each micro-batch shuffles
     once on the same user key the rest of the topology uses, and the
     in-group fold is O(batch rows)."""
-    with_wm = events.withWatermark("ts", watermark_delay)
-    return with_wm.groupBy("user_id").applyInPandasWithState(
+    return apply_group_fold(
+        events.withWatermark("ts", watermark_delay),
+        "user_id",
         _zscore(threshold, min_obs),
-        outputStructType=ZSCORE_OUTPUT_SCHEMA,
-        stateStructType=ZSCORE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        ZSCORE_OUTPUT_SCHEMA,
+        ZSCORE_STATE_SCHEMA,
     )
 
 
@@ -325,49 +381,47 @@ HH_OUTPUT_SCHEMA = T.StructType(
 HH_STATE_SCHEMA = "keys array<bigint>, counts array<bigint>, processed bigint"
 
 
-def _misra_gries(capacity: int):
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (bucket,) = key
-        if state.hasTimedOut:
-            # watermark passed the idle deadline: evict, emit nothing —
-            # without this branch every idle key re-arms its own timeout
-            # forever and state never shrinks
-            state.remove()
-            return
-        if state.exists:
-            keys, counts, processed = state.get
-            summary = dict(zip(list(keys), list(counts)))
+def misra_gries_update(
+    summary: dict[int, int], keys: Iterable, capacity: int
+) -> dict[int, int]:
+    """Fold `keys`, in order, into a Misra-Gries summary of at most
+    `capacity` counters and return it: a held key counts up, a new key
+    takes a free counter, and with none free every counter drops by one
+    (the eviction step; the new key is not stored).  The stream's
+    heavy-hitter fold and the batch twin's per-partition summary
+    (queries/stateful_twins.py::_mg_partition) both count with it."""
+    for k in keys:
+        k = int(k)
+        if k in summary:
+            summary[k] += 1
+        elif len(summary) < capacity:
+            summary[k] = 1
         else:
-            summary, processed = {}, 0
-        rows = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-        for k in rows["key"]:
-            k = int(k)
-            processed += 1
-            if k in summary:
-                summary[k] += 1
-            elif len(summary) < capacity:
-                summary[k] = 1
-            else:  # decrement-all: the Misra-Gries eviction step
-                summary = {
-                    kk: c - 1 for kk, c in summary.items() if c - 1 > 0
-                }
+            summary = {kk: c - 1 for kk, c in summary.items() if c > 1}
+    return summary
+
+
+def _misra_gries(capacity: int):
+    def step(key, prior, rows):
+        (bucket,) = key
+        keys, counts, processed = prior
+        summary = misra_gries_update(
+            dict(zip(list(keys), list(counts))), rows["key"], capacity
+        )
+        processed += len(rows)
         ks = sorted(summary)
-        state.update((ks, [summary[k] for k in ks], processed))
-        arm_idle_timeout(state, rows["ts"].max(), 3_600_000)
-        yield pd.DataFrame(
+        cs = [summary[k] for k in ks]
+        out = pd.DataFrame(
             {
                 "bucket": [bucket] * len(ks),
                 "key": ks,
-                "est_count": [summary[k] for k in ks],
+                "est_count": cs,
                 "processed": [processed] * len(ks),
             }
         )
+        return (ks, cs, processed), out
 
-    return fn
+    return group_fold(step, ([], [], 0), ttl_ms=3_600_000)
 
 
 def heavy_hitters_stream(
@@ -399,18 +453,14 @@ def heavy_hitters_stream(
         events.withWatermark("ts", watermark_delay)
         .filter(F.col(key_col).isNotNull())
         .select(
-        F.col("ts"),
-        F.col("event_id"),
-        F.col(key_col).cast("long").alias("key"),
+            F.col("ts"),
+            F.col("event_id"),
+            F.col(key_col).cast("long").alias("key"),
             (F.pmod(F.hash(F.col(key_col)), F.lit(buckets))).alias("bucket"),
         )
     )
-    return keyed.groupBy("bucket").applyInPandasWithState(
-        _misra_gries(capacity),
-        outputStructType=HH_OUTPUT_SCHEMA,
-        stateStructType=HH_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return apply_group_fold(
+        keyed, "bucket", _misra_gries(capacity), HH_OUTPUT_SCHEMA, HH_STATE_SCHEMA
     )
 
 
@@ -434,46 +484,28 @@ SAMPLE_STATE_SCHEMA = "hashes array<string>, ids array<bigint>, processed bigint
 
 
 def _bottom_k(capacity: int):
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+    def step(key, prior, rows):
         (bucket,) = key
-        if state.hasTimedOut:
-            # watermark passed the idle deadline: evict, emit nothing —
-            # without this branch every idle key re-arms its own timeout
-            # forever and state never shrinks
-            state.remove()
-            return
-        if state.exists:
-            hashes, ids, processed = state.get
-            kept = list(zip(list(hashes), list(ids)))
-        else:
-            kept, processed = [], 0
-        batch_max_ts = None
-        for pdf in pdfs:
-            processed += len(pdf)
-            kept.extend(zip(pdf["sample_hash"], (int(i) for i in pdf["event_id"])))
-            # merge step of the mergeable summary: keep the k smallest tags
-            kept = sorted(kept)[:capacity]
-            if len(pdf):
-                m = pdf["ts"].max()
-                batch_max_ts = m if batch_max_ts is None else max(batch_max_ts, m)
-        state.update(
-            ([h for h, _ in kept], [i for _, i in kept], processed)
-        )
-        arm_idle_timeout(state, batch_max_ts, 3_600_000)
-        yield pd.DataFrame(
+        hashes, ids, processed = prior
+        # merge step of the mergeable summary: keep the k smallest tags
+        # ((hash, id) order is total, so cutting once equals cutting per
+        # Arrow batch)
+        kept = sorted(
+            [*zip(hashes, ids), *zip(rows["sample_hash"], (int(i) for i in rows["event_id"]))]
+        )[:capacity]
+        processed += len(rows)
+        hs, es = [h for h, _ in kept], [i for _, i in kept]
+        out = pd.DataFrame(
             {
                 "bucket": [bucket] * len(kept),
-                "event_id": [i for _, i in kept],
-                "sample_hash": [h for h, _ in kept],
+                "event_id": es,
+                "sample_hash": hs,
                 "processed": [processed] * len(kept),
             }
         )
+        return (hs, es, processed), out
 
-    return fn
+    return group_fold(step, ([], [], 0), ttl_ms=3_600_000, order=None)
 
 
 def sample_stream(
@@ -512,12 +544,8 @@ def sample_stream(
             F.pmod(F.hash("event_id"), F.lit(buckets)).alias("bucket"),
         )
     )
-    return tagged.groupBy("bucket").applyInPandasWithState(
-        _bottom_k(capacity),
-        outputStructType=SAMPLE_OUTPUT_SCHEMA,
-        stateStructType=SAMPLE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return apply_group_fold(
+        tagged, "bucket", _bottom_k(capacity), SAMPLE_OUTPUT_SCHEMA, SAMPLE_STATE_SCHEMA
     )
 
 
@@ -565,39 +593,16 @@ def histogram_quantile(
 def _hist_fold(bins: int, lo: float, hi: float, quantiles: tuple[float, ...]):
     width = (hi - lo) / bins
 
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+    def step(key, prior, rows):
         (event_type,) = key
-        if state.hasTimedOut:
-            # watermark passed the idle deadline: evict, emit nothing —
-            # without this branch every idle key re-arms its own timeout
-            # forever and state never shrinks
-            state.remove()
-            return
-        if state.exists:
-            counts, processed = state.get
-            counts = list(counts)
-        else:
-            counts, processed = [0] * bins, 0
-        batch_max_ts = None
-        for pdf in pdfs:
-            processed += len(pdf)
-            # merge step of the mergeable summary: element-wise add of the
-            # micro-batch's bincount (bin index precomputed JVM-side)
-            bc = np.bincount(pdf["bin"].to_numpy(), minlength=bins)
-            counts = [c + int(b) for c, b in zip(counts, bc)]
-            if len(pdf):
-                m = pdf["ts"].max()
-                batch_max_ts = m if batch_max_ts is None else max(batch_max_ts, m)
-        state.update((counts, processed))
-        arm_idle_timeout(state, batch_max_ts, 3_600_000)
-        if processed == 0:
-            return
+        counts, processed = prior
+        # merge step of the mergeable summary: element-wise add of the
+        # micro-batch's bincount (bin index precomputed JVM-side)
+        bc = np.bincount(rows["bin"].to_numpy(), minlength=bins)
+        counts = [c + int(b) for c, b in zip(counts, bc)]
+        processed += len(rows)
         ests = [histogram_quantile(counts, q, lo, width) for q in quantiles]
-        yield pd.DataFrame(
+        out = pd.DataFrame(
             {
                 "event_type": [event_type],
                 "p50": [ests[0]],
@@ -607,8 +612,9 @@ def _hist_fold(bins: int, lo: float, hi: float, quantiles: tuple[float, ...]):
                 "processed": [processed],
             }
         )
+        return (counts, processed), out
 
-    return fn
+    return group_fold(step, ([0] * bins, 0), ttl_ms=3_600_000, order=None)
 
 
 def quantile_stream(
@@ -657,12 +663,12 @@ def quantile_stream(
             ).alias("bin"),
         )
     )
-    return binned.groupBy("event_type").applyInPandasWithState(
+    return apply_group_fold(
+        binned,
+        "event_type",
         _hist_fold(bins, lo, hi, Q_QUANTILES),
-        outputStructType=QUANTILE_OUTPUT_SCHEMA,
-        stateStructType=QUANTILE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        QUANTILE_OUTPUT_SCHEMA,
+        QUANTILE_STATE_SCHEMA,
     )
 
 
@@ -700,40 +706,15 @@ def kmv_estimate(hashes: list[str], k: int) -> tuple[float, bool]:
 
 
 def _kmv(k: int):
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+    def step(key, prior, rows):
         (event_type,) = key
-        if state.hasTimedOut:
-            # watermark passed the idle deadline: evict, emit nothing —
-            # without this branch every idle key re-arms its own timeout
-            # forever and state never shrinks
-            state.remove()
-            return
-        if state.exists:
-            hashes, processed = state.get
-            held = set(hashes)
-        else:
-            held, processed = set(), 0
-        batch_max_ts = None
-        for pdf in pdfs:
-            processed += len(pdf)
-            # merge step of the mergeable summary: union of distinct
-            # hash sets, truncated back to the k smallest
-            held.update(pdf["kmv_hash"])
-            held = set(sorted(held)[:k])
-            if len(pdf):
-                m = pdf["ts"].max()
-                batch_max_ts = m if batch_max_ts is None else max(batch_max_ts, m)
-        final = sorted(held)
-        state.update((final, processed))
-        arm_idle_timeout(state, batch_max_ts, 3_600_000)
-        if processed == 0:
-            return
+        hashes, processed = prior
+        # merge step of the mergeable summary: union of distinct hash
+        # sets, truncated back to the k smallest
+        final = sorted({*hashes, *rows["kmv_hash"]})[:k]
+        processed += len(rows)
         est, exact = kmv_estimate(final, k)
-        yield pd.DataFrame(
+        out = pd.DataFrame(
             {
                 "event_type": [event_type],
                 "est_distinct": [est],
@@ -742,8 +723,9 @@ def _kmv(k: int):
                 "processed": [processed],
             }
         )
+        return (final, processed), out
 
-    return fn
+    return group_fold(step, ([], 0), ttl_ms=3_600_000, order=None)
 
 
 def distinct_stream(
@@ -785,12 +767,8 @@ def distinct_stream(
             ),
         )
     )
-    return tagged.groupBy("event_type").applyInPandasWithState(
-        _kmv(k),
-        outputStructType=KMV_OUTPUT_SCHEMA,
-        stateStructType=KMV_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return apply_group_fold(
+        tagged, "event_type", _kmv(k), KMV_OUTPUT_SCHEMA, KMV_STATE_SCHEMA
     )
 
 
@@ -812,17 +790,11 @@ CAP_STATE_SCHEMA = "n_seen bigint"
 
 
 def _cap(k: int):
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+    def step(key, prior, rows):
         (source,) = key
-        (n_seen,) = state.get if state.exists else (0,)
-        rows = pd.concat(list(pdfs)).sort_values(["fetched_at", "doc_id"])
+        (n_seen,) = prior
         seqs = list(range(n_seen + 1, n_seen + 1 + len(rows)))
-        state.update((n_seen + len(rows),))
-        yield pd.DataFrame(
+        out = pd.DataFrame(
             {
                 "source": [source] * len(rows),
                 "doc_id": rows["doc_id"].astype("int64").values,
@@ -831,8 +803,9 @@ def _cap(k: int):
                 "admitted": [s <= k for s in seqs],
             }
         )
+        return (n_seen + len(rows),), out
 
-    return fn
+    return group_fold(step, (0,), ttl_ms=None, order=("fetched_at", "doc_id"))
 
 
 def source_cap_stream(docs: DataFrame, k: int) -> DataFrame:
@@ -854,14 +827,11 @@ def source_cap_stream(docs: DataFrame, k: int) -> DataFrame:
     which makes eviction a watermark concern again.
 
     Input must carry doc_id, source, fetched_at (timestamp)."""
-    return (
-        docs.select("doc_id", "source", "fetched_at")
-        .groupBy("source")
-        .applyInPandasWithState(
-            _cap(k),
-            outputStructType=CAP_OUTPUT_SCHEMA,
-            stateStructType=CAP_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return apply_group_fold(
+        docs.select("doc_id", "source", "fetched_at"),
+        "source",
+        _cap(k),
+        CAP_OUTPUT_SCHEMA,
+        CAP_STATE_SCHEMA,
+        timeout=GroupStateTimeout.NoTimeout,
     )

@@ -39,13 +39,11 @@ is at or below that watermark (tests/test_topology.py pins both).
 Per-epoch work.  The main path's keyed sink runs each epoch's dedup and
 window aggregation inside its merge write, whose job also counts the
 rows to skip an empty epoch (sinks/keyed_parquet.py), so their state
-stores commit once per epoch.  A stateful append branch writes through
-sinks.micro_batch: the epoch's plan runs once, into a local checkpoint
-whose job also counts the rows, and an empty epoch is skipped.  The
-stateless branches (dlq, valid) need neither: each writes its epoch
-straight to `epoch=<id>` in one job, and an epoch with no such rows
-leaves an empty epoch directory, which read(name) and replay_dlq read as
-zero rows.
+stores commit once per epoch.  Every append branch, stateless (dlq,
+valid) or stateful, acts on its epoch once: it writes the frame straight
+to `epoch=<id>` in one job, so the epoch's plan, state stores included,
+runs once.  An epoch with no such rows leaves an empty epoch directory,
+which read(name) and replay_dlq read as zero rows.
 
 Every query starts through streaming/launch.start_query, so a new
 checkpoint's state stages are no wider than the files one trigger admits
@@ -64,7 +62,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..sinks import KeyedParquetSink, micro_batch
+from ..sinks import KeyedParquetSink
 from .launch import drain, start_query
 from .monitor import DriftMonitorSink, QualityMonitorSink
 from .pipeline import (
@@ -223,33 +221,30 @@ def run_topology(
         )
         queries.append(start(valid_events, "drift", drift))
 
-    # The append branches: name -> (frame, stateful).  Each stateful one is
-    # the live twin of a batch operator (q_click_attribution, q_cusum,
+    # The append branches: name -> frame.  Each stateful one is the live
+    # twin of a batch operator (q_click_attribution, q_cusum,
     # q_zscore_flag, q_heavy_hitters, q_bottomk_sample, q_quantile_summary)
     # with its state carried across micro-batches.
-    branches: dict[str, tuple[DataFrame, bool]] = {}
+    branches: dict[str, DataFrame] = {}
     if with_valid:
         valid = validated.filter("is_valid").drop("is_valid", CORRUPT_COL)
-        branches["valid"] = (valid.withColumn("data_quality_flag", F.lit("valid")), False)
+        branches["valid"] = valid.withColumn("data_quality_flag", F.lit("valid"))
     if with_attribution:
         views = split_by_type(valid_events, "view")
         clicks = split_by_type(valid_events, "click")
-        branches["attribution"] = (attribute_clicks(views, clicks), True)
+        branches["attribution"] = attribute_clicks(views, clicks)
     if cusum_mu0 is not None:
-        branches["cusum"] = (cusum_stream(valid_events, mu0=cusum_mu0), True)
+        branches["cusum"] = cusum_stream(valid_events, mu0=cusum_mu0)
     if with_zscore_gate:
-        branches["zscore"] = (zscore_stream(valid_events), True)
+        branches["zscore"] = zscore_stream(valid_events)
     if with_flood_detector:
-        branches["flood"] = (heavy_hitters_stream(valid_events), True)
+        branches["flood"] = heavy_hitters_stream(valid_events)
     if with_sampler:
-        branches["sample"] = (sample_stream(valid_events), True)
+        branches["sample"] = sample_stream(valid_events)
     if with_quantiles:
-        branches["quantiles"] = (quantile_stream(valid_events), True)
-    for name, (frame, stateful) in branches.items():
-        write = epoch_writer(name)
-        queries.append(
-            start(frame, name, micro_batch(write) if stateful else write, mode="append")
-        )
+        branches["quantiles"] = quantile_stream(valid_events)
+    for name, frame in branches.items():
+        queries.append(start(frame, name, epoch_writer(name), mode="append"))
 
     if processing_time is None:
         drain(queries, timeout_seconds)

@@ -21,8 +21,9 @@ measured on the .scale/sf1 fixture (scripts/make_scale_fixture.py).  The
 cumulative snapshot bench_snapshots/BENCH_SF1_FAMILIES.json feeds an
 optional "sf1" sub-entry per ledger row (first seen, never overwritten),
 rendered as an extra column in the autogen table.  Refresh with
-`SPARK_GRAFT_TIME_REPS=2 python scripts/time_queries.py .scale/sf1 <family
-queries>` and merge via this script.
+`SPARK_GRAFT_SF_DIR=.scale/sf1 SPARK_GRAFT_BENCH_ONLY=<family queries,
+comma-separated> SPARK_GRAFT_BENCH_REPS=2 python bench.py` (min-of-2 per
+query, written to BENCH_DETAIL_only.json) and merge via this script.
 
 Output: rewrites bench_snapshots/BASELINES.json and the generated section
 of BASELINE.md between the AUTOGEN markers.

@@ -78,7 +78,7 @@ def test_dedup_similarity_families_have_sf1_baselines():
     verdict ask #5) and, since round 9, the whole text/quality/curation
     tier — carry an sf1.0 baseline row so their regression bar exists at
     the largest local scale.  Forcing function for NEW family queries:
-    registering one obliges an sf1 leg (scripts/time_queries.py on
+    registering one obliges an sf1 leg (bench.py on
     .scale/sf1) merged via scripts/gen_baseline.py."""
     import re
 
@@ -106,8 +106,8 @@ def test_dedup_similarity_families_have_sf1_baselines():
     )
     assert not missing, (
         f"100 TB-tier queries with no sf1.0 baseline row: {missing} — "
-        "run scripts/time_queries.py on .scale/sf1 and merge with "
-        "scripts/gen_baseline.py"
+        "time them with SPARK_GRAFT_SF_DIR=.scale/sf1 SPARK_GRAFT_BENCH_ONLY=... "
+        "python bench.py and merge with scripts/gen_baseline.py"
     )
 
 

@@ -127,3 +127,49 @@ def test_worker_queries_run_from_any_working_directory(sf_dir, tmp_path):
     problems = json.loads(run.stdout.splitlines()[-1])
     assert sorted(problems) == sorted(WORKER_QUERIES)
     assert {name: p for name, p in problems.items() if p} == {}
+
+
+# A driver that puts the repo on its own sys.path (no PYTHONPATH) and runs
+# the topology with a stateful branch from another directory.  Prints
+# {"sample": rows read back} as JSON, or {"error": the last line raised}.
+STREAM_LEG = """
+import json, os, sys
+repo, src, out = sys.argv[1:]
+sys.path.insert(0, repo)
+from pyspark.sql import SparkSession
+from real_time_iot_data_engineering_pipeline_spark.streaming.topology import run_topology
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.sql.shuffle.partitions", "2")
+         .config("spark.ui.enabled", "false").getOrCreate())
+os.makedirs(src)
+with open(os.path.join(src, "f1.json"), "w") as f:
+    for i in range(5):
+        f.write(json.dumps({"event_id": i, "ts": f"2024-01-19 10:00:0{i}", "user_id": 1,
+                            "event_type": "click", "value": 2.0, "props": '{"k": 1}'}) + "\\n")
+try:
+    result = run_topology(spark, src, out, with_sampler=True)
+    print(json.dumps({"sample": result.read("sample").count()}))
+except Exception as exc:
+    print(json.dumps({"error": str(exc).strip().splitlines()[-1][:300]}))
+spark.stop()
+"""
+
+
+def test_stateful_stream_branches_run_from_any_working_directory(tmp_path):
+    """A driver outside the repo that imports the package from its own
+    sys.path: the sampler's applyInPandasWithState fold reaches the Python
+    worker by value, because importing the package registers it for
+    pickling by value, with no registry.load_all in the process."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["PYSPARK_PYTHON"] = sys.executable
+    run = subprocess.run(
+        [sys.executable, "-c", STREAM_LEG, str(ENTRY.parent), str(tmp_path / "src"),
+         str(tmp_path / "out")],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
+    assert json.loads(run.stdout.splitlines()[-1]) == {"sample": 5}

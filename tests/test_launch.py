@@ -1,6 +1,7 @@
 """How the streaming entry points start and drain their queries
 (streaming/launch.py): two entry points, which start every query through
-launch.py, one deadline for a whole drain, state stages no wider than the
+launch.py, stateful operators that all go through one GroupState adapter
+(streaming/stateful.py), one deadline for a whole drain, state stages no wider than the
 input one trigger admits, a checkpoint that keeps the width it was
 created with and commits its files by rename, and the stateless DLQ
 branch's direct write."""
@@ -38,6 +39,39 @@ def test_launch_starts_every_query_of_the_two_entry_points():
                 entry_points.add(node.name)
     assert writers == {"launch.py"}
     assert entry_points == {"run_topology", "run_doc_ingest"}
+
+
+# stateful.py's GroupState adapter: the fold wrapper and its wiring helper
+GROUP_STATE_ADAPTER = {"group_fold", "apply_group_fold"}
+
+
+def named(node: ast.AST) -> str | None:
+    if isinstance(node, ast.Attribute):
+        return node.attr
+    return node.id if isinstance(node, ast.Name) else None
+
+
+def test_only_the_group_state_adapter_speaks_the_protocol():
+    """In streaming/, only stateful.py's adapter names
+    applyInPandasWithState or hasTimedOut or calls arm_idle_timeout: every
+    stateful operator is a step function behind that one adapter, so the
+    evict-on-timeout and re-arm rules live in one place."""
+    sites = []
+    for path in sorted(Path(launch.__file__).parent.glob("*.py")):
+        tree = ast.parse(path.read_text())
+        adapter = set()
+        if path.name == "stateful.py":
+            for node in tree.body:
+                if isinstance(node, ast.FunctionDef) and node.name in GROUP_STATE_ADAPTER:
+                    adapter |= {id(n) for n in ast.walk(node)}
+        for node in ast.walk(tree):
+            if id(node) in adapter:
+                continue
+            if isinstance(node, ast.Call) and named(node.func) == "arm_idle_timeout":
+                sites.append(f"{path.name}:{node.lineno} calls arm_idle_timeout")
+            if named(node) in ("applyInPandasWithState", "hasTimedOut"):
+                sites.append(f"{path.name}:{node.lineno} names {named(node)}")
+    assert sites == []
 
 
 class StubQuery:

@@ -782,6 +782,28 @@ def test_topology_sampler_branch(spark, tmp_path):
         ).hexdigest()
 
 
+def test_branches_that_emitted_nothing_read_as_empty(spark, tmp_path):
+    """A drain whose only row is out of range sends it to the DLQ, and
+    every append branch, stateless (valid) or stateful (sample, zscore),
+    still leaves its epoch directories, so read(name) is an empty frame
+    rather than a missing path."""
+    src = tmp_path / "src"
+    src.mkdir()
+    bad = dict(ev(99, "2024-01-19 10:00:30", value=500.0), props='{"k": 1}', event_type="click")
+    write_file(str(src), "f1.json", [bad], seq=0)
+    result = run_topology(
+        spark,
+        str(src),
+        str(tmp_path / "out"),
+        with_sampler=True,
+        with_valid=True,
+        with_zscore_gate=True,
+    )
+    assert [r.event_id for r in result.read_dlq().collect()] == [99]
+    for name in ("valid", "sample", "zscore"):
+        assert result.read(name).count() == 0, name
+
+
 def test_topology_quantiles_branch(spark, tmp_path):
     """The distribution-summary branch emits per-type histogram quantiles of
     the VALID stream only — an out-of-range (DLQ) value must not move the
